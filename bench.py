@@ -47,6 +47,7 @@ import os
 import statistics
 import sys
 import time
+from collections.abc import Mapping
 from pathlib import Path
 
 import duckdb
@@ -198,6 +199,23 @@ REPEATS = int(_REPEATS_ENV) if _REPEATS_ENV else 5  # spark: median of N full (p
 DUCK_REPEATS = REPEATS  # duckdb: same sample count for the oracle SQL
 
 
+def mirror_path(env: Mapping[str, str]) -> Path | None:
+    """Where a run mirrors its JSON line: ``BENCH_LAST.json`` for the
+    headline run (every headline query at the default SF dir), nowhere
+    for any other run.
+
+    A caller that keeps only a 2000-char tail of stdout loses a longer
+    line (round 11's did); the mirror is written from the SAME string in
+    the SAME run, so a truncated tail can always be reconciled from the
+    committed file. A ``SPARK_GRAFT_ONLY`` subset or
+    a leg at its own ``SPARK_GRAFT_SF_DIR`` (every probe script names
+    one) is not the headline run and must not overwrite it.
+    """
+    if env.get("SPARK_GRAFT_ONLY") or "SPARK_GRAFT_SF_DIR" in env:
+        return None
+    return Path(__file__).resolve().parent / "BENCH_LAST.json"
+
+
 def _duck_connect() -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     # Bound the in-process baseline: DuckDB's default memory limit is
@@ -323,6 +341,9 @@ def main() -> None:
                 "queries": timings,
                 "queries_rel_spread": spread,
                 "sf": SF_DIR,
+                "cpus": CPUS,
+                "repeats": REPEATS,
+                "only": HEADLINE if _ONLY else None,
                 "duckdb_total_sec": duck_total,
                 "duckdb_queries": duck_timings,
                 "spark_oracled_sec": spark_oracled,
@@ -343,22 +364,10 @@ def main() -> None:
             }
     )
     print(line)
-    # Mirror the same dict to a file (r12 verdict ask #3): the driver
-    # captures only the last 2000 chars of stdout, and round 11's JSON
-    # line outgrew that window — `BENCH_r11.json parsed: null` orphaned
-    # the whole round-over-round comparison. The mirror is written from
-    # the SAME string in the SAME run, so a truncated tail can always be
-    # reconciled from the committed file. Probes that re-drive bench.py
-    # at other SFs may point the mirror elsewhere (or at /dev/null-like
-    # "0" to disable) so they don't clobber the headline mirror.
-    mirror = os.environ.get(
-        "SPARK_GRAFT_BENCH_MIRROR",
-        str(Path(__file__).resolve().parent / "BENCH_LAST.json"),
-    )
-    if mirror not in ("", "0"):
+    mirror = mirror_path(os.environ)
+    if mirror is not None:
         try:
-            with open(mirror, "w") as f:
-                f.write(line + "\n")
+            mirror.write_text(line + "\n")
         except OSError as exc:  # a read-only checkout must not kill the bench
             print(f"# bench mirror write failed: {exc}", file=sys.stderr)
     con.close()

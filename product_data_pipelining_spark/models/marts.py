@@ -23,8 +23,8 @@ Scale notes (100 TB design):
 
 Parity notes: DuckDB's ``PERCENTILE_CONT`` over DECIMAL(10,2)
 interpolates on the *scaled integer* representation and truncates back
-to scale 2 (verified empirically); :func:`duck_percentile_dec`
-reproduces that bit-for-bit.
+to scale 2 (verified empirically); :func:`duck_percentiles_dec` followed
+by :func:`unscale_dec` reproduces that bit-for-bit.
 """
 
 from __future__ import annotations
@@ -46,37 +46,23 @@ def _avg_dec(col: Column | str) -> Column:
     return F.sum(c).cast("double") / F.count(c)
 
 
-def duck_percentile_dec(col: Column | str, q: float, scale: int = 2) -> Column:
-    """Exact interpolated percentile of a DECIMAL column, DuckDB-typed.
+def duck_percentiles_dec(
+    col: Column | str, qs: tuple[float, ...], scale: int = 2
+) -> Column:
+    """Exact interpolated percentiles of a DECIMAL column, DuckDB-typed.
 
     DuckDB's ``PERCENTILE_CONT(q) WITHIN GROUP (ORDER BY dec)`` keeps
     DECIMAL output: it interpolates ``lo + frac * (hi - lo)`` on the
     scaled-integer representation and truncates toward zero back to the
-    input scale. We scale in decimal arithmetic (exact), interpolate
-    with Spark's exact ``percentile`` (for quartile fractions the double
-    math is exact on scaled integers), floor, and unscale via decimal
-    division so no double rounding can creep in.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    s = 10**scale
-    scaled = (c * F.lit(s)).cast("double")
-    interp = F.percentile(scaled, F.lit(q))
-    return (F.floor(interp).cast("decimal(28,0)") / F.lit(s)).cast(
-        f"decimal({10 + scale},{scale})"
-    ).cast("decimal(10,2)")
-
-
-def duck_percentiles_dec(
-    col: Column | str, qs: tuple[float, ...], scale: int = 2
-) -> Column:
-    """Array form of :func:`duck_percentile_dec` — ONE value buffer.
-
-    N separate exact-percentile aggregates each hold (and sort) their
-    own copy of every group value; ``percentile(col, array(qs))``
-    buffers and sorts once for all fractions — the shape that matters
-    when groups hold millions of rows. Returns the interpolated array
-    (still scaled doubles); unscale each element with
-    :func:`unscale_dec` after the aggregate.
+    input scale. Values are scaled in decimal arithmetic (exact) and
+    interpolated by Spark's exact ``percentile`` (for quartile fractions
+    the double math is exact on scaled integers). One
+    ``percentile(col, array(qs))`` buffers and sorts each group's values
+    once for all fractions, where N separate aggregates would each hold
+    their own copy. Returns the interpolated array (still scaled
+    doubles); unscale each element with :func:`unscale_dec` after the
+    aggregate, which floors and divides in decimal so no double rounding
+    creeps in.
     """
     c = F.col(col) if isinstance(col, str) else col
     scaled = (c * F.lit(10**scale)).cast("double")

@@ -61,7 +61,7 @@ def _dbl(col: str) -> F.Column:
 
 
 # --- DuckDB oracle prelude: the full reference dataflow as CTEs -------------
-# Mirrors runner.load_raw (null gate S8 + last-writer-wins upsert S5/S6,
+# Mirrors runner._load (null gate S8 + last-writer-wins upsert S5/S6,
 # main_pipeline.py:326-435) then the nine dbt models verbatim
 # (models/staging/*.sql, models/marts/*.sql). fetched_at is unique within
 # every upsert key group in the fixtures, so the window order is total.

@@ -16,19 +16,21 @@ reference DDL (``main_pipeline.py:283,297,320``).
 
 Materialization mirrors dbt's config (``dbt_project.yml:33-40``):
 staging = never persisted (views); dims/fact/marts = parquet tables,
-``mode("overwrite")`` = full refresh. When materializing, downstream
-marts re-read the written fact table so the join work is done once, not
-re-derived three times.
+``mode("overwrite")`` = full refresh. Both runners load through
+:func:`_load` and materialize through :func:`build_models`, which writes
+each table and re-reads it before its dependents are built, so the fact
+join is done once and the three marts scan its parquet output.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.upsert import upsert_last_writer_wins
+from ..operators.upsert import merge_upsert, upsert_last_writer_wins
 from . import dashboard, marts, staging
 
 RAW_TABLES = ("raw_locations", "raw_products", "raw_product_prices")
@@ -46,44 +48,6 @@ _LOAD_SPEC = {
 }
 
 
-def load_raw(spark: SparkSession, raw_dir: str) -> dict[str, DataFrame]:
-    """Read the raw parquet tables and apply the reference's load rules:
-    null-gate (S8) then keyed upsert, last ``fetched_at`` wins (S5/S6)."""
-    out: dict[str, DataFrame] = {}
-    for name in RAW_TABLES:
-        df = spark.read.parquet(os.path.join(raw_dir, f"{name}.parquet"))
-        keys, gate = _LOAD_SPEC[name]
-        df = df.filter(F.col(gate).isNotNull())
-        out[name] = upsert_last_writer_wins(
-            df, keys, version_col="fetched_at", tiebreak=[c for c in df.columns]
-        )
-    return out
-
-
-def build_models(raw: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """Toposorted model build over already-loaded raw DataFrames.
-
-    Pure and lazy — no jobs run until the caller acts on a result.
-    """
-    m: dict[str, DataFrame] = {}
-    m["stg_locations"] = staging.stg_locations(raw["raw_locations"])
-    m["stg_products"] = staging.stg_products(raw["raw_products"])
-    m["stg_prices"] = staging.stg_prices(raw["raw_product_prices"])
-    m["dim_locations"] = marts.dim_locations(m["stg_locations"])
-    m["dim_products"] = marts.dim_products(m["stg_products"])
-    m["fact_prices"] = marts.fact_prices(
-        m["stg_prices"], m["dim_products"], m["dim_locations"]
-    )
-    m["mart_category_distribution"] = marts.mart_category_distribution(
-        m["fact_prices"]
-    )
-    m["mart_location_sales"] = marts.mart_location_sales(
-        m["fact_prices"], m["dim_locations"]
-    )
-    m["mart_price_by_category"] = marts.mart_price_by_category(m["fact_prices"])
-    return m
-
-
 MATERIALIZED = (
     "dim_locations",
     "dim_products",
@@ -94,44 +58,76 @@ MATERIALIZED = (
 )
 
 
+def _load(
+    spark: SparkSession, raw_dir: str, name: str, where: Column | None = None
+) -> DataFrame:
+    """One raw table under the reference's load rules: null-gate (S8),
+    the optional extra predicate, then keyed upsert, last ``fetched_at``
+    wins (S5/S6)."""
+    df = spark.read.parquet(os.path.join(raw_dir, f"{name}.parquet"))
+    keys, gate = _LOAD_SPEC[name]
+    keep = F.col(gate).isNotNull()
+    if where is not None:
+        keep = keep & where
+    return upsert_last_writer_wins(
+        df.filter(keep), keys, version_col="fetched_at", tiebreak=df.columns
+    )
+
+
+def load_raw(spark: SparkSession, raw_dir: str) -> dict[str, DataFrame]:
+    """Every raw table, loaded by :func:`_load`."""
+    return {name: _load(spark, raw_dir, name) for name in RAW_TABLES}
+
+
+def build_models(
+    raw: dict[str, DataFrame], out_dir: str | None = None
+) -> dict[str, DataFrame]:
+    """Toposorted model build over already-loaded raw DataFrames.
+
+    Without ``out_dir`` it is pure and lazy — no jobs run until the
+    caller acts on a result. With ``out_dir``, each ``MATERIALIZED``
+    model is written to ``out_dir/<name>`` (overwrite) as soon as it is
+    built and re-read before any dependent model is built.
+    """
+    m: dict[str, DataFrame] = {}
+
+    def put(name: str, df: DataFrame) -> None:
+        if out_dir is not None and name in MATERIALIZED:
+            path = os.path.join(out_dir, name)
+            df.write.mode("overwrite").parquet(path)
+            df = df.sparkSession.read.parquet(path)
+        m[name] = df
+
+    put("stg_locations", staging.stg_locations(raw["raw_locations"]))
+    put("stg_products", staging.stg_products(raw["raw_products"]))
+    put("stg_prices", staging.stg_prices(raw["raw_product_prices"]))
+    put("dim_locations", marts.dim_locations(m["stg_locations"]))
+    put("dim_products", marts.dim_products(m["stg_products"]))
+    put(
+        "fact_prices",
+        marts.fact_prices(m["stg_prices"], m["dim_products"], m["dim_locations"]),
+    )
+    put(
+        "mart_category_distribution",
+        marts.mart_category_distribution(m["fact_prices"]),
+    )
+    put(
+        "mart_location_sales",
+        marts.mart_location_sales(m["fact_prices"], m["dim_locations"]),
+    )
+    put("mart_price_by_category", marts.mart_price_by_category(m["fact_prices"]))
+    return m
+
+
 def run_pipeline(
     spark: SparkSession, raw_dir: str, out_dir: str | None = None
 ) -> dict[str, DataFrame]:
     """Full-refresh pipeline run (dbt ``run --full-refresh`` analog).
 
-    With ``out_dir`` set, dims/fact/marts are written as parquet
-    (overwrite) and each written table is re-read before its dependents
-    are built — the fact join executes once and the three marts scan its
-    parquet output, exactly dbt's table-materialization dataflow.
-    Without ``out_dir``, returns the lazy DataFrames.
+    With ``out_dir`` set, dims/fact/marts are materialized by
+    :func:`build_models`; without it, returns the lazy DataFrames.
     """
-    raw = load_raw(spark, raw_dir)
-    m = build_models(raw)
-    if out_dir is None:
-        return m
-
-    def _materialize(name: str) -> DataFrame:
-        path = os.path.join(out_dir, name)
-        m[name].write.mode("overwrite").parquet(path)
-        m[name] = spark.read.parquet(path)
-        return m[name]
-
-    _materialize("dim_locations")
-    _materialize("dim_products")
-    m["fact_prices"] = marts.fact_prices(
-        m["stg_prices"], m["dim_products"], m["dim_locations"]
-    )
-    _materialize("fact_prices")
-    m["mart_category_distribution"] = marts.mart_category_distribution(
-        m["fact_prices"]
-    )
-    m["mart_location_sales"] = marts.mart_location_sales(
-        m["fact_prices"], m["dim_locations"]
-    )
-    m["mart_price_by_category"] = marts.mart_price_by_category(m["fact_prices"])
-    for name in MATERIALIZED[3:]:
-        _materialize(name)
-    return m
+    return build_models(load_raw(spark, raw_dir), out_dir)
 
 
 def dashboard_queries(m: dict[str, DataFrame]) -> dict[str, DataFrame]:
@@ -168,50 +164,35 @@ def run_incremental(
     The reference only does full refresh (dbt ``--full-refresh``,
     SURVEY.md §2.9); this is the incremental materialization a
     continuously-ingesting deployment needs. Raw rows with
-    ``fetched_at > since`` are upserted into the existing raw snapshots
-    (MERGE semantics — :func:`..operators.upsert.merge_upsert`), then
-    staging/dims/fact/marts rebuild from the merged snapshot. Dims and
+    ``fetched_at > since`` are loaded by :func:`_load` and upserted into
+    the existing raw snapshots (MERGE semantics —
+    :func:`..operators.upsert.merge_upsert`). Staging/dims/fact/marts
+    then rebuild from the merged snapshots through the same
+    :func:`build_models` materialization as :func:`run_pipeline`: the
+    fact join runs once and the marts read the written fact. Dims and
     marts are aggregates of the full key space, so they rebuild rather
-    than merge — the fact/mart rebuild reads the merged parquet, not the
-    original feed, keeping incremental cost proportional to snapshot
-    size, never to history length.
+    than merge — the rebuild reads the merged parquet, not the original
+    feed, keeping incremental cost proportional to snapshot size, never
+    to history length.
 
-    Requires a prior :func:`run_pipeline` (or ``run_incremental``) to
-    have written ``out_dir/raw_*`` snapshots; writes updated snapshots
-    back before rebuilding.
+    Requires prior ``out_dir/snap_raw_*`` snapshots (:func:`seed_snapshots`
+    or an earlier ``run_incremental``); writes updated snapshots back
+    before rebuilding.
     """
-    from ..operators.upsert import merge_upsert
-
     raw: dict[str, DataFrame] = {}
     for name in RAW_TABLES:
-        feed = spark.read.parquet(os.path.join(raw_dir, f"{name}.parquet"))
-        keys, gate = _LOAD_SPEC[name]
-        fresh = feed.filter(
-            F.col(gate).isNotNull() & (F.col("fetched_at") > F.lit(since))
-        )
-        fresh = upsert_last_writer_wins(
-            fresh, keys, version_col="fetched_at",
-            tiebreak=[c for c in feed.columns],
-        )
+        fresh = _load(spark, raw_dir, name, F.col("fetched_at") > F.lit(since))
         snap_path = os.path.join(out_dir, f"snap_{name}")
-        snapshot = spark.read.parquet(snap_path)
-        merged = merge_upsert(snapshot, fresh, keys)
+        keys = _LOAD_SPEC[name][0]
+        merged = merge_upsert(spark.read.parquet(snap_path), fresh, keys)
         tmp = snap_path + "__new"
         merged.write.mode("overwrite").parquet(tmp)
         # swap: re-point the snapshot (atomic-rename territory on a real
         # object store; plain overwrite-by-rename locally)
-        import shutil
-
         shutil.rmtree(snap_path)
         os.rename(tmp, snap_path)
         raw[name] = spark.read.parquet(snap_path)
-
-    m = build_models(raw)
-    for name in MATERIALIZED:
-        path = os.path.join(out_dir, name)
-        m[name].write.mode("overwrite").parquet(path)
-        m[name] = spark.read.parquet(path)
-    return m
+    return build_models(raw, out_dir)
 
 
 def seed_snapshots(
@@ -222,13 +203,8 @@ def seed_snapshots(
     ``until`` bounds the seed load (``fetched_at <= until``) so tests
     can replay history as seed + incremental batches.
     """
+    where = None if until is None else F.col("fetched_at") <= F.lit(until)
     for name in RAW_TABLES:
-        df = spark.read.parquet(os.path.join(raw_dir, f"{name}.parquet"))
-        keys, gate = _LOAD_SPEC[name]
-        df = df.filter(F.col(gate).isNotNull())
-        if until is not None:
-            df = df.filter(F.col("fetched_at") <= F.lit(until))
-        df = upsert_last_writer_wins(
-            df, keys, version_col="fetched_at", tiebreak=[c for c in df.columns]
+        _load(spark, raw_dir, name, where).write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"snap_{name}")
         )
-        df.write.mode("overwrite").parquet(os.path.join(out_dir, f"snap_{name}"))

@@ -160,12 +160,11 @@ def signature_from_shingles(
         #   adjacent-process legs whose DuckDB baseline itself drifted
         #   330->246 s.
         # - r13 A/B'd both arms in ONE process at sf10 with alternating
-        #   reps and plan-sanity checks (scripts/r13_minhash_ab.py,
-        #   BENCH_R13_MINHASH_AB_SF10/SF01.json): the numeric arm is
-        #   2.50x SLOWER on the pure signature build (dd03 2.24 vs
-        #   5.61 s) and 1.47x slower on dd14 at sf10, a tie on
-        #   dd04/pipe02 where LSH work dominates — and the gap GROWS
-        #   with scale (dd03 1.37x at sf0.1 -> 2.50x at sf10): eight
+        #   reps and plan-sanity checks (scripts/r13_minhash_ab.py):
+        #   the numeric arm is SLOWER on the pure signature build (dd03)
+        #   and on dd14 at sf10, a tie on dd04/pipe02 where LSH work
+        #   dominates — and the gap GROWS with scale; the ratios are in
+        #   BENCH_R13_MINHASH_AB_SF10.json (and ..._SF01.json): eight
         #   conv() string parses + decimal(20,0) buffers per exploded
         #   shingle cost more than the sort they remove, and scale
         #   amplifies the linear parse term faster than the sort's log

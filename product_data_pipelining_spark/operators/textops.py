@@ -8,10 +8,10 @@ row-at-a-time Python UDFs — with ONE sanctioned exception since r13:
 the shared tokenize+vocab-count featurization behind tx02/tx03/tx11
 can run as a single ``mapInArrow`` batch pass over ``pyarrow.compute``
 kernels (:func:`_arrow_token_counts`), dispatched by measured corpus
-size and vocabulary-pass count (Arrow wins 0.69–0.81× at sf10 for the
-4-/6-count shapes with bit-equal outputs; the JVM chain stays cheaper
-below the crossover — ``EXP_TEXT_ARROW_SF10.json``,
-``BENCH_R13_TEXT_AB_SF10.json`` / ``..._SF01.json``).
+size and vocabulary-pass count (Arrow wins at sf10 for the 4-/6-count
+shapes with bit-equal outputs; the JVM chain stays cheaper below the
+crossover — ratios in ``BENCH_R13_TEXT_AB_SF10.json`` /
+``..._SF01.json`` and ``EXP_TEXT_ARROW_SF10.json``).
 
 Cross-engine determinism notes (these queries carry DuckDB oracles):
 - ``md5`` produces identical hex in Spark and DuckDB → fingerprints match.
@@ -60,13 +60,13 @@ def marker_score(toks: Column, markers: tuple[str, ...]) -> Column:
 # job locally (worker round-trip + Arrow transpose), repaid by the
 # split-once batch kernels only when BOTH hold —
 # - enough vocabulary passes share the one split (tx02's 2-count shape
-#   measured 1.35x SLOWER at sf10 even at 500k docs; the 4- and 6-count
-#   shapes win 0.81x / 0.69x there: BENCH_R13_TEXT_AB_SF10.json), and
-# - enough rows amortize the fixed cost (all shapes lose 1.5-3x at
-#   sf0.1's 5k docs: BENCH_R13_TEXT_AB_SF01.json; the sf1/sf5 legs
-#   bracket the 4-count crossover between 50k docs / 4.3 MB — tx03
-#   still 1.25x there — and 250k docs / 21 MB — tx03 0.67x; the
-#   6-count tx11 crosses earlier, 0.77x already at sf1).
+#   measured SLOWER at sf10 even at 500k docs; the 4- and 6-count
+#   shapes win there: BENCH_R13_TEXT_AB_SF10.json), and
+# - enough rows amortize the fixed cost (all shapes lose at sf0.1's 5k
+#   docs: BENCH_R13_TEXT_AB_SF01.json; the sf1/sf5 legs bracket the
+#   4-count crossover between 50k docs / 4.3 MB and 250k docs / 21 MB,
+#   and the 6-count tx11 crosses earlier, already at sf1:
+#   BENCH_R13_TEXT_AB_SF1.json / ..._SF5.json).
 # At the 100 TB design point both bounds are trivially cleared; they
 # exist so small interactive corpora keep the cheaper JVM plan — the
 # same input-size dispatch as io.parallelize_scan's _MIN_HEAL_BYTES.
@@ -97,11 +97,11 @@ def _arrow_token_counts(
 
     Measured (one process, alternating arms, bench posture —
     BENCH_R13_TEXT_AB_SF10/SF01.json; isolated featurization kernel in
-    EXP_TEXT_ARROW_SF10.json): the Arrow arm wins at sf10 for the
-    multi-vocabulary shapes (tx11 0.69x, tx03 0.81x; isolated kernel
-    0.78x over 500k docs) and loses everywhere the fixed per-job
-    boundary cost dominates (all shapes at sf0.1; tx02's 2-count shape
-    even at sf10). Dispatch is therefore data-sized, not hardcoded:
+    EXP_TEXT_ARROW_SF10.json; the ratios live in those files): the
+    Arrow arm wins at sf10 for the multi-vocabulary shapes (tx11, tx03;
+    the isolated kernel over 500k docs) and loses everywhere the fixed
+    per-job boundary cost dominates (all shapes at sf0.1; tx02's 2-count
+    shape even at sf10). Dispatch is therefore data-sized, not hardcoded:
     Arrow iff ``len(counts) >= _TEXT_ARROW_MIN_COUNTS`` and the
     documents table is at least ``_TEXT_ARROW_MIN_BYTES`` on disk.
     ``SPARK_GRAFT_TEXT_ARROW=1`` forces the Arrow arm, ``=0`` forces
@@ -275,8 +275,9 @@ def tx02_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # shared featurization helper; the 2-count shape stays on the JVM
     # chain under auto-dispatch (counts < _TEXT_ARROW_MIN_COUNTS: the
-    # Arrow arm measured 1.35x SLOWER even at sf10 — too few vocabulary
-    # passes share the one split to repay the Python boundary)
+    # Arrow arm measured SLOWER even at sf10, BENCH_R13_TEXT_AB_SF10.json
+    # — too few vocabulary passes share the one split to repay the
+    # Python boundary)
     feats = _arrow_token_counts(
         docs,
         {"word_count": None, "stopword_count": STOPWORDS},
@@ -330,8 +331,9 @@ def tx03_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     # all four marker scores in one featurization pass; auto-dispatch
-    # plans the Arrow batch form on big corpora (measured 0.81x at
-    # sf10), the JVM chain on small ones — see _arrow_token_counts
+    # plans the Arrow batch form on big corpora (measured faster at
+    # sf10: BENCH_R13_TEXT_AB_SF10.json), the JVM chain on small ones —
+    # see _arrow_token_counts
     scored = _arrow_token_counts(
         docs,
         {f"s_{lang}": LANG_MARKERS[lang] for lang in ("en", "de", "fr", "es")},
@@ -756,11 +758,11 @@ def tx11_corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     # all six token counts in one featurization pass (Arrow batch form
-    # on big corpora — measured 0.69x at sf10 — JVM chain on small
-    # ones, see _arrow_token_counts); the md5 fingerprint stays a JVM
-    # column computed BEFORE the pass and rides the batch as a
-    # passthrough (pyarrow has no md5 kernel, and the oracle pins the
-    # exact hex)
+    # on big corpora — measured faster at sf10, BENCH_R13_TEXT_AB_SF10.json
+    # — JVM chain on small ones, see _arrow_token_counts); the md5
+    # fingerprint stays a JVM column computed BEFORE the pass and rides
+    # the batch as a passthrough (pyarrow has no md5 kernel, and the
+    # oracle pins the exact hex)
     feats = _arrow_token_counts(
         docs.select("doc_id", F.md5("text").alias("content_fp"), "text"),
         {

@@ -52,8 +52,6 @@ def run_bench(
         SPARK_GRAFT_CPUS=str(cpus),
         SPARK_GRAFT_SKIP_DUCKDB="1",
         SPARK_GRAFT_REPEATS=str(repeats),
-        # don't clobber the headline-run mirror with probe legs
-        SPARK_GRAFT_BENCH_MIRROR="0",
     )
     if queries:
         env["SPARK_GRAFT_ONLY"] = queries

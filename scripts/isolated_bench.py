@@ -58,8 +58,7 @@ def main() -> None:
         "isolation": "one fresh JVM + DuckDB per query",
     }
     for name in names:
-        env = dict(os.environ, SPARK_GRAFT_ONLY=name,
-                   SPARK_GRAFT_BENCH_MIRROR="0")
+        env = dict(os.environ, SPARK_GRAFT_ONLY=name)
         proc = subprocess.run(
             [sys.executable, str(REPO / "bench.py")],
             env=env, capture_output=True, text=True,

@@ -49,9 +49,7 @@ def write_artifact(out_path: Path, artifact: dict) -> None:
 
 
 def run_bench(sf_dir: str) -> dict:
-    # probe legs must not clobber the headline-run BENCH_LAST.json mirror
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir,
-               SPARK_GRAFT_BENCH_MIRROR="0")
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
     out = subprocess.run(
         [sys.executable, str(REPO / "bench.py")],
         env=env, capture_output=True, text=True, check=True,

@@ -54,8 +54,6 @@ def run_bench(sf_dir: str, cpus: int, repeats: int) -> dict:
         SPARK_GRAFT_CPUS=str(cpus),
         SPARK_GRAFT_SKIP_DUCKDB="1",
         SPARK_GRAFT_REPEATS=str(repeats),
-        # don't clobber the headline-run mirror with probe legs
-        SPARK_GRAFT_BENCH_MIRROR="0",
     )
     out = subprocess.run(
         [sys.executable, str(REPO / "bench.py")],

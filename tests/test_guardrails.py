@@ -277,3 +277,29 @@ def test_artifact_provenance_stamp_contract():
     assert _re.fullmatch(r"[0-9a-f]{40}", p["code_commit"])
     assert isinstance(p["code_dirty"], bool)
     assert p["measured_utc"].endswith("+00:00")
+
+
+def test_only_run_cannot_overwrite_bench_mirror():
+    """bench.py mirrors its JSON line to BENCH_LAST.json only for the
+    headline run: a SPARK_GRAFT_ONLY subset or a leg at its own SF dir
+    gets no mirror. Asked in a child process, because importing bench.py
+    sets SPARK_GRAFT_* env defaults for the whole test process."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_SF_DIR"}
+    env["SPARK_GRAFT_ONLY"] = "tpch_q1_pricing_summary"
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import json, os, bench; print(json.dumps([str(bench.mirror_path(e))"
+         " for e in (os.environ, {}, {'SPARK_GRAFT_SF_DIR': 'sf1'})]))"],
+        cwd=repo, env=env, capture_output=True, text=True, check=True,
+    )
+    only_run, headline_run, probe_leg = json.loads(out.stdout.splitlines()[-1])
+    assert only_run == "None"
+    assert headline_run == str(repo / "BENCH_LAST.json")
+    assert probe_leg == "None"

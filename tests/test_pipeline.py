@@ -53,19 +53,57 @@ def test_schema_checks_catch_violations(spark):
     assert not_null_violations(bad, "location_id") == 1
 
 
+def _rows(df) -> set[tuple[str, ...]]:
+    return {tuple(map(str, r)) for r in df.collect()}
+
+
 def test_run_pipeline_materializes_and_rereads(spark, tmp_path):
-    out = str(tmp_path / "warehouse")
-    m = run_pipeline(spark, ensure_fixtures(), out_dir=out)
-    # marts were written and re-read: scanning parquet, not recomputing joins
-    assert (tmp_path / "warehouse" / "fact_prices").exists()
-    assert m["fact_prices"].count() > 0
-    assert m["mart_category_distribution"].count() > 0
-    # lazy and materialized runs agree
+    from product_data_pipelining_spark.models.runner import MATERIALIZED
+
+    out = tmp_path / "warehouse"
+    m = run_pipeline(spark, ensure_fixtures(), out_dir=str(out))
     lazy = build_models(load_raw(spark, ensure_fixtures()))
-    assert (
-        m["mart_category_distribution"].count()
-        == lazy["mart_category_distribution"].count()
+    for name in MATERIALIZED:
+        # written, re-read, and equal to the lazy build
+        assert (out / name).exists(), name
+        got = _rows(m[name])
+        assert got and got == _rows(lazy[name]), f"{name}: materialized != lazy"
+
+
+@pytest.mark.parametrize("kind", ["full", "incremental"])
+def test_marts_read_the_written_fact(spark, tmp_path, kind):
+    """Both runners build their marts over the re-read fact table: the
+    fact join runs once, no mart re-derives it."""
+    from contextlib import ExitStack
+    from unittest import mock
+
+    from product_data_pipelining_spark.models import marts, runner
+
+    raw_dir = ensure_fixtures()
+    out = str(tmp_path / kind)
+    cutoff = "2026-02-01 13:00:00"
+    if kind == "incremental":
+        runner.seed_snapshots(spark, raw_dir, out, until=cutoff)
+    names = (
+        "mart_category_distribution",
+        "mart_location_sales",
+        "mart_price_by_category",
     )
+    with ExitStack() as stack:
+        recs = {
+            n: stack.enter_context(
+                mock.patch.object(marts, n, wraps=getattr(marts, n))
+            )
+            for n in names
+        }
+        if kind == "full":
+            runner.run_pipeline(spark, raw_dir, out)
+        else:
+            runner.run_incremental(spark, raw_dir, out, since=cutoff)
+    for name, rec in recs.items():
+        fact = rec.call_args.args[0]
+        plan = fact._jdf.queryExecution().optimizedPlan().toString()
+        assert "Join" not in plan, f"{kind}/{name} re-derives the fact:\n{plan}"
 
 
 def test_dashboard_queries_run(models):
@@ -233,9 +271,9 @@ def test_incremental_run_converges_to_full_refresh(spark, tmp_path):
     incr = run_incremental(spark, raw_dir, out, since=cutoff)
     full = build_models(load_raw(spark, raw_dir))
     for name in MATERIALIZED:
-        got = {tuple(map(str, r)) for r in incr[name].collect()}
-        want = {tuple(map(str, r)) for r in full[name].collect()}
-        assert got == want, f"{name}: incremental != full refresh"
+        assert _rows(incr[name]) == _rows(full[name]), (
+            f"{name}: incremental != full refresh"
+        )
 
 
 def test_format_roundtrip_json_csv_orc(spark, sf_dir, tmp_path):
