@@ -3,7 +3,7 @@
 
 Usage: python bench.py
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-       SPARK_GRAFT_CPUS   (default 32)
+       SPARK_GRAFT_CPUS   (default: every core of the host)
 
 Prints {"metric": ..., "value": <spark total sec>, "unit": "sec",
         "queries": {name: sec, ...}, "sf": ...,
@@ -55,14 +55,16 @@ import duckdb
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 sys.path.insert(0, str(Path(__file__).resolve().parent / "scripts"))
 
+import _posture as posture  # noqa: E402
+from _posture import HEADLINE  # noqa: E402
 from _provenance import provenance  # noqa: E402
 
 from product_data_pipelining_spark.io import TPCH_TABLES
 from product_data_pipelining_spark.registry import all_queries
-from product_data_pipelining_spark.session import get_spark
+from product_data_pipelining_spark.session import DEFAULT_CPUS, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = DEFAULT_CPUS
 # 1 = skip the in-process DuckDB baseline entirely (duckdb_total_sec = 0,
 # ratio_vs_duckdb = null). Used by the CPU strong-scaling probe, which
 # re-runs the Spark side at several core counts and has no use for four
@@ -72,117 +74,7 @@ SKIP_DUCKDB = os.environ.get("SPARK_GRAFT_SKIP_DUCKDB", "0") == "1"
 # median-of-5 for median-of-3 to fit several legs in one session.
 _REPEATS_ENV = os.environ.get("SPARK_GRAFT_REPEATS")
 
-# serving posture: hot base tables live in the in-memory columnar cache
-# (repartitioned once at materialization) — see io.load_table — and each
-# headline plan is prepared once and re-executed (registry plan cache).
-# Static planning + data-sized shuffle partitions: AQE's stage-by-stage
-# materialization (one scheduler job + driver replan per exchange) and
-# 32-task micro-shuffles dominate sub-second queries at this SF —
-# measured 11.1s -> ~3s total on this headline set. AQE remains the
-# default for the batch/cluster paths (get_spark without these envs);
-# at 100 TB each shuffle carries GBs per partition and AQE's runtime
-# re-planning pays for itself.
-os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "1")
-os.environ.setdefault("SPARK_GRAFT_PLAN_CACHE", "1")
-os.environ.setdefault("SPARK_GRAFT_AQE", "0")
-
-
-def _sized_shuffle_partitions(sf_dir: str) -> str:
-    """Static-planning analog of AQE coalescing: shuffle partition count
-    sized from the SF dir's bytes (~64 MB per partition, floor 8, cap at
-    the core count) so the sf0.1 posture (8) doesn't serialize 50x data
-    through 8-way exchanges when the probe reuses this harness."""
-    total = 0
-    try:
-        for root, _dirs, files in os.walk(sf_dir):
-            total += sum(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if not f.startswith((".", "_"))
-            )
-    except OSError:
-        pass
-    return str(min(CPUS, max(8, total // (64 * 1024 * 1024))))
-
-
-os.environ.setdefault(
-    "SPARK_GRAFT_SHUFFLE_PARTITIONS", _sized_shuffle_partitions(SF_DIR)
-)
-
-# headline set: one per operator family, weighted toward the shapes that
-# dominate real workloads (scan-agg, star join, window, dedup, ANN, text)
-HEADLINE = [
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_regional_revenue",
-    "a03_percentile_summary",
-    "a11_share_of_group_window",
-    "s05_upsert_last_writer_wins",
-    "ev02_sessionize",
-    "dd01_exact_dedup",
-    "dd04_minhash_lsh_pairs",
-    # xxhash64 production twin of dd04: no SQL oracle (rows-only), so it
-    # counts toward `value` but stays out of the DuckDB ratio; here to put
-    # a wall-time number on the codegen'd-hash path (expected < dd04)
-    "dd09_minhash_lsh_pairs_xxh",
-    # Bloom-prefilter decontamination: dd07's exact answer in the
-    # bench-set-too-big-to-broadcast regime (oracled — same SQL)
-    "dd10_bloom_decontaminate",
-    "tx02_quality_score",
-    "tx11_corpus_filter_pipeline",
-    "ev05_funnel_conversion",
-    "sim01_ann_bruteforce_topk",
-    # the bucketed ANN scale path beside its brute-force baseline, plus
-    # its per-bucket-GEMM production twin (rows-only: no oracle, frame
-    # equality with sim02 pinned in tests — at sf5: 2.7s vs 6.6s HOF)
-    "sim02_ann_lsh_bucketed",
-    "sim02x_ann_lsh_bucketed_np",
-    "tp02_resample_gapfill",
-    # PQ/ADC ANN (oracled — integer-grid distances, exact SQL twin):
-    # the compressed-scan end of the ANN ladder
-    "sim06_pq_adc",
-    # distributed spherical k-means (3 Lloyd's rounds over the full
-    # embedding table; rows-only — iterative, no single SQL statement)
-    "sim05_kmeans_assign",
-    # the composed IVF-PQ serving shape (oracled): coarse cells bound
-    # candidates, PQ codes bound per-candidate cost — the flagship
-    # 100 TB ANN plan, timed beside its two ingredients
-    "sim07_ann_ivfpq",
-    # + exact re-rank of the ADC top-50 (oracled): the recall-recovery
-    # stage; full-vector reads stay bounded per query
-    "sim08_ann_ivfpq_rerank",
-    # self-kNN graph over IVF cells (oracled): the edge-list input to
-    # SemDeDup-style clustering — pair set O(N^1.5) via occupancy gate
-    "sim09_knn_graph",
-    # semantic dedup, cluster-then-compare (oracled): the SemDeDup
-    # scale path — pair count is cell occupancy, never corpus^2
-    "dd13_semantic_dedup",
-    # incremental ingest dedup (oracled): new batch LSH-probes the
-    # existing corpus index without recomputing it — the scale claim is
-    # cost ∝ batch, so it belongs in the per-SF probes
-    "dd14_incremental_ingest_dedup",
-    "mm02_decode_features",
-    # the composed curation funnel (oracled): quality -> near-dup ->
-    # decontaminate -> holdout in ONE attributed pass — the end-to-end
-    # number a training-data pipeline actually ships. The BENCHMARKED
-    # funnel is the banded-LSH production mode: pipe01's exact pair
-    # stage is the ground-truth baseline whose corpus-scale pair
-    # exchange (~2B pairs / 50+ GB shuffle at sf10) exceeds a single
-    # box's scratch in EITHER engine — it stays value-verified at
-    # sf<=1 via the driver gate, sweeps, and the sf1 probe
-    "pipe02_curation_funnel_lsh",
-    # MMR diversified retrieval (rows-only: greedy re-rank, bit-exact
-    # Python-mirror tested): bounded-broadcast GEMM candidates + 40-row
-    # applyInPandas groups — re-rank cost is corpus-size-independent
-    "sim10_mmr_diverse_topk",
-    # r8 additions (r7 verdict ask #6 — both were oracled at 3 SFs but
-    # absent from the at-scale artifacts): hard-negative mining rides
-    # sim04's IVF machinery with a label filter that prunes before the
-    # per-query top-k window; the bigram-LM quality score is a
-    # vocab^2-bounded broadcast model over one corpus scan
-    "sim11_hard_negatives",
-    "tx16_bigram_logprob",
-]
+posture.apply(SF_DIR, CPUS)
 
 # SPARK_GRAFT_ONLY="q1,q2" restricts the headline set — the unit the
 # per-query-isolated wrapper (scripts/isolated_bench.py) runs one fresh

@@ -160,7 +160,8 @@ def signature_from_shingles(
         #   adjacent-process legs whose DuckDB baseline itself drifted
         #   330->246 s.
         # - r13 A/B'd both arms in ONE process at sf10 with alternating
-        #   reps and plan-sanity checks (scripts/r13_minhash_ab.py):
+        #   reps and plan-sanity checks (the script is at the
+        #   artifacts' code_commit 75d5d2c):
         #   the numeric arm is SLOWER on the pure signature build (dd03)
         #   and on dd14 at sf10, a tie on dd04/pipe02 where LSH work
         #   dominates — and the gap GROWS with scale; the ratios are in

@@ -110,7 +110,8 @@ def _arrow_token_counts(
 
     Counts are exact integers — bit-identical between the arms (pinned
     frame-equal by test_text_arrow_featurization_matches_jvm_twin, and
-    row-compared over the full sf10 corpus by exp_text_arrow.py) — so
+    row-compared over the full sf10 corpus: EXP_TEXT_ARROW_SF10.json,
+    code_commit 75cd1b4) — so
     oracle parity does not depend on the dispatch. Emitted count
     columns are INT, matching ``F.size``'s type. ``passthrough``
     columns ride the batch unchanged (md5 fingerprints stay JVM-side:

@@ -25,7 +25,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the one CPU rule: SPARK_GRAFT_CPUS if set, else every core of the host
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
 def available_ram_gb() -> int:

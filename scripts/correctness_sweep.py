@@ -6,9 +6,13 @@ covers all 134 oracled queries at sf0.001 + sf0.01. This script runs
 the SAME contract (``checks/oracle_compare.py``) over the ENTIRE
 registry at a bigger SF — driver testdata or generator output — and
 writes ``CORRECTNESS_SF{label}.json`` so the "still correct at scale"
-claim covers every query, not just the headline set.
+claim covers every query, not just the headline set. ``--queries``
+checks only the named queries (e.g. every consumer of a changed
+operator) and writes an artifact only when ``--out`` is given. Exits
+non-zero on any mismatch or error.
 
 Usage:  python scripts/correctness_sweep.py [--sf-dir /root/testdata/sf0.1]
+            [--queries q,...] [--out PATH]
 """
 
 from __future__ import annotations
@@ -33,6 +37,8 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--out", default=None)
+    ap.add_argument("--queries", default=None,
+                    help="comma-separated subset (default: every query)")
     args = ap.parse_args()
 
     import duckdb
@@ -46,7 +52,13 @@ def main() -> None:
     from product_data_pipelining_spark.session import get_spark
 
     specs = all_queries()
-    spark = get_spark(app_name="pdp-correctness-sweep", cpus=32)
+    if args.queries:
+        names = [q.strip() for q in args.queries.split(",") if q.strip()]
+        unknown = [q for q in names if q not in specs]
+        if unknown:
+            sys.exit(f"unknown queries: {unknown}")
+        specs = {q: specs[q] for q in names}
+    spark = get_spark(app_name="pdp-correctness-sweep")
     con = duckdb.connect()
     for t in TPCH_TABLES:
         con.execute(duck_view_sql(args.sf_dir, t))
@@ -96,9 +108,15 @@ def main() -> None:
     }
     summary["provenance"] = provenance()
     label = args.sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    out = Path(args.out) if args.out else REPO / f"CORRECTNESS_{label.upper()}.json"
-    out.write_text(json.dumps(summary, indent=1) + "\n")
+    out = Path(args.out) if args.out else (
+        None if args.queries else REPO / f"CORRECTNESS_{label.upper()}.json"
+    )
+    if out is not None:
+        out.write_text(json.dumps(summary, indent=1) + "\n")
     print(json.dumps({k: v for k, v in summary.items() if k != "results"}))
+    spark.stop()
+    if summary["mismatch"] or summary["error"]:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

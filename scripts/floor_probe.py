@@ -66,7 +66,7 @@ from product_data_pipelining_spark.io import TPCH_TABLES
 
 name, sf_dir, repeats = {name!r}, {sf_dir!r}, {repeats}
 spec = all_queries()[name]
-spark = get_spark(app_name=f"floor-{{name}}", cpus=32)
+spark = get_spark(app_name=f"floor-{{name}}")
 df = spec.fn(spark, sf_dir)
 df.write.format("noop").mode("overwrite").save()  # warmup
 con = duckdb.connect()

@@ -30,6 +30,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+from _posture import HEADLINE  # noqa: E402
 from _provenance import provenance  # noqa: E402
 
 
@@ -40,9 +41,6 @@ def main() -> None:
     ap.add_argument("--queries", default=None,
                     help="comma-separated subset (default: all headliners)")
     args = ap.parse_args()
-
-    sys.path.insert(0, str(REPO))
-    from bench import HEADLINE
 
     names = (
         [q.strip() for q in args.queries.split(",") if q.strip()]

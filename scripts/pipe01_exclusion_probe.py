@@ -79,7 +79,7 @@ def spark_leg(
     from product_data_pipelining_spark.registry import all_queries
     from product_data_pipelining_spark.session import get_spark
 
-    spark = get_spark(app_name="pipe01-exclusion-probe", cpus=32)
+    spark = get_spark(app_name="pipe01-exclusion-probe")
     if chunked:
         # the sequenced doc_a-chunk mode; its pair parquet lives under
         # the SAME watched scratch so the budget covers it too. NOTE:

@@ -36,6 +36,7 @@ REPO = Path(__file__).resolve().parents[1]
 TESTDATA_SF01 = "/root/testdata/sf0.1"
 
 sys.path.insert(0, str(REPO / "scripts"))
+from _posture import HEADLINE  # noqa: E402
 from _provenance import provenance  # noqa: E402
 
 
@@ -169,7 +170,6 @@ def stage_oracles(sf_dir: str, stage_dir: str) -> None:
     sys.path.insert(0, str(REPO))
     import duckdb
 
-    from bench import HEADLINE
     from product_data_pipelining_spark.checks.oracle_compare import (
         duck_view_sql,
     )
@@ -265,7 +265,6 @@ def run_correctness(sf_dir: str, stage_dir: str) -> dict:
     sys.path.insert(0, str(REPO))
     import duckdb
 
-    from bench import HEADLINE
     from product_data_pipelining_spark.checks.oracle_compare import (
         frames_match,
     )
@@ -275,9 +274,7 @@ def run_correctness(sf_dir: str, stage_dir: str) -> dict:
     with open(os.path.join(stage_dir, "meta.json")) as f:
         meta = json.load(f)
     specs = all_queries()
-    spark = get_spark(app_name="pdp-scale-check", cpus=int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
-    ))
+    spark = get_spark(app_name="pdp-scale-check")
     con = duckdb.connect()  # only reads staged parquet — tiny footprint
 
     results: dict[str, str] = {}

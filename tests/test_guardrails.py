@@ -94,7 +94,8 @@ ARROW_ALLOWED = {
     # mapInArrow batch pass (pyarrow.compute split + is_in + cumsum
     # segment counts) — measured 1.4x over the JVM expression chain on
     # 500k sf10 documents with bit-equal outputs
-    # (scripts/exp_text_arrow.py); md5 fingerprints stay JVM-side
+    # (EXP_TEXT_ARROW_SF10.json, code_commit 75cd1b4); md5
+    # fingerprints stay JVM-side
     "tx02_quality_score",
     "tx03_language_id",
     "tx11_corpus_filter_pipeline",
