@@ -4,12 +4,15 @@ The reference dashboard (``/root/reference/portfolio_app/app.py:81-439``)
 runs seven SQL queries against the marts and post-processes some of them
 in pandas (share-of-group, medians, label mapping). Here every step —
 SQL and pandas alike — is a Spark expression, so the whole computation
-stays distributed until the final ``.toPandas()`` at the plotting
-boundary (never inside these functions).
+stays distributed until the final collect at the plotting boundary
+(``serving.py``; never inside these functions).
 
 Each function takes the mart/fact DataFrames it reads and returns a
 DataFrame; sorting is applied where the reference sorts, though the
-driver's comparisons are order-insensitive.
+driver's comparisons are order-insensitive. Which models feed which of
+the nine dashboard frames is decided in one place,
+:data:`.runner.DASHBOARD`; :func:`price_box` is chart 1's per-category
+summary over those rows (:func:`.runner.price_chart`).
 """
 
 from __future__ import annotations
@@ -18,13 +21,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import duck_round
+from .marts import avg_dec
 
-
-def _avg_2dec_double(col) -> "F.Column":
-    """Order-independent AVG of a double column holding 2-decimal values."""
-    c = F.col(col) if isinstance(col, str) else col
-    c = c.cast("decimal(18,2)")
-    return F.sum(c).cast("double") / F.count(c)
+# chart 1's five-number summary: column name -> percentile
+_BOX = {"min": 0.0, "q1": 0.25, "median": 0.5, "q3": 0.75, "max": 1.0}
 
 
 def price_distribution(fact_prices: DataFrame, q1_2026_only: bool = True) -> DataFrame:
@@ -45,6 +45,25 @@ def price_distribution(fact_prices: DataFrame, q1_2026_only: bool = True) -> Dat
             )
         )
     return df.select("category", "regular_price")
+
+
+def price_box(price_rows: DataFrame) -> DataFrame:
+    """Chart 1 (box plot): per-category five-number summary of
+    :func:`price_distribution` rows, highest median first.
+
+    Reference: ``app.py:107-124`` (plotly box over the raw rows) — here
+    one exact ``percentile`` per category, so only the summary leaves
+    Spark.
+    """
+    p = F.percentile(
+        F.col("regular_price").cast("double"), F.lit(list(_BOX.values()))
+    )
+    return (
+        price_rows.groupBy("category")
+        .agg(p.alias("p"))
+        .select("category", *[F.col("p")[i].alias(n) for i, n in enumerate(_BOX)])
+        .orderBy(F.desc("median"))
+    )
 
 
 def effective_date_range(fact_prices: DataFrame) -> DataFrame:
@@ -85,7 +104,9 @@ def state_price_summary(mart_location_sales: DataFrame) -> DataFrame:
         mart_location_sales.filter(F.col("state").isNotNull())
         .groupBy("state")
         .agg(
-            duck_round(_avg_2dec_double("avg_price"), 2).alias("state_avg_price"),
+            duck_round(avg_dec(F.col("avg_price").cast("decimal(18,2)")), 2).alias(
+                "state_avg_price"
+            ),
             F.sum("total_products").alias("state_total_products"),
         )
     )
@@ -174,12 +195,10 @@ def discount_depth(fact_prices: DataFrame) -> DataFrame:
         )
         .groupBy("category")
         .agg(
-            duck_round(_avg_2dec_double("discount_pct"), 1).alias(
-                "avg_discount_pct"
-            ),
             duck_round(
-                F.sum("regular_price").cast("double") / F.count("regular_price"), 2
-            ).alias("avg_regular_price"),
+                avg_dec(F.col("discount_pct").cast("decimal(18,2)")), 1
+            ).alias("avg_discount_pct"),
+            duck_round(avg_dec("regular_price"), 2).alias("avg_regular_price"),
             F.count(F.lit(1)).alias("promo_items"),
         )
         .filter(F.col("promo_items") >= 5)
@@ -203,12 +222,8 @@ def category_value_map(fact_prices: DataFrame) -> DataFrame:
         )
         .groupBy("category")
         .agg(
-            duck_round(
-                F.sum("regular_price").cast("double") / F.count("regular_price"), 2
-            ).alias("avg_regular_price"),
-            duck_round(
-                F.sum(dpct_if_promo).cast("double") / F.count(dpct_if_promo), 1
-            ).alias("avg_discount_pct"),
+            duck_round(avg_dec("regular_price"), 2).alias("avg_regular_price"),
+            duck_round(avg_dec(dpct_if_promo), 1).alias("avg_discount_pct"),
             F.countDistinct("product_id").alias("product_count"),
             F.count(
                 F.when(

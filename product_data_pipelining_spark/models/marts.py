@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import duck_round
 
 
-def _avg_dec(col: Column | str) -> Column:
+def avg_dec(col: Column | str) -> Column:
     """DuckDB-parity AVG over a DECIMAL column → DOUBLE.
 
     Sums exactly in decimal (order-independent across partitions), then
@@ -165,8 +165,8 @@ def mart_category_distribution(fact_prices: DataFrame) -> DataFrame:
         .groupBy("category")
         .agg(
             F.countDistinct("product_id").alias("product_count"),
-            duck_round(_avg_dec("regular_price"), 2).alias("avg_regular_price"),
-            duck_round(_avg_dec("promo_price"), 2).alias("avg_promo_price"),
+            duck_round(avg_dec("regular_price"), 2).alias("avg_regular_price"),
+            duck_round(avg_dec("promo_price"), 2).alias("avg_promo_price"),
         )
     )
 
@@ -197,7 +197,7 @@ def mart_location_sales(
             )
         ).alias("online_count"),
         F.countDistinct("product_id").alias("total_products"),
-        duck_round(_avg_dec("regular_price"), 2).alias("avg_price"),
+        duck_round(avg_dec("regular_price"), 2).alias("avg_price"),
     )
     dl = dim_locations.alias("dl")
     return dl.join(F.broadcast(lf.alias("lf")), "location_id", "inner").select(
@@ -229,15 +229,15 @@ def mart_price_by_category(fact_prices: DataFrame) -> DataFrame:
         )
         .groupBy("category", "effective_date")
         .agg(
-            duck_round(_avg_dec("regular_price"), 2).alias("avg_regular_price"),
+            duck_round(avg_dec("regular_price"), 2).alias("avg_regular_price"),
             duck_round(
-                _avg_dec(F.coalesce("promo_price", "regular_price")), 2
+                avg_dec(F.coalesce("promo_price", "regular_price")), 2
             ).alias("avg_promo_price"),
             # discount_pct is a double holding a 2-decimal value; the
             # decimal(18,2) cast recovers it exactly, so the sum is
             # order-independent across partitions (unlike double AVG)
             duck_round(
-                _avg_dec(F.col("discount_pct").cast("decimal(18,2)")), 2
+                avg_dec(F.col("discount_pct").cast("decimal(18,2)")), 2
             ).alias("avg_discount_pct"),
             F.countDistinct("product_id").alias("product_count"),
             F.min("regular_price").alias("min_price"),

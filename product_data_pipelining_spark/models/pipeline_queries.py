@@ -10,8 +10,10 @@ prelude over the identical parquet files, so the comparison covers the
 entire reference dataflow end-to-end, not just the last operator.
 
 Output normalization (both sides identically): DECIMAL → DOUBLE, DATE →
-ISO string, ``fetched_at`` dropped (ingest metadata); rounded floats use
-the duck_round/ROUND twins (see :mod:`..functions.rounding`).
+ISO string, ``fetched_at`` dropped (ingest metadata). The Spark side
+applies it as one schema-driven rule (:func:`_canon`) to the model or
+to the :data:`..runner.DASHBOARD` frame; rounded floats use the
+duck_round/ROUND twins (see :mod:`..functions.rounding`).
 
 The ``sf_dir`` argument is ignored: these queries exercise the
 reference's Kroger-shaped raw layer, whose edge cases (FIXTURES.md) the
@@ -24,13 +26,14 @@ from __future__ import annotations
 import os
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, DecimalType, StructField
 
+from ..functions.rounding import duck_round
 from ..registry import register
 from ..sources.synthetic import write_raw_tables
-from . import dashboard, marts
-from .runner import build_models, load_raw
+from .runner import DASHBOARD, build_models, load_raw
 
 _FIXTURE_DIR = str(Path(__file__).resolve().parents[2] / "fixtures")
 
@@ -49,15 +52,27 @@ def _models(spark: SparkSession) -> dict[str, DataFrame]:
     return build_models(load_raw(spark, _FIXTURE_DIR))
 
 
-_DATE_FMT = "yyyy-MM-dd"
+def _canon(df: DataFrame) -> DataFrame:
+    """Output normalization by ``df``'s schema: DECIMAL → DOUBLE, DATE →
+    ``yyyy-MM-dd`` string, ``fetched_at`` dropped, column order kept."""
+
+    def out(field: StructField) -> Column:
+        c = F.col(field.name)
+        if isinstance(field.dataType, DecimalType):
+            c = c.cast("double")
+        elif isinstance(field.dataType, DateType):
+            c = F.date_format(c, "yyyy-MM-dd")
+        return c.alias(field.name)
+
+    return df.select([out(f) for f in df.schema.fields if f.name != "fetched_at"])
 
 
-def _date_str(col: str) -> F.Column:
-    return F.date_format(F.col(col), _DATE_FMT).alias(col)
+def _model(spark: SparkSession, name: str) -> DataFrame:
+    return _canon(_models(spark)[name])
 
 
-def _dbl(col: str) -> F.Column:
-    return F.col(col).cast("double").alias(col)
+def _frame(spark: SparkSession, name: str) -> DataFrame:
+    return _canon(DASHBOARD[name](_models(spark)))
 
 
 # --- DuckDB oracle prelude: the full reference dataflow as CTEs -------------
@@ -209,7 +224,7 @@ mart_price_by_category AS (
 def m01_stg_locations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1/P2 + S5/S9: staging projection & not-null gate after keyed load
     (``models/staging/stg_locations.sql``)."""
-    return _models(spark)["stg_locations"].drop("fetched_at")
+    return _model(spark, "stg_locations")
 
 
 @register(
@@ -223,7 +238,7 @@ def m01_stg_locations(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m02_stg_products(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P7/P8: JSON ``$[0]`` extraction + key gate
     (``models/staging/stg_products.sql``)."""
-    return _models(spark)["stg_products"].drop("fetched_at")
+    return _model(spark, "stg_products")
 
 
 @register(
@@ -245,24 +260,7 @@ def m02_stg_products(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m03_stg_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3-P6: derived discount columns, TRY_CAST dates, positive-price
     gate (``models/staging/stg_prices.sql``)."""
-    df = _models(spark)["stg_prices"]
-    return df.select(
-        "product_id",
-        "location_id",
-        "item_id",
-        "size",
-        _dbl("regular_price"),
-        _dbl("promo_price"),
-        _dbl("discount_amount"),
-        "discount_pct",
-        _date_str("effective_date"),
-        _date_str("expiration_date"),
-        "fulfillment_instore",
-        "fulfillment_delivery",
-        "fulfillment_curbside",
-        "fulfillment_shiptohome",
-        "stock_level",
-    )
+    return _model(spark, "stg_prices")
 
 
 @register(
@@ -271,7 +269,7 @@ def m03_stg_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m04_dim_locations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P9: column-drop projection (``models/marts/dim_locations.sql``)."""
-    return _models(spark)["dim_locations"]
+    return _model(spark, "dim_locations")
 
 
 @register(
@@ -280,7 +278,7 @@ def m04_dim_locations(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m05_dim_products(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10/P9: DISTINCT + rename (``models/marts/dim_products.sql``)."""
-    return _models(spark)["dim_products"]
+    return _model(spark, "dim_products")
 
 
 @register(
@@ -302,29 +300,7 @@ def m05_dim_products(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m06_fact_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1: stg_prices ⟕ dim_products ⟕ dim_locations, broadcast dims
     (``models/marts/fact_prices.sql``)."""
-    df = _models(spark)["fact_prices"]
-    return df.select(
-        "product_id",
-        "location_id",
-        "item_id",
-        "description",
-        "brand",
-        "category",
-        "city",
-        "state",
-        "latitude",
-        "longitude",
-        _dbl("regular_price"),
-        _dbl("promo_price"),
-        _dbl("discount_amount"),
-        "discount_pct",
-        _date_str("effective_date"),
-        "fulfillment_instore",
-        "fulfillment_delivery",
-        "fulfillment_curbside",
-        "fulfillment_shiptohome",
-        "stock_level",
-    )
+    return _model(spark, "fact_prices")
 
 
 @register(
@@ -334,7 +310,7 @@ def m06_fact_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m07_mart_category_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: per-category COUNT DISTINCT + rounded AVGs
     (``models/marts/mart_category_distribution.sql``)."""
-    return _models(spark)["mart_category_distribution"]
+    return _model(spark, "mart_category_distribution")
 
 
 @register(
@@ -344,7 +320,7 @@ def m07_mart_category_distribution(spark: SparkSession, sf_dir: str) -> DataFram
 def m08_mart_location_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2/J2: conditional distinct counts joined back to the dim
     (``models/marts/mart_location_sales.sql``)."""
-    return _models(spark)["mart_location_sales"]
+    return _model(spark, "mart_location_sales")
 
 
 @register(
@@ -365,20 +341,7 @@ def m08_mart_location_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m09_mart_price_by_category(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: five-number summary with exact DuckDB-typed percentiles
     (``models/marts/mart_price_by_category.sql``; SURVEY §2.9)."""
-    df = _models(spark)["mart_price_by_category"]
-    return df.select(
-        "category",
-        _date_str("effective_date"),
-        "avg_regular_price",
-        "avg_promo_price",
-        "avg_discount_pct",
-        "product_count",
-        _dbl("min_price"),
-        _dbl("max_price"),
-        _dbl("q1_price"),
-        _dbl("median_price"),
-        _dbl("q3_price"),
-    )
+    return _model(spark, "mart_price_by_category")
 
 
 # --- dashboard queries ------------------------------------------------------
@@ -396,10 +359,7 @@ def m09_mart_price_by_category(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d01_price_distribution_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P10: Q1-2026 date-window box-plot feed (``app.py:84-102``)."""
-    m = _models(spark)
-    return dashboard.price_distribution(m["fact_prices"], q1_2026_only=True).select(
-        "category", _dbl("regular_price")
-    )
+    return _frame(spark, "price_distribution_q1")
 
 
 @register(
@@ -413,12 +373,7 @@ def d01_price_distribution_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d02_effective_date_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8: global MIN/MAX effective_date (``app.py:103-106``)."""
-    m = _models(spark)
-    df = dashboard.effective_date_range(m["fact_prices"])
-    return df.select(
-        F.date_format("min_date", _DATE_FMT).alias("min_date"),
-        F.date_format("max_date", _DATE_FMT).alias("max_date"),
-    )
+    return _frame(spark, "effective_date_range")
 
 
 @register(
@@ -439,13 +394,8 @@ def d03_category_median_price_order(spark: SparkSession, sf_dir: str) -> DataFra
     Medians of 2-decimal prices carry ≤3 decimals; both sides round
     there so interpolation ulp noise can't flip the comparison.
     """
-    m = _models(spark)
-    rows = dashboard.price_distribution(m["fact_prices"], q1_2026_only=False)
-    from ..functions.rounding import duck_round
-
-    return dashboard.category_median_price_order(rows).select(
-        "category", duck_round("median_price", 3).alias("median_price")
-    )
+    df = _frame(spark, "category_median_price_order")
+    return df.select("category", duck_round("median_price", 3).alias("median_price"))
 
 
 @register(
@@ -464,8 +414,7 @@ def d03_category_median_price_order(spark: SparkSession, sf_dir: str) -> DataFra
 def d04_state_price_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9: mart re-aggregation — avg of per-location avgs
     (``app.py:149-156``)."""
-    m = _models(spark)
-    return dashboard.state_price_summary(m["mart_location_sales"])
+    return _frame(spark, "state_price_summary")
 
 
 @register(
@@ -483,8 +432,7 @@ def d04_state_price_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d05_location_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3: zip recovery join + null-coalesce (``app.py:159-178``)."""
-    m = _models(spark)
-    return dashboard.location_map(m["mart_location_sales"], m["dim_locations"])
+    return _frame(spark, "location_map")
 
 
 @register(
@@ -509,8 +457,7 @@ def d05_location_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d06_stock_status_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7/A11: frequency count + share-of-category window
     (``app.py:265-285``)."""
-    m = _models(spark)
-    return dashboard.stock_status_mix(m["fact_prices"])
+    return _frame(spark, "stock_status_mix")
 
 
 @register(
@@ -531,8 +478,7 @@ def d06_stock_status_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d07_discount_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4: GROUP BY + HAVING COUNT(*) >= 5 (``app.py:335-345``)."""
-    m = _models(spark)
-    return dashboard.discount_depth(m["fact_prices"])
+    return _frame(spark, "discount_depth")
 
 
 @register(
@@ -560,8 +506,7 @@ def d07_discount_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d08_category_value_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5/A6: CASE→NULL filtered average + conditional counts
     (``app.py:383-396``)."""
-    m = _models(spark)
-    return dashboard.category_value_map(m["fact_prices"])
+    return _frame(spark, "category_value_map")
 
 
 @register(
@@ -588,11 +533,8 @@ def d08_category_value_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d09_value_map_medians(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A13: global medians over the value map (``app.py:432-435``)."""
-    from ..functions.rounding import duck_round
-
-    m = _models(spark)
-    cvm = dashboard.category_value_map(m["fact_prices"])
-    return dashboard.value_map_medians(cvm).select(
+    df = _frame(spark, "value_map_medians")
+    return df.select(
         duck_round("median_discount_pct", 3).alias("median_discount_pct"),
         duck_round("median_regular_price", 3).alias("median_regular_price"),
     )

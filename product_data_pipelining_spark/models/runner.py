@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -130,27 +131,50 @@ def run_pipeline(
     return build_models(load_raw(spark, raw_dir), out_dir)
 
 
+# The one map from built models to the nine dashboard frames
+# (app.py:81-439); the page, the chart API, the traced frames and the
+# d01-d09 registry queries all build from it. Builders, not frames:
+# building one frame costs a fraction of building all nine.
+DASHBOARD: dict[str, Callable[[dict[str, DataFrame]], DataFrame]] = {
+    "price_distribution_q1": lambda m: dashboard.price_distribution(
+        m["fact_prices"], q1_2026_only=True
+    ),
+    "effective_date_range": lambda m: dashboard.effective_date_range(
+        m["fact_prices"]
+    ),
+    "category_median_price_order": lambda m: dashboard.category_median_price_order(
+        dashboard.price_distribution(m["fact_prices"], q1_2026_only=False)
+    ),
+    "state_price_summary": lambda m: dashboard.state_price_summary(
+        m["mart_location_sales"]
+    ),
+    "location_map": lambda m: dashboard.location_map(
+        m["mart_location_sales"], m["dim_locations"]
+    ),
+    "stock_status_mix": lambda m: dashboard.stock_status_mix(m["fact_prices"]),
+    "discount_depth": lambda m: dashboard.discount_depth(m["fact_prices"]),
+    "category_value_map": lambda m: dashboard.category_value_map(m["fact_prices"]),
+    "value_map_medians": lambda m: dashboard.value_map_medians(
+        DASHBOARD["category_value_map"](m)
+    ),
+}
+
+
 def dashboard_queries(m: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """The seven dashboard chart queries over built models (app.py:81-439)."""
-    price_rows = dashboard.price_distribution(m["fact_prices"], q1_2026_only=True)
-    cvm = dashboard.category_value_map(m["fact_prices"])
-    return {
-        "price_distribution_q1": price_rows,
-        "effective_date_range": dashboard.effective_date_range(m["fact_prices"]),
-        "category_median_price_order": dashboard.category_median_price_order(
-            dashboard.price_distribution(m["fact_prices"], q1_2026_only=False)
-        ),
-        "state_price_summary": dashboard.state_price_summary(
-            m["mart_location_sales"]
-        ),
-        "location_map": dashboard.location_map(
-            m["mart_location_sales"], m["dim_locations"]
-        ),
-        "stock_status_mix": dashboard.stock_status_mix(m["fact_prices"]),
-        "discount_depth": dashboard.discount_depth(m["fact_prices"]),
-        "category_value_map": cvm,
-        "value_map_medians": dashboard.value_map_medians(cvm),
-    }
+    """All nine :data:`DASHBOARD` frames over built models."""
+    return {name: build(m) for name, build in DASHBOARD.items()}
+
+
+def price_chart(m: dict[str, DataFrame]) -> tuple[str, DataFrame]:
+    """Chart 1 as the page draws it (app.py:84-124): its title's date
+    range and the per-category box over the Q1-2026 rows, or over all
+    dates when that window is empty (the reference's fallback)."""
+    rows = DASHBOARD["price_distribution_q1"](m)
+    if not rows.isEmpty():
+        return "Q1 2026", dashboard.price_box(rows)
+    rng = DASHBOARD["effective_date_range"](m).collect()[0]
+    rows = dashboard.price_distribution(m["fact_prices"], q1_2026_only=False)
+    return f"{rng['min_date']} – {rng['max_date']}", dashboard.price_box(rows)
 
 
 def run_incremental(

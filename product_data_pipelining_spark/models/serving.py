@@ -4,10 +4,11 @@ self-contained HTML file (inline SVG, zero JS/plotting dependencies).
 Reference: ``/root/reference/portfolio_app/app.py:81-439`` renders five
 plotly charts in a Dash app (box plot, store map, stock-status mix,
 discount depth, category value map) from seven SQL queries. Here the
-chart *inputs* come from ``models.dashboard`` (every aggregation stays
-a distributed Spark plan; see that module), and this module only
-formats the final, tiny, already-aggregated frames — the one place
-``.toPandas()`` is allowed. The output is a static artifact you can
+chart *inputs* are the frames of ``runner.DASHBOARD`` (chart 1:
+``runner.price_chart``; every aggregation stays a distributed Spark
+plan, see ``models.dashboard``), and this module only formats the
+final, tiny, already-aggregated frames — the one place rows are
+collected. The output is a static artifact you can
 drop on any object store; no server, no plotly (not installed in this
 container by design).
 
@@ -28,7 +29,7 @@ from typing import Any, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import dashboard
+from .runner import DASHBOARD, price_chart
 
 # categorical slots (fixed order; first three validate all-pairs CVD in
 # both modes), surfaces and ink per the validated placeholder palette
@@ -362,50 +363,30 @@ def dashboard_html(m: dict[str, DataFrame]) -> str:
     frames collected here are chart-sized (tens of rows). Used by both
     the static artifact writer (``render_dashboard``) and the live
     per-request server (``serving_http``)."""
-    fact = m["fact_prices"]
-
-    # chart 1: price distribution box plot (app.py:84-124), with the
-    # reference's all-dates fallback when the Q1-2026 window is empty
-    pr = dashboard.price_distribution(fact, q1_2026_only=True)
-    title_range = "Q1 2026"
-    if pr.isEmpty():
-        pr = dashboard.price_distribution(fact, q1_2026_only=False)
-        rng = dashboard.effective_date_range(fact).collect()[0]
-        title_range = f"{rng['min_date']} – {rng['max_date']}"
-    box = (
-        pr.groupBy("category")
-        .agg(
-            F.expr(
-                "percentile(CAST(regular_price AS DOUBLE),"
-                " array(0.0, 0.25, 0.5, 0.75, 1.0))"
-            ).alias("p")
-        )
-        .orderBy(F.desc(F.col("p")[2]))
-        .collect()
-    )
-    box_rows = [(r["category"], *[float(v) for v in r["p"]]) for r in box]
+    # chart 1: price distribution box plot (app.py:84-124)
+    title_range, box = price_chart(m)
+    box_rows = [tuple(r) for r in box.collect()]
 
     # chart 2: per-state price summary (map stand-in; app.py:149-156)
-    st = dashboard.state_price_summary(m["mart_location_sales"]).orderBy(
+    st = DASHBOARD["state_price_summary"](m).orderBy(
         F.desc("state_avg_price")
     ).collect()
     st_rows = [(r["state"], float(r["state_avg_price"])) for r in st]
     st_products = {"products": [r["state_total_products"] for r in st]}
 
     # chart 3: stock-status mix (app.py:265-285)
-    mix = dashboard.stock_status_mix(fact).collect()
+    mix = DASHBOARD["stock_status_mix"](m).collect()
     statuses = sorted({r["status"] for r in mix})
     cats = sorted({r["category"] for r in mix})
     pct = {(r["category"], r["status"]): float(r["pct"]) for r in mix}
 
     # chart 4: discount depth (app.py:335-345)
-    dd = dashboard.discount_depth(fact).collect()
+    dd = DASHBOARD["discount_depth"](m).collect()
     dd_rows = [(r["category"], float(r["avg_discount_pct"])) for r in dd]
 
     # chart 5: category value map + medians (app.py:383-435)
-    cvm_df = dashboard.category_value_map(fact)
-    cvm = cvm_df.collect()
-    med = dashboard.value_map_medians(cvm_df).collect()[0]
+    cvm = DASHBOARD["category_value_map"](m).collect()
+    med = DASHBOARD["value_map_medians"](m).collect()[0]
     pts = [
         (
             r["category"],

@@ -11,13 +11,14 @@ Endpoints:
 
 - ``GET /``                 — the five-chart dashboard, re-rendered per
   request from live Spark queries (``serving.dashboard_html``)
-- ``GET /api/chart/<name>`` — one chart's backing frame as JSON rows
-  (names in ``CHART_QUERIES``)
+- ``GET /api/chart/<name>`` — one chart's frame as JSON rows, the same
+  frame the page draws (chart 1 is the per-category box of
+  ``runner.price_chart``; names in ``CHART_QUERIES``)
 - ``GET /api/charts``       — the available chart names
 - ``GET /healthz``          — liveness
 
 Scale posture: identical to the static path — every aggregate is a
-distributed Spark plan (``models.dashboard``) and the handler only
+distributed Spark plan (``runner.DASHBOARD``) and the handler only
 collects chart-sized frames, the sanctioned serving boundary
 (``serving.py``). At 100 TB the models dict points at pre-aggregated
 mart tables, so a page load costs a handful of mart scans, exactly like
@@ -36,22 +37,17 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
-from . import dashboard
+from .runner import DASHBOARD, price_chart
 from .serving import dashboard_html
 
-# name -> (models dict) -> chart-sized DataFrame
+# name -> (models dict) -> chart-sized DataFrame: chart 1 as the page
+# draws it, the other four straight from the frame table
 CHART_QUERIES: dict[str, Callable[[dict[str, DataFrame]], DataFrame]] = {
-    "price_distribution": lambda m: dashboard.price_distribution(
-        m["fact_prices"], q1_2026_only=False
-    ),
-    "state_price_summary": lambda m: dashboard.state_price_summary(
-        m["mart_location_sales"]
-    ),
-    "stock_status_mix": lambda m: dashboard.stock_status_mix(m["fact_prices"]),
-    "discount_depth": lambda m: dashboard.discount_depth(m["fact_prices"]),
-    "category_value_map": lambda m: dashboard.category_value_map(
-        m["fact_prices"]
-    ),
+    "price_distribution": lambda m: price_chart(m)[1],
+    "state_price_summary": DASHBOARD["state_price_summary"],
+    "stock_status_mix": DASHBOARD["stock_status_mix"],
+    "discount_depth": DASHBOARD["discount_depth"],
+    "category_value_map": DASHBOARD["category_value_map"],
 }
 
 _MAX_API_ROWS = 10_000  # serving boundary: chart frames, never table dumps
@@ -83,6 +79,9 @@ def make_handler(m: dict[str, DataFrame]) -> type[BaseHTTPRequestHandler]:
             self.end_headers()
             self.wfile.write(body)
 
+        def _json(self, code: int, obj) -> None:
+            self._send(code, json.dumps(obj).encode(), "application/json")
+
         def do_GET(self) -> None:  # noqa: N802 — BaseHTTPRequestHandler API
             path = self.path.split("?", 1)[0].rstrip("/") or "/"
             try:
@@ -93,33 +92,19 @@ def make_handler(m: dict[str, DataFrame]) -> type[BaseHTTPRequestHandler]:
                 elif path == "/healthz":
                     self._send(200, b"ok", "text/plain")
                 elif path == "/api/charts":
-                    self._send(
-                        200,
-                        json.dumps(sorted(CHART_QUERIES)).encode(),
-                        "application/json",
-                    )
+                    self._json(200, sorted(CHART_QUERIES))
                 elif path.startswith("/api/chart/"):
                     name = path.rsplit("/", 1)[1]
-                    fn = CHART_QUERIES.get(name)
-                    if fn is None:
-                        self._send(
-                            404,
-                            json.dumps(
-                                {"error": f"unknown chart {name!r}",
-                                 "charts": sorted(CHART_QUERIES)}
-                            ).encode(),
-                            "application/json",
-                        )
+                    if name in CHART_QUERIES:
+                        body = _frame_json(CHART_QUERIES[name](m))
+                        self._send(200, body, "application/json")
                     else:
-                        self._send(200, _frame_json(fn(m)), "application/json")
+                        self._json(404, {"error": f"unknown chart {name!r}",
+                                         "charts": sorted(CHART_QUERIES)})
                 else:
                     self._send(404, b"not found", "text/plain")
             except Exception as exc:  # surface, don't kill the server thread
-                self._send(
-                    500,
-                    json.dumps({"error": str(exc)}).encode(),
-                    "application/json",
-                )
+                self._json(500, {"error": str(exc)})
 
     return DashboardHandler
 
@@ -159,10 +144,3 @@ class DashboardServer:
 
     def __exit__(self, *exc) -> None:
         self.stop()
-
-
-def serve_dashboard(m: dict[str, DataFrame], host: str = "127.0.0.1",
-                    port: int = 8050) -> DashboardServer:
-    """Start serving and return the running server (the reference's
-    default Dash port is 8050; pass ``port=0`` for an ephemeral one)."""
-    return DashboardServer(m, host, port).start()

@@ -112,7 +112,8 @@ def _arrow_token_counts(
     frame-equal by test_text_arrow_featurization_matches_jvm_twin, and
     row-compared over the full sf10 corpus: EXP_TEXT_ARROW_SF10.json,
     code_commit 75cd1b4) — so
-    oracle parity does not depend on the dispatch. Emitted count
+    oracle parity does not depend on the dispatch; a NULL text gets the
+    JVM arm's ``size(NULL)`` in both. Emitted count
     columns are INT, matching ``F.size``'s type. ``passthrough``
     columns ride the batch unchanged (md5 fingerprints stay JVM-side:
     compute them BEFORE this pass and list them here). Only
@@ -158,6 +159,15 @@ def _arrow_token_counts(
     # workers never import this module (foreign-cwd drivers don't ship
     # the repo onto executor PYTHONPATH)
     pass_names = list(passthrough)
+    # a NULL text gets the JVM arm's size(NULL): -1 under the legacy
+    # sizeOfNull rule (on unless ANSI mode), NULL otherwise
+    conf = docs.sparkSession.conf
+    null_count = (
+        -1
+        if conf.get("spark.sql.legacy.sizeOfNull").lower() == "true"
+        and conf.get("spark.sql.ansi.enabled").lower() == "false"
+        else None
+    )
     count_spec = [
         (name, list(vocab) if vocab is not None else None)
         for name, vocab in counts.items()
@@ -193,6 +203,7 @@ def _arrow_token_counts(
                 cs = np.concatenate(([0], np.cumsum(m)))
                 return (cs[hi] - cs[lo]).astype(np.int32)
 
+            nulls = pc.is_null(text).to_numpy(zero_copy_only=False)
             cols = {n: batch.column(n) for n in pass_names}
             for name, vs in vocab_arrays:
                 mask = (
@@ -200,7 +211,12 @@ def _arrow_token_counts(
                     if vs is None
                     else pc.is_in(flat, value_set=vs)
                 )
-                cols[name] = pa.array(seg_count(mask), type=pa.int32())
+                cnt = seg_count(mask)
+                if null_count is None:
+                    cols[name] = pa.array(cnt, type=pa.int32(), mask=nulls)
+                else:
+                    cnt[nulls] = null_count
+                    cols[name] = pa.array(cnt, type=pa.int32())
             yield pa.RecordBatch.from_pydict(cols)
 
     return docs.select(*pass_names, "text").mapInArrow(featurize, out_schema)

@@ -108,16 +108,43 @@ def test_marts_read_the_written_fact(spark, tmp_path, kind):
 
 def test_dashboard_queries_run(models):
     res = dashboard_queries(models)
-    assert set(res) >= {
+    # the nine frames, in the order perfbench names its dashboard.* metrics
+    assert list(res) == [
         "price_distribution_q1",
+        "effective_date_range",
+        "category_median_price_order",
         "state_price_summary",
         "location_map",
         "stock_status_mix",
         "discount_depth",
         "category_value_map",
-    }
+        "value_map_medians",
+    ]
+    # the fixtures cover every chart: no frame is empty on them
     for name, df in res.items():
-        assert df.count() >= 0, name
+        assert not df.isEmpty(), name
+
+
+def test_pipeline_query_outputs_follow_the_schema_rule(spark, models):
+    """m01-m09 and d01-d09 normalize their model or dashboard frame by
+    one rule: no DECIMAL, no DATE, no ``fetched_at``, column order kept."""
+    from pyspark.sql.types import DateType, DecimalType
+
+    from product_data_pipelining_spark.models.runner import DASHBOARD
+    from product_data_pipelining_spark.registry import all_queries
+
+    prefixes = {f"{k}0{i}_" for k in "md" for i in range(1, 10)}
+    specs = {n: s for n, s in all_queries().items() if n[:4] in prefixes}
+    assert len(specs) == 18
+    for name, spec in specs.items():
+        # m0x_<model> / d0x_<frame>
+        src_name = name[4:]
+        src = (models if name[0] == "m" else dashboard_queries(models))[src_name]
+        out = spec.fn(spark, "").schema
+        assert out.names == [c for c in src.columns if c != "fetched_at"], name
+        bad = [f for f in out.fields if isinstance(f.dataType, (DecimalType, DateType))]
+        assert not bad, f"{name}: {bad}"
+    assert set(DASHBOARD) == {n[4:] for n in specs if n[0] == "d"}
 
 
 def test_rest_client_replay_roundtrip(spark):
@@ -860,6 +887,46 @@ def test_http_serving_layer_live_requests(spark):
         except urllib.error.HTTPError as e:
             assert e.code == 404
             assert "charts" in _json.loads(e.read())
+
+
+def test_price_chart_api_serves_the_page_box(spark, models, monkeypatch):
+    """/api/chart/price_distribution serves the page's chart 1: one box
+    row per category, not the price rows. The row cap sits below the
+    all-dates row count, so a body of price rows would be truncated."""
+    import json as _json
+    import urllib.request
+
+    from product_data_pipelining_spark.models import dashboard, runner, serving_http
+
+    rows = dashboard.price_distribution(models["fact_prices"], q1_2026_only=False)
+    monkeypatch.setattr(serving_http, "_MAX_API_ROWS", rows.count() - 1)
+    with serving_http.DashboardServer(models) as srv:
+        url = f"http://127.0.0.1:{srv.port}/api/chart/price_distribution"
+        body = _json.loads(urllib.request.urlopen(url, timeout=120).read())
+    assert not body["truncated"]
+    _, box = runner.price_chart(models)
+    assert body["columns"] == box.columns == [
+        "category", "min", "q1", "median", "q3", "max"
+    ]
+    assert sorted(body["rows"]) == sorted(list(r) for r in box.collect())
+    cats = [r[0] for r in body["rows"]]
+    assert len(cats) == len(set(cats)) == rows.select("category").distinct().count()
+
+
+def test_price_chart_falls_back_to_all_dates(models):
+    """With no Q1-2026 rows, chart 1 boxes every date and its title
+    names the global date range (the reference's fallback)."""
+    from pyspark.sql import functions as F
+
+    from product_data_pipelining_spark.models.runner import price_chart
+
+    q1 = F.col("effective_date").between("2026-01-01", "2026-03-31")
+    fact = models["fact_prices"].filter(~q1)
+    title, box = price_chart(dict(models, fact_prices=fact))
+    lo, hi = fact.agg(F.min("effective_date"), F.max("effective_date")).first()
+    assert title == f"{lo} – {hi}"
+    cats = fact.filter("regular_price > 0").select("category").dropna().distinct()
+    assert box.count() == cats.count() > 0
 
 
 def test_nice_ticks_fractional_magnitudes():

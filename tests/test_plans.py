@@ -7,6 +7,8 @@ lost partial aggregation), these fail before any benchmark would.
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from product_data_pipelining_spark.functions.skew import (
@@ -663,6 +665,39 @@ def test_text_arrow_featurization_matches_jvm_twin(spark, sf_dir, monkeypatch):
         a = {tuple(r) for r in arrow_df.collect()}
         b = {tuple(r) for r in jvm_df.collect()}
         assert a == b, name
+
+
+@pytest.mark.parametrize("ansi", ["false", "true"])
+def test_text_arrow_arms_agree_on_null_and_empty_text(spark, monkeypatch, ansi):
+    """Both featurization arms give a NULL text the JVM's ``size(NULL)``
+    (-1 under the legacy sizeOfNull rule, NULL in ANSI mode) and an
+    empty text zero counts."""
+    from product_data_pipelining_spark.operators.textops import (
+        LANG_MARKERS,
+        _arrow_token_counts,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "the a fast row"), (2, None), (3, "")], "doc_id long, text string"
+    )
+    counts = {"word_count": None, **LANG_MARKERS}
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        frames = {}
+        for arm in ("1", "0"):
+            monkeypatch.setenv("SPARK_GRAFT_TEXT_ARROW", arm)
+            df = _arrow_token_counts(docs, counts)
+            frames[arm] = (df.dtypes, sorted(map(tuple, df.collect())))
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+    assert frames["1"] == frames["0"]
+    null = -1 if ansi == "false" else None
+    assert frames["0"][1] == [
+        (1, 4, 3, 1, 0, 0),
+        (2, null, null, null, null, null),
+        (3, 0, 0, 0, 0, 0),
+    ]
 
 
 def test_text_arrow_dispatch_is_data_sized(spark, sf_dir, monkeypatch):
