@@ -437,6 +437,50 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
+# Suffix of the sibling directory a table is staged in before it replaces
+# the table. The benchmark's span names strip it (``snap_<table>__new``).
+STAGE_SUFFIX = "__new"
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the Hadoop API, so every
+    scheme Spark can read works."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def swap_stage(spark: SparkSession, stage: str, path: str) -> None:
+    """Replace ``path`` with ``stage``: delete the target, rename the stage
+    into place. A death between the two leaves only the stage, which
+    :func:`heal_stage` promotes; a failed rename keeps the stage too."""
+    fs, hpath = hadoop_fs(spark, path)
+    fs.delete(hpath, True)
+    if not fs.rename(hadoop_fs(spark, stage)[1], hpath):
+        raise IOError(f"rename {stage} -> {path} failed; the stage is kept")
+
+
+def heal_stage(spark: SparkSession, path: str) -> bool:
+    """Promote the stage a swap orphaned when it died after deleting
+    ``path``. Returns whether ``path`` exists afterwards."""
+    fs, hpath = hadoop_fs(spark, path)
+    if not fs.exists(hpath) and fs.exists(hadoop_fs(spark, path + STAGE_SUFFIX)[1]):
+        swap_stage(spark, path + STAGE_SUFFIX, path)
+    return fs.exists(hpath)
+
+
+def write_swapped(
+    df: DataFrame,
+    path: str,
+    partition_by: tuple[str, ...] = (),
+    sort_by: tuple[str, ...] = (),
+) -> None:
+    """Replace the table at ``path`` with ``df``: :func:`write_table` to
+    the stage, then :func:`swap_stage`. The target is never a write
+    destination, so a death while writing leaves it intact."""
+    write_table(df, path + STAGE_SUFFIX, partition_by, sort_by)
+    swap_stage(df.sparkSession, path + STAGE_SUFFIX, path)
+
+
 def table_file_stats(spark: SparkSession, path: str) -> dict:
     """File-level layout stats for a parquet table directory.
 
@@ -446,9 +490,7 @@ def table_file_stats(spark: SparkSession, path: str) -> dict:
     listing + task-scheduling overhead scales with it), ``total_bytes``,
     and ``max_file_bytes``/``min_file_bytes`` spread (skewed splits).
     """
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = hadoop_fs(spark, path)
     root = hpath.toUri().getPath()
     sizes = []
     it = fs.listFiles(hpath, True)
@@ -485,10 +527,11 @@ def compact_table(
     count. This job reads the table once, repartitions to
     ``ceil(total_bytes / target)`` output slices, optionally re-sorts
     within files (restoring min/max zone-map locality that incremental
-    appends destroy), and swaps the rewrite into place with the same
-    crash-safe stage-and-swap protocol as the parquet upsert target
-    (`operators/upsert.py` — orphaned stages are promoted by the next
-    reader).
+    appends destroy), and swaps the rewrite into place with
+    :func:`write_swapped`, the stage-and-swap every table replacement
+    uses. It starts with :func:`heal_stage`, so a table whose previous
+    compaction died between the delete and the rename is promoted from
+    its stage and then compacted.
 
     Partitioned tables keep their directory layout: rows shuffle on the
     partition columns (plus a deterministic salt when a single partition
@@ -505,6 +548,7 @@ def compact_table(
 
     Returns {"before": stats, "after": stats, "n_output_slices": n}.
     """
+    heal_stage(spark, path)
     before = table_file_stats(spark, path)
     target_bytes = target_file_mb * 1024 * 1024
     n_out = max(1, -(-before["total_bytes"] // target_bytes))
@@ -526,24 +570,8 @@ def compact_table(
         n_out = n_parts * k
     else:
         df = df.repartition(n_out)
-    if sort_by:
-        df = df.sortWithinPartitions(*sort_by)
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    stage_path = path + "_next"
-    hstage = jvm.org.apache.hadoop.fs.Path(stage_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(stage_path)
-    fs.delete(hpath, True)
-    if not fs.rename(hstage, hpath):
-        raise IOError(
-            f"compact: rename {stage_path} -> {path} failed; "
-            "stage dir preserved"
-        )
+    write_swapped(df, path, partition_by, sort_by)
     return {
         "before": before,
         "after": table_file_stats(spark, path),

@@ -11,8 +11,12 @@ the raw parquet scan through staging and the fact join).
 Load semantics (``main_pipeline.py:326-440``): rows are null-gated (S8)
 then upserted with ``INSERT OR REPLACE`` per primary key. On Spark the
 upsert is deterministic last-writer-wins
-(:func:`..operators.upsert.upsert_last_writer_wins`) keyed like the
-reference DDL (``main_pipeline.py:283,297,320``).
+(:func:`..operators.upsert.upsert_last_writer_wins`, the engine's one
+ranking: newest ``fetched_at``, ties to the greater row) keyed like the
+reference DDL (``main_pipeline.py:283,297,320``). The incremental
+runner's snapshots are replaced by the stage-and-swap every table
+replacement uses (:func:`..io.write_swapped`) and heal after a crash
+mid-swap.
 
 Materialization mirrors dbt's config (``dbt_project.yml:33-40``):
 staging = never persisted (views); dims/fact/marts = parquet tables,
@@ -25,12 +29,12 @@ join is done once and the three marts scan its parquet output.
 from __future__ import annotations
 
 import os
-import shutil
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import heal_stage, write_swapped
 from ..operators.upsert import merge_upsert, upsert_last_writer_wins
 from . import dashboard, marts, staging
 
@@ -70,9 +74,7 @@ def _load(
     keep = F.col(gate).isNotNull()
     if where is not None:
         keep = keep & where
-    return upsert_last_writer_wins(
-        df.filter(keep), keys, version_col="fetched_at", tiebreak=df.columns
-    )
+    return upsert_last_writer_wins(df.filter(keep), keys, version_col="fetched_at")
 
 
 def load_raw(spark: SparkSession, raw_dir: str) -> dict[str, DataFrame]:
@@ -201,21 +203,20 @@ def run_incremental(
 
     Requires prior ``out_dir/snap_raw_*`` snapshots (:func:`seed_snapshots`
     or an earlier ``run_incremental``); writes updated snapshots back
-    before rebuilding.
+    before rebuilding, each through :func:`..io.write_swapped` (stage to
+    ``snap_<table>__new``, then delete and rename). A snapshot whose
+    swap died between the delete and the rename is first promoted from
+    its stage (:func:`..io.heal_stage`), so the next run picks up where
+    the dead one stopped.
     """
     raw: dict[str, DataFrame] = {}
     for name in RAW_TABLES:
+        snap = os.path.join(out_dir, f"snap_{name}")
+        heal_stage(spark, snap)
         fresh = _load(spark, raw_dir, name, F.col("fetched_at") > F.lit(since))
-        snap_path = os.path.join(out_dir, f"snap_{name}")
-        keys = _LOAD_SPEC[name][0]
-        merged = merge_upsert(spark.read.parquet(snap_path), fresh, keys)
-        tmp = snap_path + "__new"
-        merged.write.mode("overwrite").parquet(tmp)
-        # swap: re-point the snapshot (atomic-rename territory on a real
-        # object store; plain overwrite-by-rename locally)
-        shutil.rmtree(snap_path)
-        os.rename(tmp, snap_path)
-        raw[name] = spark.read.parquet(snap_path)
+        merged = merge_upsert(spark.read.parquet(snap), fresh, _LOAD_SPEC[name][0])
+        write_swapped(merged, snap)
+        raw[name] = spark.read.parquet(snap)
     return build_models(raw, out_dir)
 
 

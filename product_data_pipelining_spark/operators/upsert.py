@@ -3,14 +3,18 @@
 The reference enforces primary keys with DuckDB ``INSERT OR REPLACE``
 (``portfolio_app/scripts/main_pipeline.py:326-352,420-435``). Spark's
 immutable storage has no PK enforcement, so the engine provides
-last-writer-wins semantics as a deterministic ranking window:
+last-writer-wins semantics as one deterministic ranking window,
+:func:`upsert_last_writer_wins`:
 
-    row_number() OVER (PARTITION BY pk ORDER BY version DESC, tiebreak) = 1
+    row_number() OVER (PARTITION BY pk
+                       ORDER BY version DESC, <every other column> DESC) = 1
 
-This is the plain-Parquet fallback; on Delta Lake the same API maps to
-``MERGE WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT``. At 100 TB the
-window shuffles once on the PK hash — the same shuffle a MERGE would do —
-and AQE splits skewed keys.
+Every keyed upsert uses it: the pipeline load, the parquet upsert
+targets (over stored rows tagged below incoming ones) and the Delta
+target's source dedup. The targets replace files with the stage-and-swap
+in :mod:`..io` (:func:`..io.write_swapped`, :func:`..io.heal_stage`).
+At 100 TB the window shuffles once on the PK hash — the same shuffle a
+MERGE would do — and AQE splits skewed keys.
 """
 
 from __future__ import annotations
@@ -20,9 +24,19 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import (
+    STAGE_SUFFIX,
+    hadoop_fs,
+    heal_stage,
+    load_table,
+    swap_stage,
+    write_swapped,
+)
 from ..functions.rounding import duck_round
 from ..registry import register
+
+_SRC = "__pdp_src__"
+_RN = "__pdp_rn__"
 
 
 def _contains_map(dt) -> bool:
@@ -45,25 +59,29 @@ def _contains_map(dt) -> bool:
 
 
 def upsert_last_writer_wins(
-    df: DataFrame,
-    keys: Sequence[str],
-    version_col: str,
-    tiebreak: Sequence[str] = (),
+    df: DataFrame, keys: Sequence[str], version_col: str
 ) -> DataFrame:
     """Keep exactly one row per key: highest ``version_col`` wins.
 
     Deterministic replacement for ``INSERT OR REPLACE`` — equivalent to
     replaying inserts in ``version_col`` order (``main_pipeline.py:347``,
-    where later fetches replace earlier rows). ``tiebreak`` columns make
-    the winner stable when versions collide (SURVEY §2.9: dropDuplicates
-    is arbitrary-winner, so we never use it for upserts).
+    where later fetches replace earlier rows). On a version tie the row
+    that is greater on every other orderable column, taken in column
+    order, wins, so the kept row is a function of the data, not of task
+    scheduling (SURVEY §2.9: dropDuplicates is arbitrary-winner, so we
+    never use it for upserts). Columns holding a map at any depth cannot
+    be sorted and are left out of the tie order.
     """
-    order = [F.desc(version_col)] + [F.asc(c) for c in tiebreak]
-    w = Window.partitionBy(*keys).orderBy(*order)
+    rest = [
+        F.col(f.name).desc()
+        for f in df.schema.fields
+        if f.name not in (*keys, version_col) and not _contains_map(f.dataType)
+    ]
+    w = Window.partitionBy(*keys).orderBy(F.col(version_col).desc(), *rest)
     return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+        df.withColumn(_RN, F.row_number().over(w))
+        .filter(F.col(_RN) == 1)
+        .drop(_RN)
     )
 
 
@@ -77,41 +95,25 @@ def merge_upsert(existing: DataFrame, updates: DataFrame, keys: Sequence[str]) -
     return existing_only.unionByName(updates)
 
 
-def _last_writer_dedup(
+def _reject_reserved(updates: DataFrame, *names: str) -> None:
+    for c in (_SRC, _RN, *names):
+        if c in updates.columns:
+            raise ValueError(f"upsert: input must not contain reserved column {c!r}")
+
+
+def _merged(
     existing: "DataFrame | None",
     updates: DataFrame,
     keys: Sequence[str],
     version_col: str,
-    src_col: str,
-    rn_col: str,
 ) -> DataFrame:
-    """Shared MERGE ranking: version desc, update-beats-stored on ties,
-    then every remaining orderable column desc — the kept row is a pure
-    function of the data, not of task scheduling. Columns containing a
-    map at ANY nesting depth (map, array<map>, struct<...map...>) can't
-    be sorted — ties differing only there fall back to src ordering."""
-    updates = updates.withColumn(src_col, F.lit(1))
+    """:func:`upsert_last_writer_wins` over the stored and incoming rows.
+    A source flag leads the tie columns, so an update beats a stored row
+    of the same version (a replayed batch re-applies idempotently)."""
+    rows = updates.select(F.lit(1).alias(_SRC), "*")
     if existing is not None:
-        combined = existing.withColumn(src_col, F.lit(0)).unionByName(updates)
-    else:
-        combined = updates
-    fields = {f.name: f.dataType for f in combined.schema.fields}
-    rest = [
-        c
-        for c in combined.columns
-        if c not in (*keys, version_col, src_col)
-        and not _contains_map(fields[c])
-    ]
-    w = Window.partitionBy(*keys).orderBy(
-        F.col(version_col).desc(),
-        F.col(src_col).desc(),
-        *[F.col(c).desc() for c in rest],
-    )
-    return (
-        combined.withColumn(rn_col, F.row_number().over(w))
-        .filter(F.col(rn_col) == 1)
-        .drop(rn_col, src_col)
-    )
+        rows = existing.select(F.lit(0).alias(_SRC), "*").unionByName(rows)
+    return upsert_last_writer_wins(rows, keys, version_col).drop(_SRC)
 
 
 class UpsertTarget:
@@ -124,9 +126,9 @@ class UpsertTarget:
     (so a replayed batch re-applies idempotently). Implementations:
 
     - :class:`ParquetUpsertTarget` — plain-Parquet stand-in: read the
-      target, rank with a ``row_number`` window, stage-and-swap rewrite.
-      Correct anywhere, but every merge rewrites the full target; fine
-      for marts and tests, wrong for a 100 TB fact table.
+      target, rank with :func:`upsert_last_writer_wins`, stage-and-swap
+      rewrite. Correct anywhere, but every merge rewrites the full
+      target; fine for marts and tests, wrong for a 100 TB fact table.
     - :class:`DeltaUpsertTarget` — the 100 TB path: a transactional
       ``MERGE INTO`` that rewrites only the files containing matched
       keys. Requires the ``delta-spark`` package + Delta-enabled
@@ -152,40 +154,20 @@ class UpsertTarget:
 
 
 class ParquetUpsertTarget(UpsertTarget):
-    """Plain-Parquet upsert with a crash-safe stage-and-swap rewrite.
+    """Plain-Parquet upsert with a crash-safe full rewrite.
 
-    Swap protocol (all FS ops through the Hadoop FileSystem handle, so
-    any supported scheme works):
-
-    1. if the target is missing but the stage dir exists, a previous
-       merge died between delete and rename — the stage holds the
-       complete merged history, so promote it first;
-    2. write the merged result to the stage dir (the target is never a
-       write destination — a mid-write death leaves it intact);
-    3. delete the target, rename the stage into place. A death between
-       3's delete and rename is healed by step 1 on the next merge.
+    Every merge writes the merged table through :func:`..io.write_swapped`
+    (the target is never a write destination, so a mid-write death leaves
+    it intact), and :meth:`read` first promotes a stage orphaned by a
+    death between the swap's delete and rename (:func:`..io.heal_stage`).
     """
-
-    _SRC = "__pdp_src__"
-    _RN = "__pdp_rn__"
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self._stage = path + "_next"
-
-    def _fs_and_paths(self):
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(self.path)
-        hstage = jvm.org.apache.hadoop.fs.Path(self._stage)
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs, hpath, hstage
 
     def read(self) -> "DataFrame | None":
-        fs, hpath, hstage = self._fs_and_paths()
-        if not fs.exists(hpath) and fs.exists(hstage):
-            fs.rename(hstage, hpath)  # promote orphaned stage (step 1)
-        if not fs.exists(hpath):
+        if not heal_stage(self.spark, self.path):
             return None
         return self.spark.read.parquet(self.path)
 
@@ -195,23 +177,8 @@ class ParquetUpsertTarget(UpsertTarget):
         keys: Sequence[str],
         version_col: str,
     ) -> None:
-        for c in (self._SRC, self._RN):
-            if c in updates.columns:
-                raise ValueError(
-                    f"upsert: input must not contain reserved column {c!r}"
-                )
-        existing = self.read()
-        deduped = _last_writer_dedup(
-            existing, updates, keys, version_col, self._SRC, self._RN
-        )
-        fs, hpath, hstage = self._fs_and_paths()
-        deduped.write.mode("overwrite").parquet(self._stage)
-        fs.delete(hpath, True)
-        if not fs.rename(hstage, hpath):
-            raise IOError(
-                f"upsert: rename {self._stage} -> {self.path} failed; "
-                "stage dir preserved for the next merge's promotion path"
-            )
+        _reject_reserved(updates)
+        write_swapped(_merged(self.read(), updates, keys, version_col), self.path)
 
 
 class DeltaUpsertTarget(UpsertTarget):
@@ -306,27 +273,24 @@ class BucketedParquetUpsertTarget(UpsertTarget):
       (partition pruning — ``PartitionFilters`` in the scan, untouched
       buckets are never opened);
     - the rewrite stages ONLY those buckets and swaps them one
-      directory at a time.
+      directory at a time (:func:`..io.swap_stage`).
 
     Crash protocol (documented tradeoff vs a transaction log: the swap
     loop is per-bucket atomic, not all-or-nothing): a stage dir is
-    complete iff Spark's ``_SUCCESS`` marker exists. On every
-    merge/read, first heal: if a complete stage exists, re-run its
-    bucket swaps (delete target bucket, rename stage bucket in) and
-    remove the stage; an incomplete stage is discarded (the target was
-    never touched). A crash mid-swap leaves some buckets new and some
-    old — re-running the LAST batch (idempotent by version ranking) or
-    the heal path restores consistency; readers in the window see a
-    torn-but-valid parquet table, which is exactly the guarantee plain
-    parquet can offer without a log.
+    complete iff Spark's ``_SUCCESS`` marker exists. Every merge/read
+    first heals: if a complete stage exists, re-run its bucket swaps
+    and remove the stage; an incomplete stage is discarded (the target
+    was never touched). A merge's own swaps are that same heal, run
+    right after the stage is written. A crash mid-swap leaves some
+    buckets new and some old — the heal path restores consistency;
+    readers in the window see a torn-but-valid parquet table, which is
+    exactly the guarantee plain parquet can offer without a log.
 
     At 100 TB with n_buckets sized so a bucket ~= a few GB, a 1%-spread
     batch rewrites ~1% of the table; the same layout co-locates
     merge-key joins (the write IS the bucketing pass).
     """
 
-    _SRC = "__pdp_src__"
-    _RN = "__pdp_rn__"
     _BUCKET = "__pdp_bucket__"
 
     def __init__(self, spark: SparkSession, path: str, n_buckets: int = 64):
@@ -335,16 +299,11 @@ class BucketedParquetUpsertTarget(UpsertTarget):
         self.spark = spark
         self.path = path.rstrip("/")
         self.n_buckets = n_buckets
-        self._stage = self.path + "_next"
+        self._stage = self.path + STAGE_SUFFIX
 
-    # -- filesystem plumbing -------------------------------------------
-    def _fs(self):
-        jvm = self.spark._jvm
-        mkpath = jvm.org.apache.hadoop.fs.Path
-        fs = mkpath(self.path).getFileSystem(
-            self.spark._jsc.hadoopConfiguration()
-        )
-        return fs, mkpath
+    def _exists(self, path: str) -> bool:
+        fs, hpath = hadoop_fs(self.spark, path)
+        return fs.exists(hpath)
 
     def _bucket_col(self, keys: Sequence[str]) -> F.Column:
         parts = [F.col(k).cast("string") for k in keys]
@@ -353,48 +312,34 @@ class BucketedParquetUpsertTarget(UpsertTarget):
         ).cast("int")
 
     def _heal(self) -> None:
-        """Finish or discard a previous merge's stage directory."""
-        fs, mkpath = self._fs()
-        hstage = mkpath(self._stage)
+        """Finish (swap every bucket in) or discard the stage directory."""
+        fs, hstage = hadoop_fs(self.spark, self._stage)
         if not fs.exists(hstage):
             return
-        if not fs.exists(mkpath(self._stage + "/_SUCCESS")):
-            fs.delete(hstage, True)  # incomplete write; target untouched
-            return
-        fs.mkdirs(mkpath(self.path))
-        for st in fs.listStatus(hstage):
-            name = st.getPath().getName()
-            if not name.startswith(self._BUCKET + "="):
-                continue
-            tgt = mkpath(self.path + "/" + name)
-            if fs.exists(tgt):
-                fs.delete(tgt, True)
-            fs.rename(st.getPath(), tgt)
-        fs.delete(hstage, True)
+        if self._exists(self._stage + "/_SUCCESS"):
+            fs.mkdirs(hadoop_fs(self.spark, self.path)[1])
+            for st in fs.listStatus(hstage):
+                name = st.getPath().getName()
+                if name.startswith(self._BUCKET + "="):
+                    swap_stage(
+                        self.spark, f"{self._stage}/{name}", f"{self.path}/{name}"
+                    )
+        fs.delete(hstage, True)  # done, or incomplete (target untouched)
 
     # -- UpsertTarget --------------------------------------------------
     def read(self) -> "DataFrame | None":
         self._heal()
-        fs, mkpath = self._fs()
-        if not fs.exists(mkpath(self.path)):
+        fs, hpath = hadoop_fs(self.spark, self.path)
+        if not fs.exists(hpath):
             return None
-        names = [
-            st.getPath().getName()
-            for st in fs.listStatus(mkpath(self.path))
-        ]
+        names = [st.getPath().getName() for st in fs.listStatus(hpath)]
         if not any(n.startswith(self._BUCKET + "=") for n in names):
             return None  # dir exists but holds no bucket partitions yet
         return self.spark.read.parquet(self.path).drop(self._BUCKET)
 
     def _read_buckets(self, buckets: Sequence[int]) -> "DataFrame | None":
-        fs, mkpath = self._fs()
-        if not fs.exists(mkpath(self.path)):
-            return None
-        existing = [
-            b
-            for b in buckets
-            if fs.exists(mkpath(f"{self.path}/{self._BUCKET}={b}"))
-        ]
+        paths = [f"{self.path}/{self._BUCKET}={b}" for b in buckets]
+        existing = [p for p in paths if self._exists(p)]
         if not existing:
             return None
         # basePath keeps the partition column in scope while the path
@@ -402,9 +347,7 @@ class BucketedParquetUpsertTarget(UpsertTarget):
         # bucket's files are even listed
         return (
             self.spark.read.option("basePath", self.path)
-            .parquet(
-                *[f"{self.path}/{self._BUCKET}={b}" for b in existing]
-            )
+            .parquet(*existing)
             .drop(self._BUCKET)
         )
 
@@ -414,11 +357,7 @@ class BucketedParquetUpsertTarget(UpsertTarget):
         keys: Sequence[str],
         version_col: str,
     ) -> None:
-        for c in (self._SRC, self._RN, self._BUCKET):
-            if c in updates.columns:
-                raise ValueError(
-                    f"upsert: input must not contain reserved column {c!r}"
-                )
+        _reject_reserved(updates, self._BUCKET)
         self._heal()
         updates = updates.withColumn(self._BUCKET, self._bucket_col(keys))
         # bounded by n_buckets (a layout constant), never by batch size
@@ -428,37 +367,18 @@ class BucketedParquetUpsertTarget(UpsertTarget):
         )
         if not affected:
             return
-        existing = self._read_buckets(affected)
-        deduped = _last_writer_dedup(
-            existing,
+        merged = _merged(
+            self._read_buckets(affected),
             updates.drop(self._BUCKET),
             keys,
             version_col,
-            self._SRC,
-            self._RN,
         ).withColumn(self._BUCKET, self._bucket_col(keys))
-        fs, mkpath = self._fs()
         (
-            deduped.write.mode("overwrite")
+            merged.write.mode("overwrite")
             .partitionBy(self._BUCKET)
             .parquet(self._stage)
         )
-        # per-bucket swap; a crash here is healed by _heal() next call
-        fs.mkdirs(mkpath(self.path))
-        for b in affected:
-            name = f"{self._BUCKET}={b}"
-            src = mkpath(self._stage + "/" + name)
-            if not fs.exists(src):
-                continue  # batch had rows for b but all lost ties — impossible; guard anyway
-            tgt = mkpath(self.path + "/" + name)
-            if fs.exists(tgt):
-                fs.delete(tgt, True)
-            if not fs.rename(src, tgt):
-                raise IOError(
-                    f"upsert: rename {src} -> {tgt} failed; stage kept "
-                    "for the next call's heal pass"
-                )
-        fs.delete(mkpath(self._stage), True)
+        self._heal()  # swaps each written bucket into the target
 
 
 @register(

@@ -15,6 +15,7 @@ from unittest import mock
 import pytest
 
 SCRIPTS = Path(__file__).resolve().parents[1] / "scripts"
+PERFBENCH = SCRIPTS.parent / "perfbench"
 sys.path.insert(0, str(SCRIPTS))
 
 POSTURE_ENV = ("SPARK_GRAFT_CACHE_TABLES", "SPARK_GRAFT_PLAN_CACHE",
@@ -144,3 +145,16 @@ def test_script_compiles_and_answers_help(path, tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert proc.stdout.startswith("usage:")
+
+
+def test_snapshot_stage_writes_are_traced_as_upsert(monkeypatch):
+    """The benchmark names the span of a ``snap_<table>`` stage write after
+    the raw table it upserts; a stage suffix it does not strip would read
+    the traced ``upsert.*`` metrics as 0."""
+    from product_data_pipelining_spark.io import STAGE_SUFFIX
+
+    monkeypatch.syspath_prepend(str(PERFBENCH))
+    import refresh
+
+    name = f"snap_raw_product_prices{STAGE_SUFFIX}"
+    assert refresh.layer_of(name) == "upsert.raw_product_prices"

@@ -670,6 +670,73 @@ def test_delta_merge_builder_contract(spark, tmp_path):
     assert _FakeDeltaTable.last_builder.cond == "t.k1 = u.k1 AND t.k2 = u.k2"
 
 
+def test_version_tie_keeps_the_same_row_on_every_upsert_path(spark, tmp_path):
+    """One last-writer-wins rule: on a version tie every keyed upsert —
+    the pipeline load, the parquet and bucketed targets, the streaming
+    sink and the Delta target's source dedup — keeps the same row, the
+    one greater on the other columns, whatever the input order."""
+    from product_data_pipelining_spark.models.runner import _load
+    from product_data_pipelining_spark.operators.upsert import (
+        BucketedParquetUpsertTarget,
+        ParquetUpsertTarget,
+    )
+    from product_data_pipelining_spark.streaming.stateful import (
+        foreach_batch_upsert,
+    )
+
+    schema = "location_id long, fetched_at long, payload string"
+    batch = spark.createDataFrame(
+        [(1, 10, "a"), (1, 10, "z"), (2, 10, "z"), (2, 10, "a")], schema
+    )
+    keys, version = ["location_id"], "fetched_at"
+    want = {(1, 10, "z"), (2, 10, "z")}
+
+    raw_dir = tmp_path / "raw"
+    batch.write.parquet(str(raw_dir / "raw_locations.parquet"))
+    kept = {"load": _load(spark, str(raw_dir), "raw_locations")}
+    targets = {
+        "parquet": ParquetUpsertTarget(spark, str(tmp_path / "pq")),
+        "bucketed": BucketedParquetUpsertTarget(spark, str(tmp_path / "bk"), 4),
+        "delta_source": _fake_delta_target(spark, str(tmp_path / "dt")),
+    }
+    for name, tgt in targets.items():
+        tgt.merge(batch, keys, version)
+        kept[name] = tgt.read()
+    src = spark.readStream.schema(schema).parquet(
+        str(raw_dir / "raw_locations.parquet")
+    )
+    foreach_batch_upsert(src, str(tmp_path / "st"), keys, version).awaitTermination(180)
+    kept["stream"] = spark.read.parquet(str(tmp_path / "st"))
+    got = {name: {tuple(r) for r in df.collect()} for name, df in kept.items()}
+    assert got == {name: want for name in kept}
+
+
+def test_incremental_run_heals_a_snapshot_swap_that_died(spark, tmp_path):
+    """A run that died between deleting a snapshot and renaming its stage
+    into place leaves only ``snap_<t>__new``; the next incremental run
+    promotes it and still equals the full refresh."""
+    import os
+
+    from product_data_pipelining_spark.io import STAGE_SUFFIX
+    from product_data_pipelining_spark.models.runner import (
+        MATERIALIZED,
+        run_incremental,
+        seed_snapshots,
+    )
+
+    raw_dir = ensure_fixtures()
+    out = str(tmp_path / "incr")
+    cutoff = "2026-02-01 13:00:00"
+    seed_snapshots(spark, raw_dir, out, until=cutoff)
+    snap = os.path.join(out, "snap_raw_product_prices")
+    os.rename(snap, snap + STAGE_SUFFIX)
+    incr = run_incremental(spark, raw_dir, out, since=cutoff)
+    full = build_models(load_raw(spark, raw_dir))
+    for name in MATERIALIZED:
+        assert _rows(incr[name]) == _rows(full[name]), name
+    assert not os.path.exists(snap + STAGE_SUFFIX)
+
+
 def test_delta_upsert_target_real_engine_if_installed(tmp_path):
     """On a machine WITH delta-spark, the same merge rounds run
     unmodified against the real engine; here the import raises and the
@@ -1428,6 +1495,7 @@ def test_bucketed_merge_prunes_and_matches(spark, tmp_path):
     not rewritten), and a complete orphaned stage heals on next read."""
     import os
 
+    from product_data_pipelining_spark.io import STAGE_SUFFIX
     from product_data_pipelining_spark.operators.upsert import (
         BucketedParquetUpsertTarget,
     )
@@ -1474,7 +1542,7 @@ def test_bucketed_merge_prunes_and_matches(spark, tmp_path):
     for d, files in before.items():
         if int(d.split("=")[1]) not in affected:
             assert after[d] == files, f"unaffected bucket {d} was rewritten"
-    assert not os.path.exists(path + "_next"), "stage not cleaned up"
+    assert not os.path.exists(path + STAGE_SUFFIX), "stage not cleaned up"
 
     got = {r.k: (r.v, r.payload) for r in t.read().collect()}
     exp = {k: (1, f"a{k}") for k in range(100)}
@@ -1485,7 +1553,7 @@ def test_bucketed_merge_prunes_and_matches(spark, tmp_path):
     # heal: fabricate a "crashed after stage write" state — a complete
     # stage holding a rewritten bucket — and confirm read() promotes it
     some_bucket = sorted(after)[0]
-    stage = path + "_next"
+    stage = path + STAGE_SUFFIX
     os.makedirs(stage)
     open(os.path.join(stage, "_SUCCESS"), "w").close()
     os.rename(os.path.join(path, some_bucket), os.path.join(stage, some_bucket))

@@ -198,6 +198,24 @@ def test_compact_table_defragments_and_preserves_content(spark, sf_dir, tmp_path
     )
 
 
+def test_compact_table_heals_a_swap_that_died(spark, sf_dir, tmp_path):
+    """A previous compaction that died between deleting the table and
+    renaming its stage into place left only the stage: compact_table
+    promotes it first, then compacts it, and loses no row."""
+    import os
+
+    from product_data_pipelining_spark.io import STAGE_SUFFIX, compact_table
+
+    path = str(tmp_path / "orphaned")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li.repartition(8).write.parquet(path + STAGE_SUFFIX)
+    out = compact_table(spark, path, target_file_mb=128)
+    assert out["before"]["n_files"] >= 8
+    assert out["after"]["n_files"] == 1
+    assert not os.path.exists(path + STAGE_SUFFIX)
+    assert spark.read.parquet(path).count() == li.count()
+
+
 def test_compact_partitioned_table_keeps_layout_and_pruning(spark, sf_dir, tmp_path):
     """Partitioned compaction merges files WITHIN each partition dir and
     the compacted table still partition-prunes."""

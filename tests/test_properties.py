@@ -9,8 +9,8 @@ inputs:
 2. ``det_sum`` is partition-layout-independent AND equals its DuckDB
    twin ``sql_det_sum`` — the property that makes distributed floating
    aggregation reproducible at any cluster size.
-3. Last-writer-wins upsert keeps exactly the max-version row per key
-   regardless of input order.
+3. Last-writer-wins upsert keeps exactly the max-version row per key,
+   ties going to the greater row, regardless of input order.
 
 Examples are kept small (each one round-trips through a Spark job);
 hypothesis explores the value space, not the volume space.
@@ -136,7 +136,8 @@ def test_det_sum_is_partition_independent_and_matches_duckdb(
     rows=st.lists(
         st.tuples(
             st.integers(min_value=0, max_value=3),  # key
-            st.integers(min_value=0, max_value=9),  # version
+            st.integers(min_value=0, max_value=3),  # version: ties are common
+            st.integers(min_value=0, max_value=2),  # payload
         ),
         min_size=1,
         max_size=12,
@@ -144,21 +145,22 @@ def test_det_sum_is_partition_independent_and_matches_duckdb(
 )
 @_SETTINGS
 def test_last_writer_wins_keeps_max_version_per_key(spark, rows):
-    from pyspark.sql import Window
+    from product_data_pipelining_spark.operators.upsert import (
+        upsert_last_writer_wins,
+    )
 
-    df = spark.createDataFrame(rows, "k int, ver int")
-    w = Window.partitionBy("k").orderBy(F.desc("ver"))
-    got = {
-        (r["k"], r["ver"])
-        for r in df.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("k", "ver")
-        .collect()
-    }
+    def kept(rs, n_parts):
+        df = spark.createDataFrame(rs, "k int, ver int, payload int")
+        out = upsert_last_writer_wins(df.repartition(n_parts), ["k"], "ver")
+        return sorted(tuple(r) for r in out.collect())
+
+    got = kept(rows, 1)
     want = {}
-    for k, ver in rows:
-        want[k] = max(want.get(k, -1), ver)
-    assert got == {(k, v) for k, v in want.items()}, (rows, got)
+    for k, ver, payload in rows:
+        want[k] = max(want.get(k, (-1, -1)), (ver, payload))
+    # max version per key; a tie goes to the greater payload
+    assert got == sorted((k, *vp) for k, vp in want.items()), (rows, got)
+    assert kept(rows[::-1], 3) == got, rows
 
 
 def test_vectorized_normalize_matches_per_cell():

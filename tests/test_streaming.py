@@ -189,32 +189,26 @@ def test_stream_stream_attribution_join_matches_batch(spark, replay_dir):
 
 
 def test_foreach_batch_upsert_matches_batch_last_writer(spark, replay_dir, tmp_path):
+    from product_data_pipelining_spark.operators.upsert import (
+        upsert_last_writer_wins,
+    )
     from product_data_pipelining_spark.streaming.stateful import (
         foreach_batch_upsert,
     )
 
+    cols = ("user_id", "event_type", "event_id", "ts", "value")
+    keys = ["user_id", "event_type"]
     target = str(tmp_path / "upsert_target")
-    src = _stream_source(spark, replay_dir).select(
-        "user_id", "event_type", "event_id", "ts", "value"
-    )
-    q = foreach_batch_upsert(src, target, ["user_id", "event_type"], "ts")
+    src = _stream_source(spark, replay_dir).select(*cols)
+    q = foreach_batch_upsert(src, target, keys, "ts")
     q.awaitTermination(180)
     got = spark.read.parquet(target)
-    batch = spark.read.parquet(replay_dir)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id", "event_type").orderBy(F.col("ts").desc())
-    want = (
-        batch.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    assert got.count() == want.count()
-    # same (user, type) -> latest ts mapping; event_id may differ on ts
-    # ties, so compare the deterministic columns
-    g = {(r["user_id"], r["event_type"], r["ts"]) for r in got.collect()}
-    x = {(r["user_id"], r["event_type"], r["ts"]) for r in want.collect()}
-    assert g == x
+    batch = spark.read.parquet(replay_dir).select(*cols)
+    want = upsert_last_writer_wins(batch, keys, "ts")
+    # whole rows: ts ties are broken by the same rule on both sides
+    g = [tuple(r) for r in got.collect()]
+    assert sorted(g) == sorted(tuple(r) for r in want.collect())
+    assert len(g) == len(set(g))
 
 
 def test_streaming_sliding_counts_match_batch(spark, replay_dir):
@@ -264,6 +258,7 @@ def test_foreach_batch_upsert_promotes_orphaned_stage(spark, tmp_path):
     history and the target is missing. The next merge must promote the
     stage before merging — treating the replayed batch as a first batch
     would silently drop all prior history."""
+    from product_data_pipelining_spark.io import STAGE_SUFFIX
     from product_data_pipelining_spark.streaming.stateful import (
         foreach_batch_upsert,
     )
@@ -274,7 +269,7 @@ def test_foreach_batch_upsert_promotes_orphaned_stage(spark, tmp_path):
         [(1, "a", 10, 1.0), (2, "b", 20, 2.0)],
         "user_id long, event_type string, ts long, value double",
     )
-    hist.write.parquet(target + "_next")
+    hist.write.parquet(target + STAGE_SUFFIX)
     # replayed micro-batch: updates user 1, adds user 3
     replay_dir = str(tmp_path / "replay_src")
     spark.createDataFrame(
