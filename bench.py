@@ -8,7 +8,8 @@ Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 Prints {"metric": ..., "value": <spark total sec>, "unit": "sec",
         "queries": {name: sec, ...}, "sf": ...,
         "duckdb_total_sec": ..., "duckdb_queries": {...},
-        "spark_oracled_sec": ..., "ratio_vs_duckdb": ...}.
+        "spark_oracled_sec": ..., "ratio_vs_duckdb": ...,
+        "driver_java_options": <the JIT posture's JVM flags, "" = C2 on>}.
 
 The DuckDB baseline is measured IN-PROCESS, interleaved per query with the
 Spark measurement, so sandbox contention (the dominant noise source on a
@@ -234,6 +235,11 @@ def main() -> None:
                 "queries_rel_spread": spread,
                 "sf": SF_DIR,
                 "cpus": CPUS,
+                # the JIT posture this headline ran under (session.py:
+                # the serving profile sets none, so C2 stays on)
+                "driver_java_options": spark.sparkContext.getConf().get(
+                    "spark.driver.defaultJavaOptions", ""
+                ),
                 "repeats": REPEATS,
                 "only": HEADLINE if _ONLY else None,
                 "duckdb_total_sec": duck_total,

@@ -461,10 +461,17 @@ def swap_stage(spark: SparkSession, stage: str, path: str) -> None:
 
 def heal_stage(spark: SparkSession, path: str) -> bool:
     """Promote the stage a swap orphaned when it died after deleting
-    ``path``. Returns whether ``path`` exists afterwards."""
+    ``path``; a stage without Spark's ``_SUCCESS`` marker is a write that
+    died and is deleted instead. Returns whether ``path`` exists
+    afterwards."""
     fs, hpath = hadoop_fs(spark, path)
-    if not fs.exists(hpath) and fs.exists(hadoop_fs(spark, path + STAGE_SUFFIX)[1]):
-        swap_stage(spark, path + STAGE_SUFFIX, path)
+    stage = path + STAGE_SUFFIX
+    hstage = hadoop_fs(spark, stage)[1]
+    if not fs.exists(hpath) and fs.exists(hstage):
+        if fs.exists(hadoop_fs(spark, stage + "/_SUCCESS")[1]):
+            swap_stage(spark, stage, path)
+        else:
+            fs.delete(hstage, True)
     return fs.exists(hpath)
 
 

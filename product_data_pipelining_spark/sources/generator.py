@@ -355,13 +355,14 @@ if __name__ == "__main__":  # pragma: no cover — CLI for the scale probe
     from pathlib import Path as _Path
 
     _sys.path.insert(0, str(_Path(__file__).resolve().parents[2]))
-    from product_data_pipelining_spark.session import get_spark
+    from product_data_pipelining_spark.session import TIERED_JIT, get_spark
 
     ap = argparse.ArgumentParser(description="generate a sf directory")
     ap.add_argument("--sf", type=float, required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--cpus", type=int, default=32)
     args = ap.parse_args()
-    s = get_spark(app_name="pdp-generate", cpus=args.cpus)
+    # per-row work (6M lineitem rows at sf1): C2 pays back here
+    s = get_spark(app_name="pdp-generate", cpus=args.cpus, extra_conf=TIERED_JIT)
     print(_json.dumps(generate_scale(s, args.out, args.sf)))
     s.stop()

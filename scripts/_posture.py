@@ -14,6 +14,12 @@ measured 11.1s -> ~3s total on this headline set. AQE remains the
 default for the batch/cluster paths (get_spark without these envs);
 at 100 TB each shuffle carries GBs per partition and AQE's runtime
 re-planning pays for itself.
+
+``SPARK_GRAFT_AQE=0`` is also the JIT posture: ``session.get_spark``
+launches a serving-profile JVM with full tiered compilation, because a
+long-lived bench or A/B session re-runs the same hot code and C2 pays
+back there (C1-only made the warm headline 1.67x slower). A batch
+session, a one-shot op in a fresh JVM, is launched C1-only instead.
 """
 
 from __future__ import annotations

@@ -737,6 +737,28 @@ def test_incremental_run_heals_a_snapshot_swap_that_died(spark, tmp_path):
     assert not os.path.exists(snap + STAGE_SUFFIX)
 
 
+def test_parquet_upsert_read_discards_an_incomplete_stage(spark, tmp_path):
+    """A first merge that died mid-write leaves no target and a stage
+    without Spark's ``_SUCCESS`` marker; read() deletes that stage
+    instead of serving part of a table as the whole."""
+    import os
+
+    from product_data_pipelining_spark.io import STAGE_SUFFIX
+    from product_data_pipelining_spark.operators.upsert import (
+        ParquetUpsertTarget,
+    )
+
+    path = str(tmp_path / "t")
+    stage = path + STAGE_SUFFIX
+    spark.range(10).repartition(2).write.parquet(stage)
+    parts = sorted(f for f in os.listdir(stage) if f.startswith("part-"))
+    assert len(parts) == 2
+    os.remove(os.path.join(stage, parts[0]))
+    os.remove(os.path.join(stage, "_SUCCESS"))
+    assert ParquetUpsertTarget(spark, path).read() is None
+    assert not os.path.exists(stage)
+
+
 def test_delta_upsert_target_real_engine_if_installed(tmp_path):
     """On a machine WITH delta-spark, the same merge rounds run
     unmodified against the real engine; here the import raises and the
