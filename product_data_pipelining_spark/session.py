@@ -21,8 +21,10 @@ that role. Every knob below is chosen for the 100 TB target:
   (the default) launches it C1-only (``-XX:TieredStopAtLevel=1``, with
   the tiered 240 MiB code cache kept): a one-shot refresh op in a fresh
   JVM spends about half its CPU in C2 compilation that never pays back
-  before the process exits. A batch job whose work is per-row, not
-  first-use, passes ``TIERED_JIT`` to keep C2. The serving profile
+  before the process exits. A batch job that runs minutes of query or
+  per-row work in one JVM repays C2 and passes ``TIERED_JIT`` to keep
+  it. The test suite is such a job but stays C1-only, so the batch
+  posture is what it exercises. The serving profile
   (``SPARK_GRAFT_AQE=0``) keeps full tiered compilation, because a
   long-lived session re-runs its hot code and C1-only code runs slower
   there (the warm headline bench 1.67x).
@@ -43,9 +45,14 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 # link a method handle and stopped its SparkContext, so the tiered
 # default of 240 MiB is kept.
 BATCH_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
-# extra_conf that gives a batch-profile job full tiered compilation back,
-# for work that is per-row rather than first-use: the generator CLI made
-# sf1 in ~44 s C1-only and ~35 s with C2, on 4 cores.
+# extra_conf that gives a batch-profile job full tiered compilation back.
+# Each batch job that runs minutes of work in one JVM ran slower C1-only
+# and passes it (4 cores, wall time, C1-only -> C2): the generator CLI at
+# sf1 ~44 -> ~35 s; the scale probe's correctness stage at sf1 248/250 ->
+# 163/202 s; the pipe01 probe's Spark leg at sf1 145 -> 82 s; the
+# correctness sweep over the driver window at sf0.1 181/161 -> 161/138 s,
+# though C1-only spent ~20% less CPU there. plans/report.py ran in the
+# same wall time on half the CPU C1-only, so it keeps the batch posture.
 TIERED_JIT = {"spark.driver.defaultJavaOptions": ""}
 
 
@@ -178,6 +185,10 @@ def get_spark(
         # task. defaultJavaOptions, not extraJavaOptions: Spark puts them
         # ahead of a caller's extraJavaOptions instead of being
         # overwritten. Applies only when this call launches the JVM.
+        # The engine takes this slot over: a value a deployment's
+        # spark-defaults.conf puts here (log4j, GC or agent flags) is
+        # replaced in batch sessions, so such flags belong in
+        # extraJavaOptions there.
         builder = builder.config(
             "spark.driver.defaultJavaOptions", BATCH_JAVA_OPTIONS
         )

@@ -19,7 +19,11 @@ re-planning pays for itself.
 launches a serving-profile JVM with full tiered compilation, because a
 long-lived bench or A/B session re-runs the same hot code and C2 pays
 back there (C1-only made the warm headline 1.67x slower). A batch
-session, a one-shot op in a fresh JVM, is launched C1-only instead.
+session, a one-shot op in a fresh JVM, is launched C1-only instead. The
+scripts that run in the batch profile without this posture (the
+correctness sweep, the scale probe's correctness stage, the pipe01
+exclusion probe) run minutes of query work in one JVM and pass
+``session.TIERED_JIT`` to keep C2.
 """
 
 from __future__ import annotations

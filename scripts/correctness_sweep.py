@@ -49,7 +49,7 @@ def main() -> None:
     )
     from product_data_pipelining_spark.io import TPCH_TABLES
     from product_data_pipelining_spark.registry import all_queries
-    from product_data_pipelining_spark.session import get_spark
+    from product_data_pipelining_spark.session import TIERED_JIT, get_spark
 
     specs = all_queries()
     if args.queries:
@@ -58,7 +58,8 @@ def main() -> None:
         if unknown:
             sys.exit(f"unknown queries: {unknown}")
         specs = {q: specs[q] for q in names}
-    spark = get_spark(app_name="pdp-correctness-sweep")
+    # minutes of query work in one JVM: C2 pays back (session.TIERED_JIT)
+    spark = get_spark(app_name="pdp-correctness-sweep", extra_conf=TIERED_JIT)
     con = duckdb.connect()
     for t in TPCH_TABLES:
         con.execute(duck_view_sql(args.sf_dir, t))

@@ -77,9 +77,10 @@ def spark_leg(
         pipe01_chunked,
     )
     from product_data_pipelining_spark.registry import all_queries
-    from product_data_pipelining_spark.session import get_spark
+    from product_data_pipelining_spark.session import TIERED_JIT, get_spark
 
-    spark = get_spark(app_name="pipe01-exclusion-probe")
+    # minutes of per-row pair work in one JVM: C2 pays back (session.TIERED_JIT)
+    spark = get_spark(app_name="pipe01-exclusion-probe", extra_conf=TIERED_JIT)
     if chunked:
         # the sequenced doc_a-chunk mode; its pair parquet lives under
         # the SAME watched scratch so the budget covers it too. NOTE:

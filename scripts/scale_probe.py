@@ -269,12 +269,13 @@ def run_correctness(sf_dir: str, stage_dir: str) -> dict:
         frames_match,
     )
     from product_data_pipelining_spark.registry import all_queries
-    from product_data_pipelining_spark.session import get_spark
+    from product_data_pipelining_spark.session import TIERED_JIT, get_spark
 
     with open(os.path.join(stage_dir, "meta.json")) as f:
         meta = json.load(f)
     specs = all_queries()
-    spark = get_spark(app_name="pdp-scale-check")
+    # minutes of query work in one JVM: C2 pays back (session.TIERED_JIT)
+    spark = get_spark(app_name="pdp-scale-check", extra_conf=TIERED_JIT)
     con = duckdb.connect()  # only reads staged parquet — tiny footprint
 
     results: dict[str, str] = {}
