@@ -14,7 +14,9 @@ move worth an isolated_bench adjudication.
 
 Usage:  python scripts/jitter_probe.py [--attempts 5] [--sf-dir ...]
 Writes: JITTER_SPREAD.json at the repo root (referenced by bench.py's
-``jitter_bands_artifact`` key, so every BENCH_r*.json points here).
+``jitter_bands_artifact`` key, so every BENCH_r*.json points here),
+stamped with the ``cpus`` and ``driver_java_options`` of the attempts'
+bench lines; attempts that disagree on either fail the probe.
 
 Methodology notes: each attempt is a fresh process/JVM — the same
 carryover regime as the driver's bench — so the bands capture
@@ -78,9 +80,10 @@ def main() -> None:
 
     spark_samples: dict[str, list[float]] = {}
     duck_samples: dict[str, list[float]] = {}
-    totals, ratios = [], []
+    totals, ratios, postures = [], [], set()
     for i in range(args.attempts):
         r = run_bench(args.sf_dir)
+        postures.add((r["cpus"], r["driver_java_options"]))
         totals.append(r["value"])
         if r.get("ratio_vs_duckdb"):
             ratios.append(r["ratio_vs_duckdb"])
@@ -91,10 +94,18 @@ def main() -> None:
         print(f"# attempt {i + 1}/{args.attempts}: total {r['value']}s "
               f"ratio {r.get('ratio_vs_duckdb')}", file=sys.stderr)
 
+    # bands from attempts at different core counts or JIT postures
+    # would classify nothing
+    if len(postures) != 1:
+        sys.exit(f"attempts ran in different postures: {sorted(postures)}")
+    (cpus, java_options), = postures
+
     artifact = {
         "metric": "driver_bench_jitter_bands",
         "sf_dir": args.sf_dir,
         "attempts": args.attempts,
+        "cpus": cpus,
+        "driver_java_options": java_options,
         "total_sec_band": {"attempts": totals, "min": min(totals),
                            "max": max(totals)},
         "ratio_vs_duckdb_band": {"attempts": ratios,
