@@ -66,11 +66,6 @@ from product_data_pipelining_spark.session import DEFAULT_CPUS, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = DEFAULT_CPUS
-# 1 = skip the in-process DuckDB baseline entirely (duckdb_total_sec = 0,
-# ratio_vs_duckdb = null). Used by the CPU strong-scaling probe, which
-# re-runs the Spark side at several core counts and has no use for four
-# identical single-threaded baselines.
-SKIP_DUCKDB = os.environ.get("SPARK_GRAFT_SKIP_DUCKDB", "0") == "1"
 # Probe override for REPEATS below: multi-leg probes at big SFs trade
 # median-of-5 for median-of-3 to fit several legs in one session.
 _REPEATS_ENV = os.environ.get("SPARK_GRAFT_REPEATS")
@@ -166,7 +161,7 @@ def main() -> None:
         except Exception as exc:  # never let warm-up kill the bench
             print(f"# warmup {name} failed: {exc}", file=sys.stderr)
     for name in HEADLINE:
-        if specs[name].oracle is not None and not SKIP_DUCKDB:
+        if specs[name].oracle is not None:
             try:
                 run_duck(specs[name].oracle)
             except Exception as exc:
@@ -207,7 +202,7 @@ def main() -> None:
             f"# {name}: {timings[name]:.3f}s (spread {spread[name]:.2f})",
             file=sys.stderr,
         )
-        if spec.oracle is not None and not SKIP_DUCKDB:
+        if spec.oracle is not None:
             try:
                 dsamples = []
                 for _ in range(DUCK_REPEATS):

@@ -26,6 +26,13 @@ the reference's DuckDB reads. Concurrency: handlers run on server
 threads; py4j calls are thread-safe and each request runs independent
 jobs on the shared SparkSession (use ``spark.scheduler.mode=FAIR`` if
 serving next to batch work).
+
+JIT posture: launch a live server's session in the serving profile
+(``SPARK_GRAFT_AQE=0`` in the environment before ``session.get_spark``),
+which keeps the driver JVM's C2 compiler. A plain ``get_spark()`` is the
+batch profile, C1-only, and a long-lived server re-running the same
+plans pays for that on every request (page p50 3056 -> 3454 ms in a
+traced benchmark run).
 """
 
 from __future__ import annotations
@@ -111,6 +118,10 @@ def make_handler(m: dict[str, DataFrame]) -> type[BaseHTTPRequestHandler]:
 
 class DashboardServer:
     """Owns the HTTP server + its thread; ``with``-style lifecycle.
+
+    Serves from whatever session built ``m``; for a live server that is
+    a serving-profile session (``SPARK_GRAFT_AQE=0`` before
+    ``get_spark``, module docstring), not the C1-only batch default.
 
     >>> srv = DashboardServer(models).start()     # port 0 = ephemeral
     >>> requests.get(f"http://localhost:{srv.port}/")

@@ -222,10 +222,7 @@ def dd01_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-stage pass of every corpus pipeline; shuffles only
     (hash, doc_id) pairs, never the text.
 
-    Floor evidence (FLOOR_PROBE.json, r9): 0.23 / 0.22 / 0.23 /
-    0.41 s at sf0.001/0.01/0.1/1 — flat (1.9x) across 1000x data:
-    per-job fixed overhead, not per-row compute (see a11's note in
-    ``relational.py``).
+    Floor evidence: this query's legs in FLOOR_PROBE.json.
     """
     docs = load_table(spark, sf_dir, "documents")
     return (

@@ -875,15 +875,7 @@ def a11_share_of_group_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``SUM(n) OVER (PARTITION BY ...)`` — the window reuses the groupBy's
     hash partitioning on p_brand, so no second shuffle.
 
-    Floor evidence (FLOOR_PROBE.json, r9 — one fresh JVM per leg,
-    median of 5, interleaved DuckDB): 0.33 / 0.34 / 0.35 / 0.79 s at
-    sf0.001/0.01/0.1/1 — flat-to-2.4x across 1000x data, i.e. the
-    wall time is per-job fixed overhead (scheduler, stage launch,
-    exchange bookkeeping), not per-row compute; DuckDB's 15-23 ms
-    in-process latency is the thing a distributed engine structurally
-    pays for. At cluster scale the same plan's stage durations dwarf
-    that constant. This is the measured form of the ">2x at every SF
-    on sub-second absolutes" flag from rounds 7-8.
+    Floor evidence: this query's legs in FLOOR_PROBE.json.
     """
     part = _t(spark, sf_dir, "part")
     counts = part.groupBy("p_brand", "p_type").agg(F.count("*").alias("n"))
@@ -1011,10 +1003,7 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse to a handful of groups map-side; the shuffle moves only
     per-partition partials. One wide scan, one exchange, no joins.
 
-    Floor evidence (FLOOR_PROBE.json, r9): 0.28 / 0.33 / 0.33 /
-    0.37 s at sf0.001/0.01/0.1/1 — flat (1.3x) across 1000x data
-    while DuckDB grows 11x: per-job fixed overhead, not per-row
-    compute (see a11's note).
+    Floor evidence: this query's legs in FLOOR_PROBE.json.
     """
     li = _t(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -1069,10 +1058,7 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange; at 100 TB the can't-broadcast fallback is dd10's Bloom
     semi-join shape.
 
-    Floor evidence (FLOOR_PROBE.json, r9): 0.37 / 0.54 / 0.49 /
-    0.64 s at sf0.001/0.01/0.1/1 — flat (1.7x) across 1000x data
-    while DuckDB grows 8.5x: per-job fixed overhead, not per-row
-    compute (see a11's note).
+    Floor evidence: this query's legs in FLOOR_PROBE.json.
     """
     c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = _t(spark, sf_dir, "orders").filter(
@@ -1179,11 +1165,7 @@ def tpch_q5_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem on orderkey (``io.write_bucketed``) removes the two fact
     exchanges; AQE handles orderkey skew on cluster paths.
 
-    Floor evidence (FLOOR_PROBE.json, r10 — one fresh JVM per leg):
-    spark medians 0.60 / 0.82 / 1.21 / 1.92 s across sf0.001 -> sf1
-    (3.2x for 1000x data) while DuckDB grows 0.020 -> 0.21 s (13.7x) —
-    the >2x sf1 bench ratio is the fixed per-job floor, not a plan
-    property, and the sf10 interleaved ratio converges to 1.6x.
+    Floor evidence: this query's legs in FLOOR_PROBE.json.
     """
     from ..io import broadcast_or_shuffle_hash
 
@@ -1545,9 +1527,7 @@ def ev05_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     final rollup is segment-cardinality. The conversion ratio divides
     two exact longs — one double op, identical in both engines.
 
-    Floor evidence (FLOOR_PROBE.json, r9): 0.44 / 0.72 / 0.57 /
-    0.83 s at sf0.001/0.01/0.1/1 — ~flat (1.9x) across 1000x data:
-    per-job fixed overhead, not per-row compute (see a11's note).
+    Floor evidence: this query's legs in FLOOR_PROBE.json.
     """
     ev = _t(spark, sf_dir, "events")
     base = ev.filter(F.col("event_type").isin("signup", "purchase")).select(

@@ -346,10 +346,7 @@ def tp02_resample_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     are deterministic-rounded day sums, so the fill copies
     engine-identical numbers and the oracle matches exactly.
 
-    Floor evidence (FLOOR_PROBE.json, r9): 0.44 / 0.34 / 0.41 /
-    0.80 s at sf0.001/0.01/0.1/1 — ~flat (2.3x) across 1000x data:
-    per-job fixed overhead, not per-row compute (see a11's note in
-    ``relational.py``).
+    Floor evidence: this query's legs in FLOOR_PROBE.json.
     """
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.col("ts").cast("date").alias("day"), "value"

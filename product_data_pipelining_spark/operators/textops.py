@@ -284,10 +284,7 @@ def tx02_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-gating plays at ingest (``main_pipeline.py:379-380``), scaled to
     corpus curation.
 
-    Floor evidence (FLOOR_PROBE.json, r9): 0.15 / 0.12 / 0.30 /
-    0.22 s at sf0.001/0.01/0.1/1 — flat (2.4x) across 1000x data:
-    per-job fixed overhead, not per-row compute (see a11's note in
-    ``relational.py``).
+    Floor evidence: this query's legs in FLOOR_PROBE.json.
     """
     docs = load_table(spark, sf_dir, "documents")
     # shared featurization helper; the 2-count shape stays on the JVM
@@ -768,10 +765,7 @@ def tx11_corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     — at 100 TB the featurization cost is amortized across all three
     gates instead of three separate pipeline passes.
 
-    Floor evidence (FLOOR_PROBE.json, r9): 0.30 / 0.28 / 0.58 /
-    0.66 s at sf0.001/0.01/0.1/1 — flat (2.4x) across 1000x data:
-    per-job fixed overhead, not per-row compute (see a11's note in
-    ``relational.py``).
+    Floor evidence: this query's legs in FLOOR_PROBE.json.
     """
     docs = load_table(spark, sf_dir, "documents")
     # all six token counts in one featurization pass (Arrow batch form

@@ -49,10 +49,10 @@ BATCH_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
 # Each batch job that runs minutes of work in one JVM ran slower C1-only
 # and passes it (4 cores, wall time, C1-only -> C2): the generator CLI at
 # sf1 ~44 -> ~35 s; the scale probe's correctness stage at sf1 248/250 ->
-# 163/202 s; the pipe01 probe's Spark leg at sf1 145 -> 82 s; the
-# correctness sweep over the driver window at sf0.1 181/161 -> 161/138 s,
-# though C1-only spent ~20% less CPU there. plans/report.py ran in the
-# same wall time on half the CPU C1-only, so it keeps the batch posture.
+# 163/202 s; the correctness sweep over the driver window at sf0.1
+# 181/161 -> 161/138 s, though C1-only spent ~20% less CPU there.
+# plans/report.py ran in the same wall time on half the CPU C1-only, so
+# it keeps the batch posture.
 TIERED_JIT = {"spark.driver.defaultJavaOptions": ""}
 
 

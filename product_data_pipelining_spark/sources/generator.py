@@ -360,7 +360,8 @@ if __name__ == "__main__":  # pragma: no cover — CLI for the scale probe
     ap = argparse.ArgumentParser(description="generate a sf directory")
     ap.add_argument("--sf", type=float, required=True)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int,
+                    help="cores (default: session.DEFAULT_CPUS)")
     args = ap.parse_args()
     # per-row work (6M lineitem rows at sf1): C2 pays back here
     s = get_spark(app_name="pdp-generate", cpus=args.cpus, extra_conf=TIERED_JIT)

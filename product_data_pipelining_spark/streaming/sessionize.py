@@ -63,10 +63,7 @@ def ev02_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuses the partitioning). The streaming twin is
     :func:`streaming_sessionize`.
 
-    Floor evidence (FLOOR_PROBE.json, r9): 0.28 / 0.25 / 0.35 /
-    0.64 s at sf0.001/0.01/0.1/1 — flat (2.5x) across 1000x data
-    while DuckDB grows 18x: per-job fixed overhead, not per-row
-    compute (see a11's note in ``operators/relational.py``).
+    Floor evidence: this query's legs in FLOOR_PROBE.json.
     """
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")

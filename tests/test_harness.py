@@ -1,11 +1,14 @@
 """The measurement harness in scripts/: the bench posture module, the
-same-process A/B core, and that every script still compiles and (for
-the argparse ones) answers --help, so no probe imports a deleted helper."""
+same-process A/B core, that every script still compiles and (for the
+argparse ones) answers --help, so no probe imports a deleted helper, and
+that the docs name no script that is gone."""
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import runpy
 import subprocess
 import sys
 from pathlib import Path
@@ -145,6 +148,40 @@ def test_script_compiles_and_answers_help(path, tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert proc.stdout.startswith("usage:")
+
+
+DOCS = [SCRIPTS.parent / "README.md",
+        SCRIPTS.parent / ".claude" / "skills" / "verify" / "SKILL.md"]
+
+
+@pytest.mark.parametrize("doc", DOCS, ids=lambda p: p.name)
+def test_docs_name_only_existing_scripts(doc):
+    named = set(re.findall(r"\bscripts/(\w+\.py)", doc.read_text()))
+    missing = sorted(n for n in named if not (SCRIPTS / n).is_file())
+    assert named and not missing, f"{doc.name} names deleted scripts: {missing}"
+
+
+def test_generator_cli_leaves_cpus_to_the_session_rule(monkeypatch):
+    """Without ``--cpus`` the generator CLI passes none, so ``get_spark``
+    applies ``session.DEFAULT_CPUS``; a fixed default of 32 started
+    ``local[32]`` on every smaller host."""
+    from product_data_pipelining_spark import session
+    from product_data_pipelining_spark.sources import generator
+
+    class Launched(Exception):
+        pass
+
+    def fake_get_spark(**kwargs):
+        raise Launched(kwargs)
+
+    monkeypatch.setattr(session, "get_spark", fake_get_spark)
+    monkeypatch.setattr(sys, "argv", ["generator", "--sf", "1", "--out", "x"])
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    with pytest.raises(Launched) as launched:
+        runpy.run_path(generator.__file__, run_name="__main__")
+    kwargs = launched.value.args[0]
+    assert kwargs["cpus"] is None
+    assert kwargs["extra_conf"] is session.TIERED_JIT
 
 
 def test_snapshot_stage_writes_are_traced_as_upsert(monkeypatch):
