@@ -66,8 +66,8 @@ from product_data_pipelining_spark.session import DEFAULT_CPUS, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = DEFAULT_CPUS
-# Probe override for REPEATS below: multi-leg probes at big SFs trade
-# median-of-5 for median-of-3 to fit several legs in one session.
+# Override for REPEATS below: a probe run at a big SF (scale_probe at
+# sf5, say) sets it to trade median-of-5 for median-of-3.
 _REPEATS_ENV = os.environ.get("SPARK_GRAFT_REPEATS")
 
 posture.apply(SF_DIR, CPUS)
