@@ -51,8 +51,6 @@ import time
 from collections.abc import Mapping
 from pathlib import Path
 
-import duckdb
-
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 sys.path.insert(0, str(Path(__file__).resolve().parent / "scripts"))
 
@@ -60,7 +58,7 @@ import _posture as posture  # noqa: E402
 from _posture import HEADLINE  # noqa: E402
 from _provenance import provenance  # noqa: E402
 
-from product_data_pipelining_spark.io import TPCH_TABLES
+from product_data_pipelining_spark.checks.oracle_compare import duck_connect
 from product_data_pipelining_spark.registry import all_queries
 from product_data_pipelining_spark.session import DEFAULT_CPUS, get_spark
 
@@ -104,32 +102,10 @@ def mirror_path(env: Mapping[str, str]) -> Path | None:
     return Path(__file__).resolve().parent / "BENCH_LAST.json"
 
 
-def _duck_connect() -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    # Bound the in-process baseline: DuckDB's default memory limit is
-    # ~80% of RAM, and next to a live JVM + table caches a corpus-scale
-    # oracle (the sf10 probe OOM-killed this process at 104 GB RSS on
-    # dd14's banded self-join) takes the whole box down. A quarter of
-    # available RAM (24 GB ceiling, mirroring session._default_heap_gb)
-    # + /tmp spill keeps JVM + baseline within the host on any box; a
-    # spilling baseline is a slow baseline, never a dead bench.
-    from product_data_pipelining_spark.session import available_ram_gb
-
-    duck_gb = min(24, max(2, available_ram_gb() // 4))
-    con.execute(f"SET memory_limit='{duck_gb}GB'")
-    con.execute("SET temp_directory='/tmp/duck_spill'")
-    for t in TPCH_TABLES:
-        p = f"{SF_DIR}/{t}.parquet"
-        if os.path.isdir(p):  # generated SF dirs are multi-file parquet
-            p = f"{p}/*.parquet"
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    return con
-
-
 def main() -> None:
     specs = all_queries()
     spark = get_spark(app_name="pdp-bench", cpus=CPUS)
-    con = _duck_connect()
+    con = duck_connect(SF_DIR)
     # Warm-up: run every headline plan once at the BENCH SF so JVM JIT,
     # whole-stage-codegen compilation, parquet reader setup, Python worker
     # spawn-up, and — critically — the one-time in-memory columnar cache

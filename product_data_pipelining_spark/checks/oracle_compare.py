@@ -2,10 +2,13 @@
 
 One shared normalization for everything that compares a Spark result
 against DuckDB running the equivalent SQL: the pytest parity sweep
-(``tests/test_oracle_parity.py``), the scale probe's at-scale value
-checks (``scripts/scale_probe.py``), and ad-hoc verification drivers.
-Mirrors the driver's gate: sort columns by name, canonicalize each cell
-to a string (nulls, floats, temporals), sort rows, compare frames.
+(``tests/test_oracle_parity.py``), the correctness sweep
+(``scripts/correctness_sweep.py``, which the scale probe runs for its
+at-scale check), and ad-hoc verification drivers. Mirrors the driver's
+gate: sort columns by name, canonicalize each cell to a string (nulls,
+floats, temporals), sort rows, compare frames. ``duck_connect`` is the
+one way those checks and the benches open DuckDB over a scale-factor
+directory.
 """
 
 from __future__ import annotations
@@ -112,3 +115,27 @@ def duck_view_sql(sf_dir: str, table: str) -> str:
     if os.path.isdir(p):
         p = f"{p}/*.parquet"
     return f"CREATE VIEW {table} AS SELECT * FROM '{p}'"
+
+
+def duck_connect(sf_dir: str):
+    """In-process DuckDB over ``sf_dir``: one view per table, memory capped.
+
+    DuckDB's default memory limit is ~80% of RAM; next to a live JVM and
+    its table caches a corpus-scale oracle then takes the whole box down
+    (an sf10 bench was OOM-killed at 104 GB RSS on dd14's banded
+    self-join). A quarter of available RAM (24 GB ceiling, mirroring
+    ``session._default_heap_gb``) plus a ``/tmp`` spill directory keeps
+    JVM + DuckDB within the host: a spilling oracle is slow, never fatal.
+    """
+    import duckdb
+
+    from ..io import TPCH_TABLES
+    from ..session import available_ram_gb
+
+    con = duckdb.connect()
+    duck_gb = min(24, max(2, available_ram_gb() // 4))
+    con.execute(f"SET memory_limit='{duck_gb}GB'")
+    con.execute("SET temp_directory='/tmp/duck_spill'")
+    for t in TPCH_TABLES:
+        con.execute(duck_view_sql(sf_dir, t))
+    return con

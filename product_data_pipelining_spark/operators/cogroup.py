@@ -35,78 +35,84 @@ _OUT_SCHEMA = (
 )
 
 
+# order-key buckets per partition of the cogroup: each pandas call
+# reconciles one bucket's orders at once, so a partition pays a handful
+# of Python invocations instead of one per order key
+_BUCKETS_PER_PARTITION = 4
+
+
 def cogroup_reconcile(
     orders: DataFrame, lineitem: DataFrame, parallelism: int | None = None
 ) -> DataFrame:
     """Per-order header-vs-lines reconciliation via cogrouped pandas.
 
-    Both sides are repartitioned with an EXPLICIT partition count before
-    the cogroup. Without it, AQE sees a few tens of MB of shuffle data
-    and coalesces the exchange to one partition — correct economics for
-    a JVM stage, catastrophic for a Python-UDF stage where cost is
-    per-KEY invocation overhead, not bytes: at sf0.1 the coalesced plan
-    pushed all 150k order keys through a single Python worker serially
-    (~15 min) while 31 cores idled. An explicit count is user-specified
-    repartitioning, which AQE leaves alone, so every core keeps a
-    worker fed. The general rule this encodes: size Python stages by
-    keys-per-task, never by shuffle bytes.
+    Both sides are cogrouped on a BUCKET of the order key
+    (``_BUCKETS_PER_PARTITION`` buckets per partition), and each call
+    reconciles its bucket's orders with one vectorised group-by. A
+    Python-UDF stage's cost is per-call overhead, not bytes: grouping on
+    the order key itself made one pandas call per order (150k calls at
+    sf0.1, minutes on 4 cores). The general rule this encodes: size
+    Python stages by keys-per-task, never by shuffle bytes.
+
+    Both sides are repartitioned on the bucket with an EXPLICIT
+    partition count before the cogroup. Without it, AQE sees a few tens
+    of MB of shuffle data and coalesces the exchange to one partition —
+    correct economics for a JVM stage, but it leaves a single Python
+    worker busy while the other cores idle. An explicit count is
+    user-specified repartitioning, which AQE leaves alone.
     """
 
     def reconcile(left, right):  # noqa: ANN001 — pandas-in, pandas-out
         import numpy as np
         import pandas as pd
 
-        if left.empty:  # lines with no header: not this operator's output
-            return pd.DataFrame(
-                columns=[
-                    "o_orderkey",
-                    "n_lines",
-                    "line_total",
-                    "header_total",
-                    "delta",
-                ]
-            )
-
-        def scaled_sum(v):
-            s = v * 1e6
-            q = np.where(v >= 0, np.floor(s + 0.5), np.ceil(s - 0.5))
-            return q.astype(np.int64).sum()
-
         def round2(x):
             s = x * 100.0
-            r = np.floor(s + 0.5) if x >= 0 else np.ceil(s - 0.5)
-            return float(r / 100.0)
+            r = np.where(x >= 0, np.floor(s + 0.5), np.ceil(s - 0.5))
+            return r / 100.0
 
-        value = (
-            right["l_extendedprice"].to_numpy()
-            * (1.0 - right["l_discount"].to_numpy())
-            if len(right)
-            else np.array([], dtype=np.float64)
+        # per-line value on the 1e-6 integer grid, summed exactly per
+        # order (the relational tier's det_sum rule); lines with no
+        # header in this bucket are not this operator's output
+        value = right["l_extendedprice"].to_numpy() * (
+            1.0 - right["l_discount"].to_numpy()
         )
-        line_total = (
-            round2(scaled_sum(value) / 1e6) if len(right) else 0.0
+        s = value * 1e6
+        q = np.where(value >= 0, np.floor(s + 0.5), np.ceil(s - 0.5))
+        lines = (
+            pd.DataFrame({"k": right["l_orderkey"].to_numpy(),
+                          "q": q.astype(np.int64)})
+            .groupby("k")["q"]
+            .agg(["size", "sum"])
+            .reindex(left["o_orderkey"].to_numpy(), fill_value=0)
         )
-        header_total = round2(float(left["o_totalprice"].iloc[0]))
+        line_total = round2(lines["sum"].to_numpy(np.int64) / 1e6)
+        header_total = round2(left["o_totalprice"].to_numpy(np.float64))
         return pd.DataFrame(
             {
-                "o_orderkey": [int(left["o_orderkey"].iloc[0])],
-                "n_lines": [len(right)],
-                "line_total": [line_total],
-                "header_total": [header_total],
-                "delta": [round2(header_total - line_total)],
+                "o_orderkey": left["o_orderkey"].to_numpy(np.int64),
+                "n_lines": lines["size"].to_numpy(np.int64),
+                "line_total": line_total,
+                "header_total": header_total,
+                "delta": round2(header_total - line_total),
             }
         )
 
     n = parallelism or orders.sparkSession.sparkContext.defaultParallelism
+    buckets = n * _BUCKETS_PER_PARTITION
+
+    def bucketed(df: DataFrame, key: str) -> DataFrame:
+        b = F.pmod(F.xxhash64(F.col(key).cast("long")), F.lit(buckets))
+        return df.withColumn("bucket", b).repartition(n, "bucket")
+
     return (
-        orders.select("o_orderkey", "o_totalprice")
-        .repartition(n, "o_orderkey")
-        .groupBy("o_orderkey")
+        bucketed(orders.select("o_orderkey", "o_totalprice"), "o_orderkey")
+        .groupBy("bucket")
         .cogroup(
-            lineitem.select(
-                "l_orderkey", "l_extendedprice", "l_discount"
-            ).repartition(n, "l_orderkey")
-            .groupBy("l_orderkey")
+            bucketed(
+                lineitem.select("l_orderkey", "l_extendedprice", "l_discount"),
+                "l_orderkey",
+            ).groupBy("bucket")
         )
         .applyInPandas(reconcile, schema=_OUT_SCHEMA)
     )
@@ -130,15 +136,16 @@ def cogroup_reconcile(
 def cg01_cogroup_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-header vs line-sum reconciliation through the cogroup path.
 
-    Plan shape: one hash exchange per side on the order key, then a
-    FlatMapCoGroupsInPandas — the same two-shuffle profile as a
-    shuffle join, with Arrow moving each key's rows to Python and back
-    in columnar batches. Per-key state is one header row plus that
-    order's lines, so executor memory is bounded by the largest single
-    key at any scale. For THIS relational shape the join+agg twin (the
-    oracle) is the plan to ship — built-ins stay in whole-stage
-    codegen; the cogroup tier exists for logic SQL cannot express, and
-    this query pins its correctness against the relational answer.
+    Plan shape: one hash exchange per side on an order-key bucket, then
+    a FlatMapCoGroupsInPandas — the same two-shuffle profile as a
+    shuffle join, with Arrow moving each bucket's rows to Python and
+    back in columnar batches. Per-call state is one bucket (1/(4n) of
+    each input at n partitions), so executor memory grows with input
+    size over the partition count. For THIS relational shape the
+    join+agg twin (the oracle) is the plan to ship — built-ins stay in
+    whole-stage codegen; the cogroup tier exists for logic SQL cannot
+    express, and this query pins its correctness against the
+    relational answer.
     """
     return cogroup_reconcile(
         load_table(spark, sf_dir, "orders"),

@@ -48,41 +48,6 @@ from .textops import tokens
 PIPE_WC_MIN = 15  # quality gate: drops the short tail (~5% here)
 PIPE_HOLDOUT_NIBBLE = "f"  # md5 first hex char -> ~1/16 eval holdout
 
-# --- pipe01's two oracle forms -------------------------------------------
-#
-# `oracle` (the registered single statement, used by the driver gate and
-# every local sweep) expresses the exact pair stage as one self-join +
-# aggregation — readable, and fine at the gate SFs.
-#
-# `oracle_stage` (used ONLY by scripts/scale_probe.py's out-of-process
-# staging) sequences the SAME pair aggregation in doc_a % N chunks via
-# TEMP TABLE inserts, because at sf10 the fixtures' 31-word vocab makes
-# every 3-gram shingle hot (27k distinct shingles x ~700 docs each ->
-# 6.5B joined pair rows, ~2B distinct pairs) and DuckDB cannot bound a
-# single statement's memory: one hash aggregation over the full pair
-# space outspilled the probe box's disk; a UNION ALL of chunks schedules
-# its independent child pipelines CONCURRENTLY (measured: 4 parallel
-# chunks spilled 63 GB where one chunk spills nothing); and a recursive
-# CTE gets decorrelated back into a flat plan with the same footprint.
-# Statements are the only reliable sequencing boundary, so the chunks
-# live across statements. Values are identical (the chunk key is the
-# GROUP BY key's first column); `tests/test_plans.py::
-# test_pipe01_staged_oracle_matches_plain` pins the two forms equal on
-# the gate fixtures. Spark needs no such split — its map-side partial
-# aggregation collapses pair multiplicity before the exchange and its
-# hash aggregation spills.
-_PIPE_ORACLE_CHUNKS = 16
-
-# a pair can only reach JACCARD_THRESHOLD if it shares at least
-# t/(1+t) * (na+nb) shingles; na+nb >= 2*min(nsh) over the corpus, so
-# a COUNT floor of 2*min_nsh*t/(1+t) (evaluated as a scalar subquery)
-# prunes the shared=1..k tail — the overwhelming bulk of hot-shingle
-# pairs — without changing any surviving value.
-_PIPE_SHARED_FLOOR = (
-    f"COUNT(*) * ({1 + JACCARD_THRESHOLD}) >= "
-    f"{2 * JACCARD_THRESHOLD} * (SELECT MIN(nsh) FROM pipe01_sizes)"
-)
-
 _PIPE_BASE_CTES = f"""
     WITH wcd AS (
       SELECT doc_id, lang, source, {_SQL_TOKS} AS t,
@@ -95,8 +60,8 @@ _PIPE_BASE_CTES = f"""
     )"""
 
 # the funnel's tail (benchmark shingles, contamination, stage CASE) —
-# shared verbatim by both oracle forms, parameterized on where `dupes`
-# comes from
+# shared verbatim by pipe01's and pipe02's oracles, parameterized on
+# where `dupes` comes from
 _PIPE_TAIL = f"""
     bsh AS (
       SELECT DISTINCT unnest({_SQL_SHINGLES}) AS s
@@ -145,61 +110,20 @@ _PIPE_ORACLE_PLAIN = (
     + _PIPE_TAIL
 )
 
-_PIPE_ORACLE_STAGE = (
-    # bounded prep: quality-gated shingle lists, sizes, exploded grams
-    f"""CREATE OR REPLACE TEMP TABLE pipe01_sh AS {_PIPE_BASE_CTES}
-        SELECT doc_id, shingles FROM sh""",
-    """CREATE OR REPLACE TEMP TABLE pipe01_sizes AS
-       SELECT doc_id, len(shingles) AS nsh FROM pipe01_sh""",
-    """CREATE OR REPLACE TEMP TABLE pipe01_exi AS
-       SELECT doc_id, unnest(shingles) AS s FROM pipe01_sh""",
-    "CREATE OR REPLACE TEMP TABLE pipe01_dup (doc_id BIGINT)",
-    # one statement per doc_a chunk: peak memory = one chunk's pair agg
-    *(
-        f"""INSERT INTO pipe01_dup
-            SELECT DISTINCT p.doc_b
-            FROM (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     count(*) AS shared
-              FROM pipe01_exi a JOIN pipe01_exi b
-                ON a.s = b.s AND a.doc_id < b.doc_id
-              WHERE a.doc_id % {_PIPE_ORACLE_CHUNKS} = {k}
-              GROUP BY a.doc_id, b.doc_id
-              HAVING {_PIPE_SHARED_FLOOR}
-            ) p
-            JOIN pipe01_sizes sa ON sa.doc_id = p.doc_a
-            JOIN pipe01_sizes sb ON sb.doc_id = p.doc_b
-            WHERE p.shared * 1.0 / (sa.nsh + sb.nsh - p.shared)
-                  >= {JACCARD_THRESHOLD}"""
-        for k in range(_PIPE_ORACLE_CHUNKS)
-    ),
-    # final: the shared funnel tail over the pre-sequenced dup set
-    _PIPE_BASE_CTES
-    + """,
-    dupes AS (SELECT DISTINCT doc_id FROM pipe01_dup),
-"""
-    + _PIPE_TAIL,
-)
 
-
-@register(
-    "pipe01_curation_funnel",
-    oracle=_PIPE_ORACLE_PLAIN,
-    oracle_stage=_PIPE_ORACLE_STAGE,
-)
+@register("pipe01_curation_funnel", oracle=_PIPE_ORACLE_PLAIN)
 def pipe01_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-compat funnel: exact pair stage (see curation_funnel).
 
     The exact pair stage is the funnel's ground-truth baseline (sim01's
     role in the ANN ladder): every pair, no recall question — and
     quadratic in shared-shingle group sizes, so its corpus-scale cost
-    is a full pair-multiset exchange (~2B distinct pairs / ~50 GB+ of
-    shuffle at sf10 on the fixtures' 31-word vocab — fine on a
-    cluster's distributed scratch, beyond a single box's disk, in
-    EITHER engine: DuckDB's oracle needs the sequenced chunk staging
-    above). Value-verified at sf0.001-0.1 (driver gate + sweep) and
-    sf1 (scale probe); ``pipe02_curation_funnel_lsh`` is the
-    at-scale-benchmarked production path.
+    is a full pair-multiset exchange. At sf10 that exchange outgrows a
+    single box's disk in either engine (PIPE01_SF10_EXCLUSION.json; the
+    chunked Spark mode and DuckDB staging twin that completed it there
+    are at eaa7e1c). Value-verified at sf0.001-0.1 (driver gate +
+    sweep); ``pipe02_curation_funnel_lsh`` is the at-scale-benchmarked
+    production path.
     """
     return curation_funnel(spark, sf_dir, pair_stage="exact")
 
@@ -372,16 +296,9 @@ def _funnel_prelude(
     return docs, wcd, sh, ex
 
 
-def _exact_pairs(ex: DataFrame, a_pred=None) -> DataFrame:
-    """dd02's exact shingle self-join pair stage, optionally restricted
-    on the a-side (the chunk predicate — exact because (doc_a, doc_b)
-    aggregation groups never cross doc_a chunks). ``a_pred`` references
-    ``doc_id`` and is applied to ``ex`` BEFORE the doc_a-aliasing
-    select, so it resolves against a column the frame actually exposes
-    (filtering after the rename only worked via the analyzer's implicit
-    missing-reference re-add on Filter — r10 ADVICE)."""
-    a_src = ex if a_pred is None else ex.filter(a_pred)
-    a = a_src.select(
+def _exact_pairs(ex: DataFrame) -> DataFrame:
+    """dd02's exact shingle self-join pair stage."""
+    a = ex.select(
         F.col("doc_id").alias("doc_a"),
         "s",
         F.col("nsh").alias("na"),
@@ -410,300 +327,6 @@ def _exact_pairs(ex: DataFrame, a_pred=None) -> DataFrame:
             >= JACCARD_THRESHOLD
         )
     )
-
-
-# auto-sizing granularity for pipe01_chunked: the doc_a space splits
-# into this many fixed residue SUBCHUNKS; measured scratch from the
-# first two jobs fits peak(g) ~= B + g*V (B = the constant b-side
-# shingle exchange, V = one subchunk's share of the pair-aggregation
-# spill) and the remaining residues run in groups of g sized to the
-# budget. 48 is fine enough that one subchunk always fits any sane
-# budget yet coarse enough that the two calibration jobs stay cheap.
-_PIPE_SUBCHUNKS = 48
-# target fraction of the scratch budget for a chunk-group's projected
-# peak: headroom for the linear model's error and for the qualifying-
-# pair parquet accumulating under the same budget
-_PIPE_BUDGET_SAFETY = 0.5
-# per-job footprint CAP (GB) below the budget target: the r11 sf10
-# series measured wall-clock to be pair-aggregation-bound, not
-# scan-bound — budget-maxed groups (20 GB target) completed in 904 s
-# (25.3 GB peak) unbucketed / 939 s (27.0 GB) bucketed because a
-# spilling hash aggregate's merge I/O grows superlinearly with group
-# size, while ~5 GB jobs over the bucketed shingle table ran 709 s
-# (vs the r10 fixed-16 mode's 749.5 s at 7.5 GB). The budget remains
-# the hard ceiling; this cap keeps each job at the measured
-# spill-optimal scale when the budget would allow far coarser groups.
-_PIPE_JOB_SCRATCH_TARGET_GB = 5.0
-
-
-def _du_bytes(paths: list[str]) -> int:
-    import os
-
-    total = 0
-    for root in paths:
-        if not os.path.isdir(root):
-            continue
-        for dirpath, _dirs, files in os.walk(
-            root, onerror=lambda e: None
-        ):
-            for fn in files:
-                try:
-                    total += os.path.getsize(os.path.join(dirpath, fn))
-                except OSError:
-                    pass
-    return total
-
-
-def _spark_scratch_dirs(spark: SparkSession) -> list[str]:
-    """The live executors' shuffle/spill directories (local mode)."""
-    try:
-        jdirs = (
-            spark.sparkContext._jvm.org.apache.spark.SparkEnv.get()
-            .blockManager().diskBlockManager().localDirs()
-        )
-        return [d.getAbsolutePath() for d in jdirs]
-    except Exception:  # internals moved — auto-sizing degrades gracefully
-        return []
-
-
-def _await_scratch_drain(
-    watch: list[str], timeout_sec: float = 10.0
-) -> int:
-    """Poll ``watch`` until the footprint stabilizes (two consecutive
-    samples equal) or ``timeout_sec`` passes; return the settled bytes.
-
-    The prior job's shuffle files are reclaimed ASYNCHRONOUSLY by the
-    ContextCleaner: sampling the next job's start footprint while they
-    are mid-delete inflates ``start`` and the deletions then deflate
-    the observed peak growth, under-estimating V and over-sizing g
-    (ADVICE r11). Waiting for a stable baseline makes the two
-    calibration points measure only their own job's growth."""
-    import time
-
-    prev = _du_bytes(watch)
-    deadline = time.monotonic() + timeout_sec
-    while time.monotonic() < deadline:
-        time.sleep(0.5)
-        cur = _du_bytes(watch)
-        if cur == prev:
-            return cur
-        prev = cur
-    return prev
-
-
-def _run_job_with_peak(run, watch: list[str]) -> int:
-    """Execute ``run()`` while sampling ``watch`` dirs; return the peak
-    GROWTH in bytes over the job's own starting footprint (so a prior
-    job's not-yet-reclaimed shuffle files don't count twice). The
-    footprint is sampled only after it stabilizes — see
-    :func:`_await_scratch_drain`."""
-    import threading
-    import time
-
-    start = _await_scratch_drain(watch)
-    state = {"done": False, "peak": start}
-
-    def sample():
-        while not state["done"]:
-            state["peak"] = max(state["peak"], _du_bytes(watch))
-            time.sleep(0.25)
-
-    t = threading.Thread(target=sample, daemon=True)
-    t.start()
-    try:
-        run()
-    finally:
-        state["done"] = True
-        t.join(timeout=5)
-    return max(0, state["peak"] - start)
-
-
-def pipe01_chunked(
-    spark: SparkSession,
-    sf_dir: str,
-    chunks: int | None = None,
-    scratch_dir: str | None = None,
-    scratch_budget_gb: float = 40.0,
-) -> DataFrame:
-    """Sequenced exact funnel: the Spark mirror of the DuckDB staging
-    oracle's doc_a-chunk INSERTs (``oracle_stage`` above).
-
-    pipe01's single-plan exact pair stage materializes the full pair
-    multiset into ONE shuffle — measured 40.2 GB of scratch at sf10
-    before the exclusion probe's disk watchdog killed it
-    (PIPE01_SF10_EXCLUSION.json), while DuckDB completes the same
-    funnel only by sequencing 16 chunk statements. Spark's equivalent
-    sequencing boundary is the JOB: a lazy UNION of chunk plans would
-    execute every chunk concurrently in one job (DuckDB's measured
-    UNION-ALL failure mode — 4 parallel chunks spilled 63 GB where one
-    spills nothing), so each ``doc_a % chunks`` slice runs as its own
-    ACTION writing only its QUALIFYING pairs (post-Jaccard, a few rows
-    per chunk) to scratch parquet; dropping the chunk frame lets the
-    ContextCleaner reclaim its shuffle files before the next slice
-    starts, holding peak scratch to ~1/chunks of the single-plan form.
-    The chunk key is the aggregation key's first column, so values are
-    identical (tests/test_plans.py pins frame-equality with pipe01 at
-    the gate fixtures); the funnel tail then runs once over the unioned
-    pair file. This is the single-box posture only — on a cluster the
-    one-shot exchange IS the right plan (distributed scratch), which is
-    why the registered pipe01 keeps it.
-
-    Chunk sizing (r11 — auto by default): 16 chunks was the DuckDB
-    staging oracle's number, and r10 measured Spark's peak at 7.5 GB
-    against a 40 GB budget — ~5x headroom paid for with a full
-    (tokenize → shingle → explode → exchange) b-side re-derivation per
-    chunk. The auto mode removes both inefficiencies: (1) the exploded
-    shingle table is written ONCE as a bucketed table on the join key
-    ``s`` (``io.write_bucketed``; one file per bucket so sort-merge
-    reuses the sortBy order), after which every chunk job joins
-    bucket-aligned splits with zero s-exchange; (2) the doc_a space
-    splits into ``_PIPE_SUBCHUNKS`` fixed residues, the first two jobs
-    (1 then 2 subchunks) run under a scratch-sampling thread over the
-    executors' local dirs, the two peaks fit peak(g) ~= B + g*V (B =
-    constant residual, V = one subchunk's share of the pair-aggregation
-    spill — the term that scaled 7.5 -> 40.7 GB between 16 chunks and
-    the single plan), and the remaining residues run in contiguous
-    groups of g sized so B + g*V stays under min(``scratch_budget_gb``
-    x ``_PIPE_BUDGET_SAFETY``, ``_PIPE_JOB_SCRATCH_TARGET_GB``). The
-    cap exists because the r10 verdict's "coarser chunks should
-    roughly halve the wall-clock" hypothesis was MEASURED FALSE at
-    sf10: the funnel is pair-aggregation-bound, a spilling hash
-    aggregate's merge I/O grows superlinearly with group size, and
-    budget-maxed 20 GB-target groups ran 904 s (unbucketed) / 939 s
-    (bucketed) where 5 GB-target groups over the bucketed table ran
-    709 s (the r10 fixed-16 mode: 749.5 s) — the full series is in
-    PIPE01_SF10_EXCLUSION.json. An explicit
-    ``chunks`` keeps the fixed ``doc_id % chunks`` behavior (tests pin
-    frame-equality of both modes against plain pipe01).
-
-    Measured (r10, PIPE01_SF10_EXCLUSION.json, 40 GB budget): the
-    single-plan form is killed at 40.7 GB scratch 311 s in; the fixed
-    16-chunk mode COMPLETED the exact sf10 funnel in 749.5 s at 7.5 GB
-    peak; DuckDB's sequenced staging completes in 122.8 s zero-spill —
-    the fastest single-box exact path. The chunked trade is wall-clock
-    for bounded scratch; the r11 auto-sizing spends the measured
-    headroom to buy back most of the difference (see the regenerated
-    artifact).
-    """
-    import gc
-    import tempfile
-
-    docs, wcd, sh, ex = _funnel_prelude(spark, sf_dir)
-    scratch = scratch_dir or tempfile.mkdtemp(prefix="pipe01_chunks_")
-
-    def write_residues(
-        src: DataFrame, lo: int, hi: int, mod: int, first: bool
-    ) -> None:
-        """One sequenced JOB: qualifying pairs for doc_id % mod in
-        [lo, hi) — the predicate hits ``src`` before the doc_a rename."""
-        pred = F.pmod(F.col("doc_id"), F.lit(mod))
-        part = _exact_pairs(
-            src,
-            a_pred=(
-                (pred >= lo) & (pred < hi) if hi - lo > 1 else pred == lo
-            ),
-        ).select("doc_a", "doc_b")
-        part.write.mode("overwrite" if first else "append").parquet(scratch)
-        del part
-        gc.collect()  # release the chunk's shuffle for cleanup
-
-    if chunks is not None:
-        for i in range(chunks):
-            write_residues(ex, i, i + 1, chunks, first=(i == 0))
-        pairs = spark.read.parquet(scratch)
-        return _funnel_from_pairs(spark, docs, wcd, ex, pairs)
-
-    # Auto mode (r11): bucket-materialize the exploded shingle table
-    # ONCE on the join key, then run budget-sized residue groups
-    # against it. The fixed-chunk form re-derives (tokenize → shingle
-    # → explode) and re-EXCHANGES the full b-side in every job — the
-    # measured constant term (~5 GB shuffle + a full corpus scan per
-    # job, 16x over at sf10). Writing ex bucketed on ``s`` pays that
-    # shuffle exactly once; every chunk job then joins bucket-aligned
-    # splits with ZERO s-exchange (a-side residue filter is just a
-    # read-time predicate) and pays only its own pair-aggregation
-    # exchange — the term the scratch budget actually bounds. The
-    # bucket directory is dropped after the pair stage; the funnel
-    # tail keeps the lazy ``ex`` (contamination scan, one pass).
-    import hashlib
-
-    from ..io import write_bucketed
-
-    sub = _PIPE_SUBCHUNKS
-    db = "pipe01_bkt_" + hashlib.md5(scratch.encode()).hexdigest()[:8]
-    tbl = f"{db}.ex_b"
-    # SIBLING of the pairs directory, never nested inside it — the
-    # pairs-parquet read below lists scratch recursively and must not
-    # see bucket files (dropped before that read runs, which would
-    # leave a stale listing). scratch_dir is public API: a quote in
-    # the caller's path would otherwise break out of the single-quoted
-    # LOCATION literal (ADVICE r11).
-    if "'" in scratch or "\\" in scratch:
-        raise ValueError(
-            f"scratch_dir must not contain quotes/backslashes: {scratch!r}"
-        )
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS {db} "
-        f"LOCATION '{scratch.rstrip('/')}_bkt_db'"
-    )
-    try:
-        nb = max(8, spark.sparkContext.defaultParallelism)
-        # repartition on the bucket key first: the writer then emits
-        # one file per bucket, letting sort-merge reuse the sortBy order
-        write_bucketed(
-            ex.repartition(nb, F.col("s")), tbl, ("s",), nb, sort_by=("s",)
-        )
-        exb = spark.table(tbl)
-        watch = _spark_scratch_dirs(spark)
-        budget = (
-            min(
-                scratch_budget_gb * _PIPE_BUDGET_SAFETY,
-                _PIPE_JOB_SCRATCH_TARGET_GB,
-            )
-            * 1024**3
-        )
-        # calibration: 1 subchunk, then 2 — two points pin the constant
-        # term B (residual) and the per-subchunk spill V
-        s1 = _run_job_with_peak(
-            lambda: write_residues(exb, 0, 1, sub, first=True), watch
-        )
-        s2 = _run_job_with_peak(
-            lambda: write_residues(exb, 1, 3, sub, first=False), watch
-        )
-        v = s2 - s1
-        # "both jobs' growth was well under the budget" is the only
-        # evidence that justifies one giant remaining job; a large s1
-        # with v <= 0 is a DEGENERATE calibration (e.g. job 1's shuffle
-        # files were reclaimed mid-job-2, deflating s2), not proof of
-        # tiny data — the giant job would approximate the single-plan
-        # shape measured killed at 40.7 GB (ADVICE r11, medium).
-        tiny = max(s1, s2) < 0.05 * budget
-        if not watch:
-            # scratch dirs unreachable (internals moved): fall back to
-            # the oracle's fixed granularity rather than one giant job
-            g = max(1, sub // _PIPE_ORACLE_CHUNKS)
-        elif v <= 0:
-            # no measurable growth AND both absolute peaks near zero:
-            # everything left fits in one job. Otherwise the
-            # calibration is degenerate — take the conservative fixed
-            # granularity, same as the unreachable-scratch branch.
-            g = sub - 3 if tiny else max(1, sub // _PIPE_ORACLE_CHUNKS)
-        else:
-            b = max(s1 - v, 0)
-            g = max(1, int((budget - b) // v))
-        nxt = 3
-        while nxt < sub:
-            hi = min(nxt + g, sub)
-            write_residues(exb, nxt, hi, sub, first=False)
-            nxt = hi
-    finally:
-        # the pair parquet at the scratch ROOT is already materialized
-        # (every chunk job was an eager write), so the bucket files can
-        # go before the lazy funnel tail is returned
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        spark.sql(f"DROP DATABASE IF EXISTS {db}")
-    pairs = spark.read.parquet(scratch)
-    return _funnel_from_pairs(spark, docs, wcd, ex, pairs)
 
 
 def _funnel_from_pairs(

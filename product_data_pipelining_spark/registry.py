@@ -10,6 +10,11 @@ hash-compares (row-count + schema + order-insensitive value hash), so:
   order differs between engines; rounding makes the comparison stable);
 - output row order is irrelevant (driver sorts before hashing).
 
+Locally the same check runs through one script,
+``scripts/correctness_sweep.py``, over any subset of queries at any
+scale factor; the scale probe's at-scale check is that sweep run as a
+child process. ``oracle`` is the only SQL form any check runs.
+
 Operator IDs in query names refer to SURVEY.md §2's inventory of the
 reference repo's operators.
 """
@@ -30,17 +35,6 @@ class QuerySpec:
     fn: QueryFn
     oracle: str | None  # DuckDB-runnable SQL; None → rows-only check
     doc: str
-    # Optional DuckDB-RESOURCE-shaped twin of ``oracle`` for the scale
-    # probe's out-of-process staging ONLY: a list of statements executed
-    # in order, the LAST being the SELECT whose result is staged. Same
-    # semantics and values as ``oracle`` (pinned equal by pytest on the
-    # gate fixtures); exists because a handful of oracles need work
-    # SEQUENCED to bound DuckDB's memory (e.g. chunked pair
-    # aggregation), and DuckDB schedules one statement's independent
-    # pipelines concurrently, so the sequencing must live across
-    # statements. The driver gate and local sweeps always use
-    # ``oracle``.
-    oracle_stage: tuple[str, ...] | None = None
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
@@ -59,9 +53,7 @@ _PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def register(
-    name: str,
-    oracle: str | None = None,
-    oracle_stage: tuple[str, ...] | None = None,
+    name: str, oracle: str | None = None
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: add a query to the registry."""
     import os
@@ -87,7 +79,6 @@ def register(
             fn=prepared,
             oracle=oracle,
             doc=fn.__doc__ or "",
-            oracle_stage=oracle_stage,
         )
         return fn
 

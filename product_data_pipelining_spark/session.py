@@ -46,10 +46,10 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 # default of 240 MiB is kept.
 BATCH_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
 # extra_conf that gives a batch-profile job full tiered compilation back.
-# Each batch job that runs minutes of work in one JVM ran slower C1-only
-# and passes it (4 cores, wall time, C1-only -> C2): the generator CLI at
-# sf1 ~44 -> ~35 s; the scale probe's correctness stage at sf1 248/250 ->
-# 163/202 s; the correctness sweep over the driver window at sf0.1
+# The two batch jobs that run minutes of work in one JVM ran slower
+# C1-only and pass it (4 cores, wall time, C1-only -> C2): the generator
+# CLI at sf1 ~44 -> ~35 s; the correctness sweep (also the scale probe's
+# at-scale check, run as its child) over the driver window at sf0.1
 # 181/161 -> 161/138 s, though C1-only spent ~20% less CPU there.
 # plans/report.py ran in the same wall time on half the CPU C1-only, so
 # it keeps the batch posture.
@@ -77,8 +77,9 @@ def _default_heap_gb() -> int:
     """Default driver heap: a quarter of available RAM, clamped to
     [4, 24] GiB. 24g is the tuned ceiling for the 128 GiB probe box
     (32-way SHJ builds beside an sf10 table cache); hosts with less
-    RAM scale down instead of inviting the OOM killer — bench.py's
-    in-process DuckDB baseline budgets its own quarter beside this."""
+    RAM scale down instead of inviting the OOM killer — in-process
+    DuckDB (``checks.oracle_compare.duck_connect``) budgets its own
+    quarter beside this."""
     return min(24, max(4, available_ram_gb() // 4))
 
 

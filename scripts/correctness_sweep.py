@@ -1,15 +1,16 @@
 #!/usr/bin/env python3
-"""Full-registry correctness sweep at an arbitrary scale factor.
+"""Correctness sweep: every registered query against its DuckDB oracle.
 
 The driver's gate value-checks 50 queries at sf0.01; the pytest sweep
-covers all 134 oracled queries at sf0.001 + sf0.01. This script runs
-the SAME contract (``checks/oracle_compare.py``) over the ENTIRE
-registry at a bigger SF — driver testdata or generator output — and
+covers every oracled query at sf0.001 + sf0.01. This script is the one
+checker for any other scale factor: it runs the SAME contract
+(``checks/oracle_compare.py``) over the ENTIRE registry — or the
+``--queries`` subset — at driver testdata or generator output, and
 writes ``CORRECTNESS_SF{label}.json`` so the "still correct at scale"
-claim covers every query, not just the headline set. ``--queries``
-checks only the named queries (e.g. every consumer of a changed
-operator) and writes an artifact only when ``--out`` is given. Exits
-non-zero on any mismatch or error.
+claim covers every query. ``scripts/scale_probe.py`` runs it as a child
+over the headline set for its at-scale check. ``--queries`` writes an
+artifact only when ``--out`` is given. Exits non-zero on any mismatch
+or error.
 
 Usage:  python scripts/correctness_sweep.py [--sf-dir /root/testdata/sf0.1]
             [--queries q,...] [--out PATH]
@@ -28,48 +29,30 @@ sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(REPO / "scripts"))
 from _provenance import provenance  # noqa: E402
 
-# results larger than this skip the pandas value compare (driver-memory
-# bound) and record a distributed row-count check instead
-MAX_COMPARE_ROWS = 2_000_000
+# value-compare is driver-bounded (both result sets come to pandas);
+# normalize() is vectorized (checks/oracle_compare._canon_series), so
+# 10M rows x a handful of columns compares in tens of seconds / a few
+# GB of driver memory. Above the cap a result gets a row-count check.
+MAX_COMPARE_ROWS = 10_000_000
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default=None)
-    ap.add_argument("--queries", default=None,
-                    help="comma-separated subset (default: every query)")
-    args = ap.parse_args()
-
-    import duckdb
-
+def sweep(spark, con, sf_dir: str, specs: dict) -> dict[str, str]:
+    """One verdict per query in ``specs`` (name -> QuerySpec-like with
+    ``fn`` and ``oracle``), checked at ``sf_dir`` against the DuckDB
+    connection ``con``: ``match``, ``MISMATCH:<reason>``,
+    ``ROWCOUNT_MISMATCH:<n>!=<want>``, ``rows_only:<n>`` (no oracle),
+    ``rowcount_only:<n>`` (over ``MAX_COMPARE_ROWS``) or
+    ``ERROR:<type>:<message>``. One query's failure never stops the
+    sweep."""
     from product_data_pipelining_spark.checks.oracle_compare import (
-        duck_view_sql,
         frames_match,
     )
-    from product_data_pipelining_spark.io import TPCH_TABLES
-    from product_data_pipelining_spark.registry import all_queries
-    from product_data_pipelining_spark.session import TIERED_JIT, get_spark
-
-    specs = all_queries()
-    if args.queries:
-        names = [q.strip() for q in args.queries.split(",") if q.strip()]
-        unknown = [q for q in names if q not in specs]
-        if unknown:
-            sys.exit(f"unknown queries: {unknown}")
-        specs = {q: specs[q] for q in names}
-    # minutes of query work in one JVM: C2 pays back (session.TIERED_JIT)
-    spark = get_spark(app_name="pdp-correctness-sweep", extra_conf=TIERED_JIT)
-    con = duckdb.connect()
-    for t in TPCH_TABLES:
-        con.execute(duck_view_sql(args.sf_dir, t))
 
     results: dict[str, str] = {}
-    t_start = time.time()
     for name, spec in specs.items():
         t0 = time.time()
         try:
-            df = spec.fn(spark, args.sf_dir)
+            df = spec.fn(spark, sf_dir)
             if spec.oracle is None:
                 results[name] = f"rows_only:{df.count()}"
                 continue
@@ -93,6 +76,36 @@ def main() -> None:
             dt = time.time() - t0
             print(f"# {name}: {results.get(name, '?')[:60]} ({dt:.1f}s)",
                   flush=True)
+    return results
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
+    ap.add_argument("--out", default=None)
+    ap.add_argument("--queries", default=None,
+                    help="comma-separated subset (default: every query)")
+    args = ap.parse_args()
+
+    from product_data_pipelining_spark.checks.oracle_compare import (
+        duck_connect,
+    )
+    from product_data_pipelining_spark.registry import all_queries
+    from product_data_pipelining_spark.session import TIERED_JIT, get_spark
+
+    specs = all_queries()
+    if args.queries:
+        names = [q.strip() for q in args.queries.split(",") if q.strip()]
+        unknown = [q for q in names if q not in specs]
+        if unknown:
+            sys.exit(f"unknown queries: {unknown}")
+        specs = {q: specs[q] for q in names}
+    # minutes of query work in one JVM: C2 pays back (session.TIERED_JIT)
+    spark = get_spark(app_name="pdp-correctness-sweep", extra_conf=TIERED_JIT)
+    con = duck_connect(args.sf_dir)
+
+    t_start = time.time()
+    results = sweep(spark, con, args.sf_dir, specs)
     con.close()
 
     vals = list(results.values())

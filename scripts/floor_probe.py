@@ -58,20 +58,16 @@ _CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
 os.environ.setdefault("SPARK_GRAFT_AQE", "0")
-import duckdb
 from product_data_pipelining_spark.session import get_spark
 from product_data_pipelining_spark.registry import all_queries
-from product_data_pipelining_spark.checks.oracle_compare import duck_view_sql
-from product_data_pipelining_spark.io import TPCH_TABLES
+from product_data_pipelining_spark.checks.oracle_compare import duck_connect
 
 name, sf_dir, repeats = {name!r}, {sf_dir!r}, {repeats}
 spec = all_queries()[name]
 spark = get_spark(app_name=f"floor-{{name}}")
 df = spec.fn(spark, sf_dir)
 df.write.format("noop").mode("overwrite").save()  # warmup
-con = duckdb.connect()
-for t in TPCH_TABLES:
-    con.execute(duck_view_sql(sf_dir, t))
+con = duck_connect(sf_dir)
 con.execute(f"CREATE TEMP TABLE _w AS ({{spec.oracle}})")
 con.execute("DROP TABLE _w")
 st, dt = [], []

@@ -6,6 +6,9 @@ generator (``sources/generator.py`` — schema-identical to the driver's
 testdata, verified by ``test_generate_scale_matches_testdata_schemas``),
 then runs ``bench.py`` back-to-back at the target SF and at sf0.1 under
 identical machine conditions and records per-query scaling factors.
+Unless ``--no-check``, the headline set is then value-checked against
+its DuckDB oracles at the target SF by ``scripts/correctness_sweep.py``
+(run as a child) and the verdicts stored as ``correctness_at_scale``.
 
 Usage:  python scripts/scale_probe.py [--sf 1] [--dir /tmp/sfN] [--regen]
 Writes: BENCH_SF{N}.json at the repo root (e.g. BENCH_SF1.json,
@@ -30,6 +33,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -145,184 +149,33 @@ def attach_isolated_adjudication(artifact: dict, big_key: str,
     artifact["isolated_adjudication"] = block
 
 
-# value-compare is driver-bounded (both result sets come to pandas);
-# headline outputs are aggregate-sized except sessionize, which grows
-# with users — above this cap record a distributed row-count check only.
-# normalize() is vectorized (checks/oracle_compare._canon_series), so
-# 10M rows x a handful of columns compares in tens of seconds / a few
-# GB of driver memory; the cap guards the truly unbounded case.
-MAX_COMPARE_ROWS = 10_000_000
-
-
-def stage_oracles(sf_dir: str, stage_dir: str) -> None:
-    """ORACLE STAGE (child process, NO JVM): materialize every headline
-    oracle's result to parquet.
-
-    Round 6 ran the DuckDB oracles in-process beside a live Spark JVM
-    holding a ~100 GB heap; the heavyweight ANN/dedup oracles
-    (dd13/sim07/sim08/pipe01) died of IOException/OOM at sf10 and the
-    flagship queries ended up with ZERO at-scale value evidence. This
-    stage runs in its own process BEFORE Spark starts, so DuckDB gets
-    the whole machine; ``COPY (query) TO parquet`` streams the result
-    without driver-side materialization. Per-query failures land in
-    ``meta.json`` and become ``check_error:oracle:<type>`` rows.
-    """
-    sys.path.insert(0, str(REPO))
-    import duckdb
-
-    from product_data_pipelining_spark.checks.oracle_compare import (
-        duck_view_sql,
-    )
-    from product_data_pipelining_spark.io import TPCH_TABLES
-    from product_data_pipelining_spark.registry import all_queries
-
-    os.makedirs(stage_dir, exist_ok=True)
-    specs = all_queries()
-    con = duckdb.connect()
-    con.execute("SET temp_directory='/tmp/duck_spill'")
-    # No JVM is alive, but DuckDB's default (~80% of RAM) still OOM-
-    # killed the first sf10 staging run on dd14's banded self-join —
-    # cap it below the box and let the spill directory absorb the rest.
-    con.execute(
-        f"SET memory_limit='{os.environ.get('ORACLE_STAGE_MEM', '64GB')}'"
-    )
-    budget = int(os.environ.get("ORACLE_STAGE_TIMEOUT_SEC", "1800"))
-    meta_path = os.path.join(stage_dir, "meta.json")
-    meta: dict[str, dict] = {}
-    if os.path.exists(meta_path):  # resume a killed run
-        with open(meta_path) as f:
-            meta = json.load(f)
-    for name in HEADLINE:
-        spec = specs[name]
-        if spec.oracle is None:
-            continue
-        pq = os.path.join(stage_dir, f"{name}.parquet")
-        prior = meta.get(name, {})
-        if prior.get("rows") is not None and os.path.exists(pq):
-            continue  # staged by a previous (possibly killed) run
-        if prior.get("error") == "in_flight":
-            # this query OOM-killed the previous child — don't let it
-            # kill every retry; record and move on
-            meta[name] = {"error": "killed_child_process"}
-            with open(meta_path, "w") as f:
-                json.dump(meta, f, indent=2)
-            continue
-        meta[name] = {"error": "in_flight"}
-        with open(meta_path, "w") as f:
-            json.dump(meta, f, indent=2)
-        # one pathological oracle must not eat the probe: interrupt the
-        # connection after the per-query budget (recorded as an error
-        # row, same as any other staging failure)
-        import threading
-
-        timer = threading.Timer(budget, con.interrupt)
-        timer.start()
-        try:
-            # fresh views per query so a poisoned catalog can't leak
-            for t in TPCH_TABLES:
-                con.execute(duck_view_sql(sf_dir, t).replace(
-                    "CREATE VIEW", "CREATE OR REPLACE VIEW"))
-            final = spec.oracle
-            if spec.oracle_stage is not None:
-                # resource-shaped staging twin (same values, pinned by
-                # pytest): run the sequenced prep statements, COPY the
-                # final SELECT — statements are the only boundary DuckDB
-                # won't parallelize across, which is the whole point
-                *prep, final = spec.oracle_stage
-                for stmt in prep:
-                    con.execute(stmt)
-            con.execute(
-                f"COPY ({final}) TO '{pq}' (FORMAT PARQUET)"
-            )
-            n = con.execute(
-                f"SELECT COUNT(*) FROM read_parquet('{pq}')"
-            ).fetchone()[0]
-            meta[name] = {"rows": int(n), "path": pq}
-        except Exception as exc:  # noqa: BLE001 — record, keep staging
-            meta[name] = {"error": type(exc).__name__}
-        finally:
-            timer.cancel()
-        print(f"# staged {name}: {meta[name]}", file=sys.stderr)
-        # write meta after EVERY query: a SIGKILL (OOM) mid-run must
-        # not lose the finished stages — the rerun resumes from here
-        with open(meta_path, "w") as f:
-            json.dump(meta, f, indent=2)
-    con.close()
-
-
-def run_correctness(sf_dir: str, stage_dir: str) -> dict:
+def check_at_scale(sf_dir: str) -> dict:
     """Value-level oracle parity for the headline set AT the probe SF.
 
-    The driver verifies correctness at sf0.01; this re-runs the same
-    contract (shared ``checks.oracle_compare`` normalization — sorted
-    columns, canonical cells, sorted rows) against the PRE-STAGED
-    DuckDB oracle results (see :func:`stage_oracles` — computed in a
-    separate process before the JVM starts, so the two engines never
-    contend for memory). Reading a staged result back goes through
-    ``duckdb.read_parquet(...).df()``, the same materialization path a
-    live oracle used, so dtype-kind parity is preserved.
+    Runs ``scripts/correctness_sweep.py`` over ``HEADLINE`` as a child
+    process (the one checker, with its own C2 JVM and capped in-process
+    DuckDB) and returns its artifact, whatever its exit code: the sweep
+    exits non-zero on any MISMATCH or ERROR, and those verdicts are the
+    point of the check. Callers run it only after every bench leg has
+    exited, and the child's JVM is gone before any later leg starts.
     """
-    sys.path.insert(0, str(REPO))
-    import duckdb
+    with tempfile.TemporaryDirectory() as tmp:
+        out = Path(tmp) / "sweep.json"
+        proc = subprocess.run(
+            [sys.executable, str(REPO / "scripts" / "correctness_sweep.py"),
+             "--sf-dir", sf_dir, "--queries", ",".join(HEADLINE),
+             "--out", str(out)],
+            cwd=REPO,
+        )
+        if not out.exists():
+            sys.exit(f"correctness sweep exited rc={proc.returncode} "
+                     "without an artifact")
+        return json.loads(out.read_text())
 
-    from product_data_pipelining_spark.checks.oracle_compare import (
-        frames_match,
-    )
-    from product_data_pipelining_spark.registry import all_queries
-    from product_data_pipelining_spark.session import TIERED_JIT, get_spark
 
-    with open(os.path.join(stage_dir, "meta.json")) as f:
-        meta = json.load(f)
-    specs = all_queries()
-    # minutes of query work in one JVM: C2 pays back (session.TIERED_JIT)
-    spark = get_spark(app_name="pdp-scale-check", extra_conf=TIERED_JIT)
-    con = duckdb.connect()  # only reads staged parquet — tiny footprint
-
-    results: dict[str, str] = {}
-    for name in HEADLINE:
-        spec = specs[name]
-        try:
-            df = spec.fn(spark, sf_dir)
-            if spec.oracle is None:
-                results[name] = f"rows_only:{df.count()}"
-                continue
-            m = meta.get(name)
-            if m is None or "error" in m:
-                err = (m or {}).get("error", "not_staged")
-                results[name] = f"check_error:oracle:{err}"
-                continue
-            n = df.count()
-            want_n = m["rows"]
-            if n > MAX_COMPARE_ROWS:
-                results[name] = (
-                    f"rowcount_only:{n}" if n == want_n
-                    else f"ROWCOUNT_MISMATCH:{n}!={want_n}"
-                )
-                continue
-            if n != want_n:
-                results[name] = f"ROWCOUNT_MISMATCH:{n}!={want_n}"
-                continue
-            want = con.execute(
-                f"SELECT * FROM read_parquet('{m['path']}')"
-            ).df()
-            ok, reason = frames_match(df.toPandas(), want)
-            results[name] = "match" if ok else f"MISMATCH:{reason}"
-        except Exception as exc:  # noqa: BLE001 — one query's failure
-            # must not lose the whole artifact; record it honestly and
-            # move on. MISMATCH stays a loud string the summary counts;
-            # check_error does too.
-            results[name] = f"check_error:{type(exc).__name__}"
-    con.close()
-    # Tear the check session's JVM down before returning: the full-run
-    # path goes straight into attach_isolated_adjudication, whose
-    # "fresh JVM per query" legs otherwise share the box with THIS
-    # session's probe-SF heap and cached tables. The r12 full-run at
-    # sf10 measured a03 isolated at 28.5 s beside the live check JVM
-    # where the standalone --adjudicate-only leg (no JVM alive)
-    # measures ~8 s — the adjudication exists to REMOVE heap/carryover
-    # effects, so it must never run beside one.
-    spark.stop()
-    return results
+def verdict_summary(sweep: dict) -> str:
+    return (f"{sweep['match']}/{sweep['total']} match, "
+            f"{sweep['mismatch']} mismatched, {sweep['error']} error")
 
 
 def main() -> None:
@@ -337,15 +190,11 @@ def main() -> None:
                          "directory exists")
     ap.add_argument("--no-check", action="store_true",
                     help="skip the at-scale value-level oracle check")
-    ap.add_argument("--oracle-stage", metavar="STAGE_DIR", default=None,
-                    help="internal: run ONLY the DuckDB oracle staging "
-                         "for --dir into STAGE_DIR, then exit (invoked "
-                         "as a child process so no JVM is alive)")
     ap.add_argument("--check-only", action="store_true",
                     help="skip generation and the bench legs: run the "
-                         "oracle staging + at-scale value check and "
-                         "merge correctness_at_scale into the existing "
-                         "BENCH_SF{N}.json")
+                         "at-scale value check (correctness_sweep.py over "
+                         "the headline set) and merge correctness_at_scale "
+                         "into the existing BENCH_SF{N}.json")
     ap.add_argument("--adjudicate-only", action="store_true",
                     help="skip everything else: re-measure the existing "
                          "artifact's >2x bench-tail rows in fresh JVMs "
@@ -355,10 +204,6 @@ def main() -> None:
 
     sf_label = f"{args.sf:g}".replace(".", "_")
     big_dir = args.dir or f"/tmp/sf{sf_label}"
-
-    if args.oracle_stage:
-        stage_oracles(big_dir, args.oracle_stage)
-        return
 
     if args.adjudicate_only:
         out_path = REPO / f"BENCH_SF{sf_label}.json"
@@ -377,28 +222,11 @@ def main() -> None:
     if args.check_only:
         out_path = REPO / f"BENCH_SF{sf_label}.json"
         artifact = json.loads(out_path.read_text())
-        stage_dir = f"/tmp/oracle_stage_sf{sf_label}"
-        for _attempt in range(3):
-            rc = subprocess.run(
-                [sys.executable, str(REPO / "scripts" / "scale_probe.py"),
-                 "--dir", big_dir, "--oracle-stage", stage_dir],
-                cwd=REPO,
-            ).returncode
-            if rc == 0:
-                break
-            print(f"# oracle staging exited rc={rc}; resuming",
-                  file=sys.stderr)
-        artifact["correctness_at_scale"] = run_correctness(big_dir, stage_dir)
+        sweep = check_at_scale(big_dir)
+        artifact["correctness_at_scale"] = sweep["results"]
         write_artifact(out_path, artifact)
-        vals = list(artifact["correctness_at_scale"].values())
-        print(json.dumps({
-            "artifact": out_path.name,
-            "correct_at_scale": (
-                f"{sum(v == 'match' for v in vals)}/{len(vals)} match, "
-                f"{sum('MISMATCH' in v for v in vals)} mismatched, "
-                f"{sum('check_error' in v for v in vals)} check_error"
-            ),
-        }))
+        print(json.dumps({"artifact": out_path.name,
+                          "correct_at_scale": verdict_summary(sweep)}))
         return
 
     if args.regen or not os.path.isdir(big_dir):
@@ -464,26 +292,12 @@ def main() -> None:
         except (json.JSONDecodeError, OSError):
             pass
     write_artifact(out_path, artifact)
+    sweep = None
     if not args.no_check:
-        # oracle staging runs in a CHILD process while no JVM is alive
-        # (the benches above were subprocesses and have exited), so
-        # DuckDB gets most of the machine for the heavyweight oracles.
-        # Staging is resumable (per-query meta writes), so an OOM-killed
-        # child is retried and picks up where it died; a query that
-        # kills the child twice is recorded as not_staged rather than
-        # losing the whole correctness stage.
-        stage_dir = f"/tmp/oracle_stage_sf{sf_label}"
-        for _attempt in range(3):
-            rc = subprocess.run(
-                [sys.executable, str(REPO / "scripts" / "scale_probe.py"),
-                 "--dir", big_dir, "--oracle-stage", stage_dir],
-                cwd=REPO,
-            ).returncode
-            if rc == 0:
-                break
-            print(f"# oracle staging exited rc={rc}; resuming",
-                  file=sys.stderr)
-        artifact["correctness_at_scale"] = run_correctness(big_dir, stage_dir)
+        # the bench legs above were subprocesses and have exited, so the
+        # sweep child has the machine to itself
+        sweep = check_at_scale(big_dir)
+        artifact["correctness_at_scale"] = sweep["results"]
         artifact.pop("correctness_at_scale_prior_run", None)
         write_artifact(out_path, artifact)
     # fresh-JVM adjudication of any >2x bench-tail row, embedded so the
@@ -495,13 +309,8 @@ def main() -> None:
                "worst_scaling": artifact["worst_scaling"],
                "big_ratio_vs_duckdb": big["ratio_vs_duckdb"],
                "sf0_1_ratio_vs_duckdb": sf01["ratio_vs_duckdb"]}
-    if "correctness_at_scale" in artifact:
-        vals = list(artifact["correctness_at_scale"].values())
-        summary["correct_at_scale"] = (
-            f"{sum(v == 'match' for v in vals)}/{len(vals)} match, "
-            f"{sum('MISMATCH' in v for v in vals)} mismatched, "
-            f"{sum('check_error' in v for v in vals)} check_error"
-        )
+    if sweep is not None:
+        summary["correct_at_scale"] = verdict_summary(sweep)
     print(json.dumps(summary))
 
 

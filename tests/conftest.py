@@ -11,6 +11,9 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from product_data_pipelining_spark.checks.oracle_compare import (  # noqa: E402
+    duck_view_sql,
+)
 from product_data_pipelining_spark.io import TPCH_TABLES  # noqa: E402
 from product_data_pipelining_spark.session import get_spark  # noqa: E402
 
@@ -37,8 +40,6 @@ def ddb(sf_dir):
     mirroring the driver's oracle setup."""
     con = duckdb.connect()
     for t in TPCH_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+        con.execute(duck_view_sql(sf_dir, t))
     yield con
     con.close()

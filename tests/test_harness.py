@@ -1,5 +1,6 @@
 """The measurement harness in scripts/: the bench posture module, the
-same-process A/B core, that every script still compiles and (for the
+same-process A/B core, the correctness sweep's verdicts and the scale
+probe's use of it, that every script still compiles and (for the
 argparse ones) answers --help, so no probe imports a deleted helper, and
 that the docs name no script that is gone."""
 
@@ -131,6 +132,96 @@ def test_ab_refuses_an_existing_out(spark, sf_dir, tmp_path):
             reps=1, out=str(out),
         )
     assert out.read_text() == "earlier result\n"
+
+
+def test_sweep_gives_each_verdict(spark, sf_dir, monkeypatch):
+    """The one oracle checker over fake specs on real tables: a value
+    match, a value mismatch, a row-count mismatch, a query with no
+    oracle, a result over the value-compare cap and a query that
+    raises each get their own verdict, and no failure stops the
+    sweep."""
+    import correctness_sweep
+
+    from product_data_pipelining_spark.checks.oracle_compare import (
+        duck_connect,
+    )
+    from product_data_pipelining_spark.io import load_table
+
+    def region(spark, sf):
+        return load_table(spark, sf, "region")
+
+    def boom(spark, sf):
+        raise RuntimeError("boom")
+
+    def spec(fn, oracle):
+        return SimpleNamespace(fn=fn, oracle=oracle)
+
+    specs = {
+        "match": spec(region, "SELECT * FROM region"),
+        "mismatch": spec(
+            region,
+            "SELECT * REPLACE (r_regionkey + 1 AS r_regionkey) FROM region",
+        ),
+        "rowcount": spec(region, "SELECT * FROM region LIMIT 2"),
+        "rows_only": spec(region, None),
+        "error": spec(boom, "SELECT * FROM region"),
+    }
+    con = duck_connect(sf_dir)
+    try:
+        got = correctness_sweep.sweep(spark, con, sf_dir, specs)
+        monkeypatch.setattr(correctness_sweep, "MAX_COMPARE_ROWS", 2)
+        capped = correctness_sweep.sweep(
+            spark, con, sf_dir, {"capped": specs["match"]}
+        )
+    finally:
+        con.close()
+    assert got == {
+        "match": "match",
+        "mismatch": "MISMATCH:5/5 rows differ",
+        "rowcount": "ROWCOUNT_MISMATCH:5!=2",
+        "rows_only": "rows_only:5",
+        "error": "ERROR:RuntimeError:boom",
+    }
+    assert capped == {"capped": "rowcount_only:5"}
+
+
+def test_scale_probe_check_only_stores_the_sweep_results(
+    monkeypatch, tmp_path
+):
+    """``scale_probe --check-only`` runs the correctness sweep as a child
+    over the headline set at the probe's directory and stores the
+    child's ``results`` as ``correctness_at_scale``, also when the child
+    exits non-zero on a mismatch. The child is faked: no JVM starts."""
+    import scale_probe
+
+    results = {"tpch_q1_pricing_summary": "match",
+               "ev02_sessionize": "MISMATCH:1/9 rows differ"}
+    calls = []
+    real_run = subprocess.run
+
+    def fake_run(argv, **kwargs):
+        if not str(argv[1]).endswith("correctness_sweep.py"):
+            return real_run(argv, **kwargs)  # provenance's git calls
+        calls.append(argv)
+        out = Path(argv[argv.index("--out") + 1])
+        out.write_text(json.dumps({"total": 2, "match": 1, "mismatch": 1,
+                                   "error": 0, "results": results}))
+        return subprocess.CompletedProcess(argv, 1)
+
+    artifact_path = tmp_path / "BENCH_SF1.json"
+    artifact_path.write_text(json.dumps({"metric": "sf1_scale_probe"}))
+    monkeypatch.setattr(scale_probe, "REPO", tmp_path)
+    monkeypatch.setattr(scale_probe.subprocess, "run", fake_run)
+    monkeypatch.setattr(sys, "argv", ["scale_probe.py", "--sf", "1",
+                                      "--dir", "/data/sf1", "--check-only"])
+    scale_probe.main()
+
+    artifact = json.loads(artifact_path.read_text())
+    assert artifact["metric"] == "sf1_scale_probe"
+    assert artifact["correctness_at_scale"] == results
+    [argv] = calls
+    assert argv[argv.index("--sf-dir") + 1] == "/data/sf1"
+    assert argv[argv.index("--queries") + 1].split(",") == scale_probe.HEADLINE
 
 
 SCRIPT_FILES = sorted(SCRIPTS.glob("*.py"))

@@ -20,6 +20,7 @@ import pytest
 
 from product_data_pipelining_spark.checks.oracle_compare import (
     dtype_kinds,
+    duck_view_sql,
     normalize,
 )
 from product_data_pipelining_spark.io import TPCH_TABLES
@@ -47,9 +48,7 @@ def par_sf_dir(request):
 def par_ddb(par_sf_dir):
     con = duckdb.connect()
     for t in TPCH_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{par_sf_dir}/{t}.parquet'"
-        )
+        con.execute(duck_view_sql(par_sf_dir, t))
     yield con
     con.close()
 

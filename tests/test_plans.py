@@ -1484,35 +1484,6 @@ def test_bigram_logprob_is_exact_lm_recompute(spark):
     assert {r["lm_bucket"] for r in rows} == {"high", "mid", "low"}
 
 
-def test_pipe01_staged_oracle_matches_plain():
-    """pipe01's oracle_stage (the scale probe's sequenced TEMP-TABLE
-    form — statements are DuckDB's only non-parallel boundary) must
-    produce the IDENTICAL frame as the registered single-statement
-    oracle at both gate SFs."""
-    import duckdb
-
-    from product_data_pipelining_spark.checks.oracle_compare import (
-        duck_view_sql,
-        frames_match,
-    )
-    from product_data_pipelining_spark.io import TPCH_TABLES
-
-    spec = QUERIES["pipe01_curation_funnel"]
-    assert spec.oracle_stage is not None
-    for sfd in ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]:
-        con = duckdb.connect()
-        for t in TPCH_TABLES:
-            con.execute(duck_view_sql(sfd, t))
-        plain = con.execute(spec.oracle).df()
-        *prep, final = spec.oracle_stage
-        for stmt in prep:
-            con.execute(stmt)
-        staged = con.execute(final).df()
-        ok, why = frames_match(staged, plain)
-        assert ok, f"{sfd}: staged oracle diverges from plain: {why}"
-        con.close()
-
-
 def test_asof_join_null_value_at_matched_row(spark):
     """A NULL value on the MATCHED right row must surface as NULL, not an
     older non-null value carried past it (DuckDB ASOF semantics: the value
@@ -1604,79 +1575,6 @@ def test_a03_fused_shape_frozen(spark, sf_dir):
         spark.conf.set("spark.sql.adaptive.enabled", saved_aqe)
 
 
-def test_pipe01_chunked_shape_frozen(spark, tmp_path):
-    """pipe01_chunked's ACCEPTED-GAP closure (r11), made load-bearing —
-    the a03-style freeze the r11 verdict asked for (ask #6). The sf10
-    series in PIPE01_SF10_EXCLUSION.json measured the hypothesis space
-    out: fixed-16 749.5 s / 7.5 GB; budget-maxed 20 GB-target groups
-    904 s (unbucketed) / 939 s (bucketed) — the funnel is
-    pair-aggregation-bound, spilling hash-agg merge I/O grows
-    superlinearly with group size; 5 GB-target groups over a
-    bucket-materialized shingle table won at 681 s / 6.46 GB. Two
-    load-bearing properties are pinned so a regression in either
-    reopens the case:
-
-    - the per-job scratch target stays min(budget * 0.5, 5 GB) — the
-      measured spill-optimal job scale (raising the cap re-runs the
-      MEASURED-FALSE "coarser chunks are faster" hypothesis);
-    - a residue-group job over the bucket-materialized shingle table
-      plans with ZERO s-exchange: the self-join reads bucket-aligned
-      splits on both sides, so the job's only shuffle is the
-      (doc_a, doc_b) pair aggregation — losing bucket alignment
-      re-pays the full b-side exchange once per chunk job (the
-      measured ~5 GB + full-scan constant the r11 rework removed).
-    """
-    from product_data_pipelining_spark.io import write_bucketed
-    from product_data_pipelining_spark.operators.curation import (
-        _PIPE_BUDGET_SAFETY,
-        _PIPE_JOB_SCRATCH_TARGET_GB,
-        _exact_pairs,
-        _funnel_prelude,
-    )
-    from product_data_pipelining_spark.plans.inspect import _jwalk
-
-    assert _PIPE_JOB_SCRATCH_TARGET_GB == 5.0
-    assert _PIPE_BUDGET_SAFETY == 0.5
-
-    conf = spark.conf
-    saved_aqe = conf.get("spark.sql.adaptive.enabled")
-    saved_thr = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    db = "pipe01_shape_freeze"
-    try:
-        _docs, _wcd, _sh, ex = _funnel_prelude(
-            spark, "/root/testdata/sf0.001"
-        )
-        spark.sql(
-            f"CREATE DATABASE IF NOT EXISTS {db} "
-            f"LOCATION '{tmp_path / 'bkt_db'}'"
-        )
-        nb = max(8, spark.sparkContext.defaultParallelism)
-        write_bucketed(
-            ex.repartition(nb, F.col("s")), f"{db}.ex_b", ("s",), nb,
-            sort_by=("s",),
-        )
-        exb = spark.table(f"{db}.ex_b")
-        job = _exact_pairs(
-            exb, a_pred=F.pmod(F.col("doc_id"), F.lit(48)) == 0
-        ).select("doc_a", "doc_b")
-        shuffles = sum(
-            1 for n in _jwalk(job._jdf.queryExecution().executedPlan())
-            if n.getClass().getSimpleName() == "ShuffleExchangeExec"
-        )
-        assert shuffles == 1, (
-            f"chunk job plans {shuffles} exchanges — bucket alignment "
-            "of the shingle self-join lost (expected ONLY the pair-"
-            "aggregation exchange)"
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {db}.ex_b")
-        spark.sql(f"DROP DATABASE IF EXISTS {db}")
-        conf.set("spark.sql.adaptive.enabled", saved_aqe)
-        conf.set("spark.sql.autoBroadcastJoinThreshold", saved_thr)
-
-
 def test_sim05_assigns_every_vector_exactly_once(spark, sf_dir):
     """sim05's assignment-kernel output row count, pinned (r10 verdict
     ask #5): every corpus vector gets exactly ONE cluster row — a
@@ -1689,39 +1587,3 @@ def test_sim05_assigns_every_vector_exactly_once(spark, sf_dir):
     assert out.select("vec_id").distinct().count() == n_vecs
 
 
-def test_pipe01_chunked_matches_single_plan(spark, tmp_path):
-    """pipe01_chunked (the sequenced doc_a-chunk exact mode mirroring
-    the DuckDB staging oracle) must produce the IDENTICAL frame as the
-    registered single-plan pipe01 at both gate SFs — in the fixed-chunk
-    mode AND the budget-auto-sized mode (chunks=None), which partitions
-    the same doc_a residue space into measured-size groups."""
-    from product_data_pipelining_spark.operators.curation import (
-        pipe01_chunked,
-    )
-
-    for i, sfd in enumerate(
-        ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
-    ):
-        plain = (
-            QUERIES["pipe01_curation_funnel"].fn(spark, sfd)
-            .orderBy("doc_id")
-            .collect()
-        )
-        chunked = (
-            pipe01_chunked(
-                spark, sfd, chunks=4, scratch_dir=str(tmp_path / f"c{i}")
-            )
-            .orderBy("doc_id")
-            .collect()
-        )
-        assert [tuple(r) for r in chunked] == [tuple(r) for r in plain], sfd
-        auto = (
-            pipe01_chunked(
-                spark, sfd,
-                scratch_dir=str(tmp_path / f"a{i}"),
-                scratch_budget_gb=1.0,
-            )
-            .orderBy("doc_id")
-            .collect()
-        )
-        assert [tuple(r) for r in auto] == [tuple(r) for r in plain], sfd
