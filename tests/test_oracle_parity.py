@@ -103,18 +103,20 @@ def test_a03_null_price_parity(spark, tmp_path_factory):
     src = SF_DIRS[0]
     tmp = str(tmp_path_factory.mktemp("a03nulls"))
     con = duckdb.connect()
+    con.execute(duck_view_sql(src, "lineitem"))
     con.execute(
         f"""
         COPY (
           SELECT * REPLACE (
             CASE WHEN l_orderkey % 5 = 0 THEN NULL
                  ELSE l_extendedprice END AS l_extendedprice)
-          FROM '{src}/lineitem.parquet'
+          FROM lineitem
         ) TO '{tmp}/lineitem.parquet' (FORMAT PARQUET)
         """
     )
     con.execute(
-        f"CREATE VIEW lineitem AS SELECT * FROM '{tmp}/lineitem.parquet'"
+        f"CREATE OR REPLACE VIEW lineitem AS "
+        f"SELECT * FROM '{tmp}/lineitem.parquet'"
     )
     n_null = con.execute(
         "SELECT COUNT(*) FROM lineitem WHERE l_extendedprice IS NULL"
