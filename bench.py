@@ -9,7 +9,8 @@ Prints {"metric": ..., "value": <spark total sec>, "unit": "sec",
         "queries": {name: sec, ...}, "sf": ...,
         "duckdb_total_sec": ..., "duckdb_queries": {...},
         "spark_oracled_sec": ..., "ratio_vs_duckdb": ...,
-        "driver_java_options": <the JIT posture's JVM flags, "" = C2 on>}.
+        "driver_java_options": <the JIT posture's JVM flags, "" = C2 on>,
+        "class_archive": <mapped | training | off, session.py>}.
 
 The DuckDB baseline is measured IN-PROCESS, interleaved per query with the
 Spark measurement, so sandbox contention (the dominant noise source on a
@@ -60,7 +61,7 @@ from _provenance import provenance  # noqa: E402
 
 from product_data_pipelining_spark.checks.oracle_compare import duck_connect
 from product_data_pipelining_spark.registry import all_queries
-from product_data_pipelining_spark.session import DEFAULT_CPUS, get_spark
+from product_data_pipelining_spark.session import DEFAULT_CPUS, get_spark, jvm_posture
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = DEFAULT_CPUS
@@ -206,11 +207,10 @@ def main() -> None:
                 "queries_rel_spread": spread,
                 "sf": SF_DIR,
                 "cpus": CPUS,
-                # the JIT posture this headline ran under (session.py:
-                # the serving profile sets none, so C2 stays on)
-                "driver_java_options": spark.sparkContext.getConf().get(
-                    "spark.driver.defaultJavaOptions", ""
-                ),
+                # the driver JVM's posture this headline ran under
+                # (session.py): its JIT flags (the serving profile sets
+                # none, so C2 stays on) and its class_archive state
+                **jvm_posture(spark.sparkContext),
                 "repeats": REPEATS,
                 "only": HEADLINE if _ONLY else None,
                 "duckdb_total_sec": duck_total,

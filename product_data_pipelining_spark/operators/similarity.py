@@ -1597,10 +1597,10 @@ def sim06_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             for j in range(PQ_M)
         ]
     )
-    # per-query LUT as ONE array of PQ_M*PQ_K d6 longs indexed m*K+c
-    # (array_sort over unique BIGINT keys is deterministic); bounded by
-    # construction at PQ_MAX_QUERIES rows — broadcastable at any corpus
-    # size, exactly like the codebook it derives from
+    # per-query LUT as ONE array of PQ_M*k d6 longs indexed m*k+c, k the
+    # seeds per subspace (array_sort over unique BIGINT keys is
+    # deterministic); bounded by construction at PQ_MAX_QUERIES rows —
+    # broadcastable at any corpus size, like the codebook it derives from
     lut = dist.filter(
         (F.col("vec_id") % QUERY_STRIDE == 0)
         & (F.col("vec_id") < QUERY_STRIDE * PQ_MAX_QUERIES)
@@ -1629,9 +1629,11 @@ def sim06_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(lut_wide),
         enc_wide.vec_id != lut_wide.query_id,
     )
+    # k = PQ_K, or fewer when the corpus has fewer than PQ_K seed rows
+    k = F.expr(f"size(lut) div {PQ_M}")
     s6: Column = F.lit(0).cast("long")
     for j in range(PQ_M):
-        s6 = s6 + F.get(F.col("lut"), F.col(f"c{j}") + j * PQ_K)
+        s6 = s6 + F.get(F.col("lut"), F.col(f"c{j}") + k * j)
     scored = joined.select("query_id", "vec_id", s6.alias("s6"))
     w = Window.partitionBy("query_id").orderBy(
         F.asc("s6"), F.asc("vec_id")
@@ -1751,7 +1753,8 @@ _SQL_IVFPQ_CTES_TMPL = f"""
     scored AS (
       SELECT cand.query_id, cand.neighbor_id, cand.cell,
              CAST(list_sum(list_transform(range(0, {PQ_M}),
-               m -> lutl.lt[m * {PQ_K} + encl.codes[m + 1] + 1]))
+               m -> lutl.lt[m * (len(lutl.lt) // {PQ_M})
+                            + encl.codes[m + 1] + 1]))
                AS BIGINT) AS s6
       FROM cand
       JOIN encl ON encl.vec_id = cand.neighbor_id
@@ -1974,7 +1977,11 @@ def _gemm_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         for t in range(dim):  # sequential fold: parity with norm()'s HOF
             acc += S[:, t] * S[:, t]
         Sn = S / np.sqrt(acc)[:, None]
-        kidx = np.arange(pq_k, dtype=np.int64)
+        # a corpus with fewer than PQ_K seed rows has len(S) codes; the
+        # LUT keeps its m*PQ_K + c layout and codes >= len(S) are never
+        # indexed (their slots stay 0)
+        k = len(S)
+        kidx = np.arange(k, dtype=np.int64)
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -1986,16 +1993,16 @@ def _gemm_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 acc += X[:, t] * X[:, t]
             Xn = X / np.sqrt(acc)[:, None]
             codes = np.empty((n, pq_m), dtype=np.int32)
-            d6all = np.empty((n, pq_m, pq_k), dtype=np.int64)
+            d6all = np.zeros((n, pq_m, pq_k), dtype=np.int64)
             for m in range(pq_m):
                 Xm = Xn[:, m * pq_sub:(m + 1) * pq_sub]
                 Cm = Sn[:, m * pq_sub:(m + 1) * pq_sub]
-                l2 = np.zeros((n, pq_k), dtype=np.float64)
+                l2 = np.zeros((n, k), dtype=np.float64)
                 for t in range(pq_sub):  # literal zip_with fold replay
                     d = Xm[:, t, None] - Cm[None, :, t]
                     l2 += d * d
                 d6 = np.floor(l2 * 1e6 + 0.5).astype(np.int64)
-                d6all[:, m, :] = d6
+                d6all[:, m, :k] = d6
                 codes[:, m] = np.argmin(d6 * pq_k + kidx[None, :], axis=1)
             isq = (vid % q_stride == 0) & (vid < q_stride * q_max)
             luts = [

@@ -28,13 +28,29 @@ that role. Every knob below is chosen for the 100 TB target:
   (``SPARK_GRAFT_AQE=0``) keeps full tiered compilation, because a
   long-lived session re-runs its hot code and C1-only code runs slower
   there (the warm headline bench 1.67x).
+- Every profile starts the driver JVM from a persisted AppCDS class
+  archive (``class_archive``), so a fresh JVM skips parsing the ~10k
+  Spark classes it loads: perfbench ``full_refresh`` set-up CPU 8.7 ->
+  5.6 s (median of 10 pairs, 4 cores). The archive lives at
+  ``${XDG_CACHE_HOME:-~/.cache}/product_data_pipelining_spark/cds/``,
+  one per JDK + Spark jar set. The first session trains it, which costs
+  about 4 s more set-up CPU and a ~12 s dump when the JVM exits (this
+  process waits for it at exit); delete that directory to drop it. The
+  JVM refuses an archive while a conf dir on its classpath holds files,
+  so a ``$SPARK_CONF_DIR`` holding only ``*.template`` files (Spark's
+  default ``conf/``) is swapped for an empty engine-owned one, and one
+  holding a real config (``spark-defaults.conf``) is kept and the JVM
+  starts without an archive.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from product_data_pipelining_spark import class_archive
 
 # the one CPU rule: SPARK_GRAFT_CPUS if set, else every core of the host
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
@@ -44,6 +60,7 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 # refresh op filled that ("Compiler has been disabled"), then failed to
 # link a method handle and stopped its SparkContext, so the tiered
 # default of 240 MiB is kept.
+_JAVA_OPTIONS = "spark.driver.defaultJavaOptions"
 BATCH_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
 # extra_conf that gives a batch-profile job full tiered compilation back.
 # The two batch jobs that run minutes of work in one JVM ran slower
@@ -53,7 +70,7 @@ BATCH_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
 # 181/161 -> 161/138 s, though C1-only spent ~20% less CPU there.
 # plans/report.py ran in the same wall time on half the CPU C1-only, so
 # it keeps the batch posture.
-TIERED_JIT = {"spark.driver.defaultJavaOptions": ""}
+TIERED_JIT = {_JAVA_OPTIONS: ""}
 
 
 def available_ram_gb() -> int:
@@ -181,18 +198,39 @@ def get_spark(
             os.environ.get("SPARK_DRIVER_MEM", f"{_default_heap_gb()}g"),
         )
     )
-    if aqe:
-        # Batch profile: C1-only driver JVM, where local mode runs every
-        # task. defaultJavaOptions, not extraJavaOptions: Spark puts them
-        # ahead of a caller's extraJavaOptions instead of being
-        # overwritten. Applies only when this call launches the JVM.
-        # The engine takes this slot over: a value a deployment's
-        # spark-defaults.conf puts here (log4j, GC or agent flags) is
-        # replaced in batch sessions, so such flags belong in
-        # extraJavaOptions there.
+    # The driver JVM's flags: the profile's JIT part (batch: C1-only,
+    # where local mode runs every task; a caller's TIERED_JIT gives C2
+    # back) plus the class archive's, which every profile carries.
+    # defaultJavaOptions, not extraJavaOptions: Spark puts them ahead of
+    # a caller's extraJavaOptions instead of being overwritten. They
+    # apply only when this call launches the JVM. The engine takes this
+    # slot over: a value a deployment's spark-defaults.conf puts here
+    # (log4j, GC or agent flags) is replaced in batch sessions, so such
+    # flags belong in extraJavaOptions there.
+    extra = dict(extra_conf or {})
+    jit = extra.pop(_JAVA_OPTIONS, BATCH_JAVA_OPTIONS if aqe else None)
+    launching = SparkContext._gateway is None
+    archive = class_archive.launch_options() if launching else ""
+    if jit is not None or archive:
         builder = builder.config(
-            "spark.driver.defaultJavaOptions", BATCH_JAVA_OPTIONS
-        )
-    for k, v in (extra_conf or {}).items():
+            _JAVA_OPTIONS, " ".join(o for o in (jit, archive) if o))
+    for k, v in extra.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if archive:
+        class_archive.promote_at_exit(
+            getattr(SparkContext._gateway, "proc", None), archive)
+    return spark
+
+
+def jvm_posture(sc: SparkContext) -> dict[str, str]:
+    """A live driver JVM's posture: its JIT flags (``""`` = full tiered
+    compilation) and whether it maps a class archive
+    (``class_archive.state``)."""
+    opts = sc.getConf().get(_JAVA_OPTIONS, "")
+    return {
+        "driver_java_options": " ".join(
+            o for o in opts.split()
+            if not o.startswith(class_archive.ARCHIVE_FLAGS)),
+        "class_archive": class_archive.state(sc._jvm),
+    }

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import datetime
 import subprocess
+import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -33,7 +34,12 @@ def provenance() -> dict:
     """{"code_commit": ..., "code_dirty": ..., "measured_utc": ...} —
     degrade to "unknown" rather than fail a probe if git is unavailable.
     ``code_dirty`` covers only the measured-code paths (package, scripts,
-    tests, bench, entry), not artifact/doc churn at the repo root."""
+    tests, bench, entry), not artifact/doc churn at the repo root.
+
+    While this process has an active SparkContext, the stamp also names
+    its driver JVM's posture (``session.jvm_posture``: the JIT flags as
+    ``driver_java_options`` and ``class_archive``), so a record says
+    whether it ran C1-only and from a class archive."""
     try:
         commit = subprocess.run(
             ["git", "rev-parse", "HEAD"],
@@ -51,4 +57,13 @@ def provenance() -> dict:
         "measured_utc": datetime.datetime.now(
             datetime.timezone.utc
         ).isoformat(timespec="seconds"),
+        **_jvm_posture(),
     }
+
+
+def _jvm_posture() -> dict:
+    # a process that never built a session has no JVM to stamp (and
+    # this module imports no pyspark for it)
+    session = sys.modules.get("product_data_pipelining_spark.session")
+    sc = session and session.SparkContext._active_spark_context
+    return session.jvm_posture(sc) if sc else {}

@@ -15,8 +15,11 @@ move worth an isolated_bench adjudication.
 Usage:  python scripts/jitter_probe.py [--attempts 5] [--sf-dir ...]
 Writes: JITTER_SPREAD.json at the repo root (referenced by bench.py's
 ``jitter_bands_artifact`` key, so every BENCH_r*.json points here),
-stamped with the ``cpus`` and ``driver_java_options`` of the attempts'
-bench lines; attempts that disagree on either fail the probe.
+stamped with the ``cpus`` and ``driver_java_options`` (JIT flags) of the
+attempts' bench lines; attempts that disagree on either fail the probe.
+Each attempt's ``class_archive`` state is stamped as a list: a series
+that starts on an empty archive cache trains it in attempt 1 and maps it
+after, which is not a different posture.
 
 Methodology notes: each attempt is a fresh process/JVM — the same
 carryover regime as the driver's bench — so the bands capture
@@ -80,10 +83,11 @@ def main() -> None:
 
     spark_samples: dict[str, list[float]] = {}
     duck_samples: dict[str, list[float]] = {}
-    totals, ratios, postures = [], [], set()
+    totals, ratios, postures, archives = [], [], set(), []
     for i in range(args.attempts):
         r = run_bench(args.sf_dir)
         postures.add((r["cpus"], r["driver_java_options"]))
+        archives.append(r["class_archive"])
         totals.append(r["value"])
         if r.get("ratio_vs_duckdb"):
             ratios.append(r["ratio_vs_duckdb"])
@@ -106,6 +110,7 @@ def main() -> None:
         "attempts": args.attempts,
         "cpus": cpus,
         "driver_java_options": java_options,
+        "class_archive": archives,
         "total_sec_band": {"attempts": totals, "min": min(totals),
                            "max": max(totals)},
         "ratio_vs_duckdb_band": {"attempts": ratios,

@@ -258,26 +258,42 @@ def test_driver_window_is_exactly_fifty_and_oracled():
     assert not rows_only, rows_only
 
 
-def test_artifact_provenance_stamp_contract():
+def test_artifact_provenance_stamp_contract(spark):
     """Every probe artifact embeds scripts/_provenance.provenance() (r11
     verdict ask #2: at-scale timing carried no commit provenance). Pin
     the stamp's shape — a 40-hex commit, a code-paths-only dirty flag,
     and a UTC timestamp — so artifacts stay mechanically reconcilable
-    with the tree they were measured on."""
+    with the tree they were measured on. While a SparkContext is active
+    (perfbench's ``# posture`` stamp merges this one) it also names the
+    driver JVM's JIT flags and class archive state; a process without
+    one stamps the commit fields alone."""
+    import json
     import re as _re
+    import subprocess
     import sys
     from pathlib import Path
 
-    sys.path.insert(
-        0, str(Path(__file__).resolve().parents[1] / "scripts")
-    )
+    scripts = Path(__file__).resolve().parents[1] / "scripts"
+    sys.path.insert(0, str(scripts))
     from _provenance import provenance
 
+    from product_data_pipelining_spark.session import jvm_posture
+
     p = provenance()
-    assert set(p) == {"code_commit", "code_dirty", "measured_utc"}
+    assert set(p) == {"code_commit", "code_dirty", "measured_utc",
+                      "driver_java_options", "class_archive"}
     assert _re.fullmatch(r"[0-9a-f]{40}", p["code_commit"])
     assert isinstance(p["code_dirty"], bool)
     assert p["measured_utc"].endswith("+00:00")
+    assert p["class_archive"] in {"mapped", "training", "off"}
+    assert {k: p[k] for k in ("driver_java_options", "class_archive")} \
+        == jvm_posture(spark.sparkContext)
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import json, _provenance; print(json.dumps(sorted(_provenance.provenance())))"],
+        cwd=scripts, capture_output=True, text=True, check=True,
+    ).stdout
+    assert json.loads(out) == ["code_commit", "code_dirty", "measured_utc"]
 
 
 def test_only_run_cannot_overwrite_bench_mirror():

@@ -91,7 +91,9 @@ def test_ab_text_arrow_arms_plan_differently_and_agree(spark, sf_dir, tmp_path):
     q = res["queries"]["tx02_quality_score"]
     assert q["plans_differ"] and q["outputs_equal"] and q["rows"] > 0
     assert len(q["a_samples"]) == len(q["b_samples"]) == 1
-    assert set(res["provenance"]) == {"code_commit", "code_dirty", "measured_utc"}
+    # stamped inside a live session, so it names the driver JVM's posture
+    assert set(res["provenance"]) == {"code_commit", "code_dirty", "measured_utc",
+                                      "driver_java_options", "class_archive"}
     assert json.loads(out.read_text()) == res
 
 

@@ -60,9 +60,15 @@ _kinds = dtype_kinds
 
 @pytest.mark.parametrize("name", ORACLE_CASES)
 def test_oracle_parity(name, spark, par_ddb, par_sf_dir):
+    assert_parity(name, spark, par_ddb, par_sf_dir)
+
+
+def assert_parity(name, spark, con, sf_dir):
+    """The registered query ``name`` at ``sf_dir`` against its oracle on
+    ``con``: same columns, dtype kinds, row count and values."""
     spec = QUERIES[name]
-    got_raw = spec.fn(spark, par_sf_dir).toPandas()
-    want_raw = par_ddb.execute(spec.oracle).df()
+    got_raw = spec.fn(spark, sf_dir).toPandas()
+    want_raw = con.execute(spec.oracle).df()
     got_raw_kinds, want_raw_kinds = _kinds(got_raw), _kinds(want_raw)
     got = normalize(got_raw)
     want = normalize(want_raw)
@@ -86,6 +92,32 @@ def test_oracle_parity(name, spark, par_ddb, par_sf_dir):
         raise AssertionError(
             f"{name}: {int(mism.sum())}/{len(got)} rows mismatch:\n{detail}"
         )
+
+
+@pytest.fixture(scope="module")
+def tiny_corpus_ddb(spark, tmp_path_factory):
+    """A generated sf0.001 directory with 20 embeddings, fewer than the
+    PQ codebook's PQ_K (64) seed rows: only 3 rows seed it."""
+    from product_data_pipelining_spark.sources import generator
+
+    out = str(tmp_path_factory.mktemp("sf0.001-seed42"))
+    generator.generate_scale(spark, out, sf=0.001, seed=42, num_partitions=1)
+    con = duckdb.connect()
+    for t in TPCH_TABLES:
+        con.execute(duck_view_sql(out, t))
+    yield out, con
+    con.close()
+
+
+@pytest.mark.parametrize(
+    "name", ["sim06_pq_adc", "sim07_ann_ivfpq", "sim08_ann_ivfpq_rerank"])
+def test_pq_encode_on_a_corpus_smaller_than_the_codebook(name, spark, tiny_corpus_ddb):
+    """The PQ encode kernel sizes its distance grid by the codebook it
+    got, not by PQ_K: on this corpus it crashed with "operands could not
+    be broadcast together with shapes (20,64) (20,3)"."""
+    out, con = tiny_corpus_ddb
+    assert con.execute("SELECT COUNT(*) FROM embeddings").fetchone()[0] == 20
+    assert_parity(name, spark, con, out)
 
 
 def test_a03_null_price_parity(spark, tmp_path_factory):
