@@ -50,8 +50,11 @@ from pathlib import Path
 from pyspark.find_spark_home import _find_spark_home
 
 APP = "product_data_pipelining_spark"
-# an empty stdout config for the cds tags, then the default level on stderr
-_LOG = "-Xlog:cds*=off -Xlog:cds*=warning:stderr"
+# an empty stdout config for the cds tags; on stderr only cds errors and
+# the dynamic archive's warnings (a refused archive says so there). The
+# plain cds warnings are one "Skipping <class>" line per class a training
+# JVM leaves out of the archive, about 500 of them.
+_LOG = "-Xlog:cds*=off -Xlog:cds=error,cds+dynamic=warning:stderr"
 _MAP, _TRAIN = "-XX:SharedArchiveFile=", "-XX:ArchiveClassesAtExit="
 ARCHIVE_FLAGS = (_MAP, _TRAIN, "-Xlog:cds")
 _CONF_VARS = ("SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR")

@@ -31,7 +31,8 @@ from pyspark.sql import functions as F
 from ..io import load_table, parallelize_scan
 from ..functions.rounding import duck_round
 from ..registry import register
-from .textops import tokens
+from .ann_kernels import grid_cosine
+from .textops import gram_windows, tokens
 
 NUM_MINHASH = 8  # k hash functions
 NUM_BANDS = 4  # r = k / bands = 2 rows per band
@@ -51,31 +52,6 @@ _SQL_SHINGLES = (
     "list_distinct(list_transform(range(1, len(t) - 1), "
     "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))"
 )
-
-
-def gram_windows(toks: Column, n: int) -> Column:
-    """All overlapping n-gram (word) windows of a token array, in
-    positional order (index i holds the gram starting at token i).
-
-    Built by zipping the array with its shifted slices rather than
-    indexing inside a ``transform`` lambda: higher-order functions are
-    not whole-stage-codegen'd, so an ``element_at(toks, i+j)`` lambda
-    re-evaluates the underlying ``split()`` child once per element —
-    O(len²) per document. ``zip_with`` evaluates each array argument
-    once per row and zips element-wise, keeping shingling linear.
-    """
-    # slice length must not overflow start+length int32 math — size() is
-    # always enough to take "the rest of the array"
-    grams = toks
-    for j in range(1, n):
-        grams = F.zip_with(
-            grams,
-            F.slice(toks, j + 1, F.size(toks)),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-    # zip_with pads the shorter side with null; concat_ws skips nulls, so
-    # the trailing entries are partial (<n)-grams — cut to the full ones.
-    return F.slice(grams, 1, F.greatest(F.size(toks) - (n - 1), F.lit(0)))
 
 
 def shingles(toks: Column, n: int = 3) -> Column:
@@ -1138,13 +1114,12 @@ def dd13_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hard-capped — SemDeDup's recipe, so expected occupancy stays
     ~sqrt(N) and within-cell pair work is O(N^1.5), never the
     O(N^2/k) a fixed k degrades to) assigns cells in one corpus-scan
-    ``mapInPandas`` float64-BLAS GEMM against the broadcast codebook,
-    with longdouble refinement of grid-boundary entries (sim01's
-    verified oracle-parity technique) — emitting only narrow
-    (vec_id, cell) rows. The occupancy gate (``SEMDEDUP_MAX_CELL``,
-    dd04's max_bucket backstop) drops degenerate cells BEFORE
-    pairing; qualifying members shuffle once on the cell key into a
-    grouped per-cell GEMM that counts each member's lower-id
+    GEMM against the broadcast codebook (``similarity._gemm_cell_ranked``
+    at nprobe=1) — emitting only narrow (vec_id, cell) rows. The
+    occupancy gate (``SEMDEDUP_MAX_CELL``, dd04's max_bucket backstop)
+    drops degenerate cells BEFORE pairing; qualifying members shuffle
+    once on the cell key into a grouped per-cell
+    ``ann_kernels.grid_cosine`` GEMM that counts each member's lower-id
     semantic twins directly from the strictly-upper triangle of the
     round-4 similarity matrix (occ^2 <= 4096^2 doubles per group,
     bounded by the gate) — the occupancy^2 pair rows never exist as
@@ -1166,105 +1141,17 @@ def dd13_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-loop per cell).
     """
     from .similarity import (
-        CENT_STRIDE,
-        _LIVE_QUERY_BLOCK,
-        centroid_budget,
-        corpus_size,
+        _gemm_cell_ranked,
+        _seed_centroids,
         swap_live_persisted,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    k = centroid_budget(corpus_size(spark, sf_dir))
-    cent_rows = (
-        emb.filter(
-            (F.col("vec_id") % CENT_STRIDE == 7)
-            & (F.col("vec_id") < CENT_STRIDE * k)
-        )
-        .select("vec_id", "embedding")
-        .collect()  # bounded by MAX_CENTROIDS (codebook, never corpus)
-    )
-    cent_rows.sort(key=lambda r: r.vec_id)
-    bkey = (id(spark.sparkContext), "dd13")
-    prev = _LIVE_QUERY_BLOCK.pop(bkey, None)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    c_block = spark.sparkContext.broadcast(
-        (
-            [int(r.vec_id) for r in cent_rows],
-            [list(map(float, r.embedding)) for r in cent_rows],
-        )
-    )
-    _LIVE_QUERY_BLOCK[bkey] = c_block
-
-    def assign(batches):
-        # nested closure: pickled by value, workers don't need the repo
-        import numpy as np
-        import pandas as pd
-
-        c_ids, c_mat = c_block.value
-        if not c_ids:
-            return
-        Cm = np.array(c_mat, dtype=np.float64)
-        cid = np.array(c_ids, dtype=np.int64)
-        c_nrm = np.sqrt(
-            np.sum(Cm.astype(np.longdouble) ** 2, axis=1)
-        ).astype(np.float64)
-        c_nrm = np.where(c_nrm == 0.0, 1.0, c_nrm)  # zero-norm guard
-        Cn = np.ascontiguousarray((Cm / c_nrm[:, None]).T)  # (dim, k)
-        kk = len(cid)
-        pow2 = 1
-        while pow2 < max(kk, 2):
-            pow2 <<= 1
-        idx_arr = np.arange(kk, dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            x_nrm = np.sqrt(
-                np.sum(X.astype(np.longdouble) ** 2, axis=1)
-            ).astype(np.float64)
-            # zero-norm guard: an all-zero embedding would make X/x_nrm
-            # NaN and the later NaN->int64 cast is platform-undefined;
-            # dividing by 1 keeps the row all-zero (sim 0 to everything)
-            x_nrm = np.where(x_nrm == 0.0, 1.0, x_nrm)
-            sims = (X / x_nrm[:, None]) @ Cn
-            # duck_round to the 1e-6 grid (the oracle's 6 dp
-            # assignment): in-place half-away passes + longdouble
-            # refinement for boundary-straddling entries (sim01)
-            a = np.abs(sims)
-            a *= 1e6
-            a += 0.5
-            b = np.rint(a)
-            np.subtract(b, a, out=b)
-            np.abs(b, out=b)
-            near = b < 1e-6
-            if near.any():
-                Xl = X.astype(np.longdouble)
-                Cl = Cm.astype(np.longdouble)
-                for i, j in zip(*np.nonzero(near)):
-                    sims[i, j] = np.float64(
-                        np.dot(Xl[i], Cl[j])
-                        / np.longdouble(x_nrm[i] * c_nrm[j])
-                    )
-                av = np.abs(sims[near])
-                av *= 1e6
-                av += 0.5
-                a[near] = av
-            np.floor(a, out=a)
-            s6 = (a * np.sign(sims)).astype(np.int64)
-            # ascending packed key (-s6, centroid index); index order
-            # IS cent_id order (sorted above), matching the oracle's
-            # (sim DESC, cent_id ASC) ranking
-            keym = (np.int64(1_000_000) - s6) * pow2 + idx_arr
-            bestc = np.argmin(keym, axis=1)
-            yield pd.DataFrame({"vec_id": vid, "cell": cid[bestc]})
-
     asg = swap_live_persisted(
         (id(spark.sparkContext), "dd13_asg"),
-        emb.select("vec_id", "embedding").mapInPandas(
-            assign, "vec_id long, cell long"
-        ),
+        _gemm_cell_ranked(
+            emb, _seed_centroids(spark, sf_dir), 1, "dd13"
+        ).select("vec_id", "cell"),
     )  # consumed by the gate, the pair stage, and the final output
     # occupancy gate BEFORE pairing (dd04's max_bucket shape): an
     # over-full cell never reaches the O(occ^2) kernel, singletons
@@ -1290,41 +1177,11 @@ def dd13_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         import pandas as pd
 
         if len(pdf) < 2:
-            return pd.DataFrame(
-                {
-                    "vec_id": pd.Series([], dtype="int64"),
-                    "n_sem_dups": pd.Series([], dtype="int64"),
-                }
-            )
+            return pd.DataFrame(columns=["vec_id", "n_sem_dups"])
         order = np.argsort(pdf["vec_id"].to_numpy(dtype=np.int64))
         vid = pdf["vec_id"].to_numpy(dtype=np.int64)[order]
         X = np.array(pdf["embedding"].tolist(), dtype=np.float64)[order]
-        nrm = np.sqrt(
-            np.sum(X.astype(np.longdouble) ** 2, axis=1)
-        ).astype(np.float64)
-        nrm = np.where(nrm == 0.0, 1.0, nrm)  # zero-norm guard (see assign)
-        Xn = X / nrm[:, None]
-        sims = Xn @ Xn.T
-        g = np.abs(sims)
-        g *= 1e4
-        g += 0.5
-        d = np.rint(g)
-        np.subtract(d, g, out=d)
-        np.abs(d, out=d)
-        near = d < 1e-6
-        if near.any():
-            Xl = X.astype(np.longdouble)
-            for i, j in zip(*np.nonzero(near)):
-                sims[i, j] = np.float64(
-                    np.dot(Xl[i], Xl[j]) / np.longdouble(nrm[i] * nrm[j])
-                )
-            gv = np.abs(sims[near])
-            gv *= 1e4
-            gv += 0.5
-            g[near] = gv
-        np.floor(g, out=g)
-        cos4 = (g * np.sign(sims)).astype(np.int64) / 1e4
-        mask = cos4 >= thr
+        mask = grid_cosine(X, X, 1e4) / 1e4 >= thr
         cnt = np.triu(mask, 1).sum(axis=0)  # per column j: |{i<j}| hits
         sel = cnt > 0
         return pd.DataFrame(

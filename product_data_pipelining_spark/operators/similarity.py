@@ -3,8 +3,12 @@
 Brute-force cosine top-k is the exactness baseline; the sign-LSH
 bucketed variant is the scale path (candidates only meet inside a
 bucket, so the join fans out by bucket occupancy instead of corpus
-size). All arithmetic is JVM-side higher-order functions
-(``transform`` / ``zip_with`` / ``aggregate``) — no Python in the loop.
+size). The oracled SQL-shaped queries are JVM-side higher-order
+functions (``transform`` / ``zip_with`` / ``aggregate``); the GEMM
+queries (sim01, sim02x, the IVF cell assignment and the per-cell
+kernels of sim05/sim07-sim11, and dedup's dd13) run their pandas UDFs
+on the numpy kernels of ``ann_kernels`` — the grid cosine, the
+nearest-cell cut and the per-row top-k exist there once.
 
 Determinism for the DuckDB oracle: both engines cast float32 elements
 to double *before* multiplying and sum left-to-right, and similarities
@@ -13,6 +17,7 @@ are rounded before ranking, with vec_id as the tiebreak.
 
 from __future__ import annotations
 
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -23,6 +28,11 @@ from ..functions.rounding import (
     duck_round,
 )
 from ..registry import register
+from . import ann_kernels
+from .ann_kernels import grid_cosine, nearest_cells, topk_rows
+
+# workers get the kernels by value (see the ann_kernels docstring)
+cloudpickle.register_pickle_by_value(ann_kernels)
 
 TOP_K = 10
 QUERY_STRIDE = 50  # vec_id % 50 == 0 rows act as the query set
@@ -32,14 +42,27 @@ QUERY_STRIDE = 50  # vec_id % 50 == 0 rows act as the query set
 # scales with the corpus" into a loud error instead of driver OOM.
 # 65536 queries x 64 f64 dims = 32 MiB, comfortably broadcastable.
 MAX_QUERY_BLOCK = 65536
-# Last sim01 query-block broadcast per SparkContext (keyed by id()):
-# lets each invocation release the previous run's executor copies.
-_LIVE_QUERY_BLOCK: dict = {}
-# Sibling registry for PERSISTED DataFrames (sim09's assignment, dd13's):
-# a returned lazy frame must outlive its builder, so each new invocation
-# unpersists the previous run's cached copy instead — repeated bench
-# passes hold exactly ONE live cached frame per (context, tag).
+# A returned lazy frame must outlive its builder, so neither its
+# broadcast nor its cached copy can be released when the builder
+# returns. Instead each new invocation releases the previous run's
+# under the same (context, tag) key: repeated bench passes hold exactly
+# ONE live broadcast / cached frame per key.
+_LIVE_BROADCAST: dict = {}
 _LIVE_PERSISTED: dict = {}
+
+
+def swap_live_broadcast(sc, tag, value):
+    """Broadcast ``value`` and release the previous broadcast under ``tag``.
+
+    unpersist, not destroy: a prior invocation's returned lazy frame may
+    still reference its broadcast, which then just re-ships on use.
+    """
+    key = (id(sc), tag)
+    prev = _LIVE_BROADCAST.pop(key, None)
+    if prev is not None:
+        prev.unpersist(blocking=False)
+    _LIVE_BROADCAST[key] = b = sc.broadcast(value)
+    return b
 
 
 def swap_live_persisted(key, df):
@@ -49,6 +72,8 @@ def swap_live_persisted(key, df):
         prev.unpersist(blocking=False)
     _LIVE_PERSISTED[key] = df.persist()
     return df
+
+
 NEARDUP_COSINE = 0.4
 LSH_BITS = 4  # sign bits of the first 4 dims form the bucket
 CENT_STRIDE = 83  # vec_id % 83 == 7 rows act as IVF seed centroids
@@ -284,13 +309,12 @@ def sim01_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     small side" plan; a corpus-proportional query set trips the assert
     instead of silently OOMing the driver.
 
-    Numeric parity with the sequential-double DuckDB oracle: the bulk
-    scores in float64 BLAS, and any pair whose scaled cosine lands
-    within 1e-6 of a 4 dp rounding boundary is re-accumulated in
-    extended precision (longdouble) before the final double rounding,
-    so the 4-decimal rounded cosine agrees with the oracle's
-    left-to-right double sum (verified exhaustively at sf0.01/sf0.1)
-    while the GEMM keeps its BLAS path.
+    Numeric parity with the sequential-double DuckDB oracle is
+    ``ann_kernels.grid_cosine``'s (verified exhaustively at
+    sf0.01/sf0.1). Each partition drops the query's own row before its
+    local top-k cut: a partition holding the query among <= k rows
+    would otherwise hand it back, and its cosine 1.0 wins the global
+    window.
     """
     # no scan heal here: the BLAS kernel makes this IO-bound, so extra
     # partitions only multiply Python-worker round-trips at small SF (at
@@ -308,88 +332,30 @@ def sim01_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "a query batch must be bounded independent of corpus size — "
             "shard the batch or raise the cap deliberately"
         )
-    # The broadcast must outlive this function (the returned DataFrame is
-    # lazy), so it can't be unpersisted here. Instead each new invocation
-    # releases the previous one's executor copies: accumulation across
-    # repeated runs (bench loops) is capped at ONE live sim01 broadcast
-    # per SparkContext, and the driver-side value is bounded by
-    # MAX_QUERY_BLOCK regardless.
-    prev = _LIVE_QUERY_BLOCK.pop(id(spark.sparkContext), None)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    q_block = spark.sparkContext.broadcast(
+    q_block = swap_live_broadcast(
+        spark.sparkContext,
+        "sim01",
         (
             [int(r.vec_id) for r in q_rows],
             [list(map(float, r.embedding)) for r in q_rows],
-        )
+        ),
     )
-    _LIVE_QUERY_BLOCK[id(spark.sparkContext)] = q_block
-
     top_k = TOP_K
 
     def score(batches):
-        # nested closure: pickled by value, workers don't need the repo
         import numpy as np
         import pandas as pd
 
         q_ids, q_mat = q_block.value
         Q = np.array(q_mat, dtype=np.float64)
         qid = np.array(q_ids, dtype=np.int64)
-        q_nrm = np.sqrt(
-            np.sum(Q.astype(np.longdouble) ** 2, axis=1)
-        ).astype(np.float64)
-        Qn = Q / q_nrm[:, None]  # pre-normalized once per task
         scaled_chunks, vid_chunks = [], []
         for pdf in batches:
             if not len(pdf):
                 continue
             C = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             vid_chunks.append(pdf["vec_id"].to_numpy(dtype=np.int64))
-            c_nrm = np.sqrt(
-                np.sum(C.astype(np.longdouble) ** 2, axis=1)
-            ).astype(np.float64)
-            # float64 BLAS on pre-normalized vectors for the bulk
-            # (longdouble matmul has no BLAS path — scalar loops,
-            # measured far slower and flat across cores; a post-hoc
-            # |corpus|x|queries| outer/divide pass costs more memory
-            # bandwidth than the GEMM itself), then longdouble
-            # refinement with the ORIGINAL dot/(|c||q|) formula for
-            # the rare pairs whose scaled cosine lands within 1e-6 of
-            # a 4 dp rounding boundary, where a summation-order ulp
-            # could flip the rounded value (sim02x's verified
-            # technique). Both float64 paths sit ~1e-14 scaled units
-            # from the true cosine — 8 orders inside the 1e-6 gate —
-            # so every non-flagged pair rounds identically under
-            # either formula, and flagged pairs get the exact value.
-            sims = (C / c_nrm[:, None]) @ Qn.T
-            # in-place |sims|*1e4 + 0.5: the half-away-from-zero grid
-            # in two array passes instead of np.where's six
-            a = np.abs(sims)
-            a *= 1e4
-            a += 0.5
-            b = np.rint(a)
-            np.subtract(b, a, out=b)
-            np.abs(b, out=b)
-            near = b < 1e-6
-            if near.any():
-                Cl = C.astype(np.longdouble)
-                Ql = Q.astype(np.longdouble)
-                for i, j in zip(*np.nonzero(near)):
-                    sims[i, j] = np.float64(
-                        np.dot(Cl[i], Ql[j])
-                        / np.longdouble(c_nrm[i] * q_nrm[j])
-                    )
-                av = np.abs(sims[near])
-                av *= 1e4
-                av += 0.5
-                a[near] = av
-            np.floor(a, out=a)
-            # duck_round to the 1e-4 grid as int64 — ranking happens
-            # on the ROUNDED value (ties broken by neighbor_id), same
-            # as the oracle; sign restores ceil(x-0.5) for negatives
-            scaled_chunks.append(
-                (a * np.sign(sims)).astype(np.int64)
-            )
+            scaled_chunks.append(grid_cosine(C, Q, 1e4))
         if not scaled_chunks:
             return
         # transpose to (nq, corpus_part) and make rows contiguous: the
@@ -400,19 +366,14 @@ def sim01_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             np.concatenate(scaled_chunks).T
         )  # (nq, corpus_part)
         vid = np.concatenate(vid_chunks)
-        out = {"query_id": [], "neighbor_id": [], "cosine_sim": []}
-        for j in range(len(qid)):
-            col = scaled[j]
-            # composite ascending key: (-rounded_sim, neighbor_id)
-            key = (np.int64(10000) - col) * np.int64(1 << 44) + vid
-            key[vid == qid[j]] = np.iinfo(np.int64).max  # drop self
-            k = min(top_k, len(key))
-            idx = np.argpartition(key, k - 1)[:k]
-            idx = idx[np.argsort(key[idx], kind="stable")]
-            out["query_id"].extend([qid[j]] * len(idx))
-            out["neighbor_id"].extend(vid[idx])
-            out["cosine_sim"].extend(col[idx] / 1e4)
-        yield pd.DataFrame(out)
+        ri, ci = topk_rows(scaled, vid, top_k, [(qid, vid)])
+        yield pd.DataFrame(
+            {
+                "query_id": qid[ri],
+                "neighbor_id": vid[ci],
+                "cosine_sim": scaled[ri, ci] / 1e4,
+            }
+        )
 
     # each partition emits only its local top-k per query; the global
     # window merges (#partitions x nq x k) rows — never the full
@@ -585,12 +546,12 @@ def sim02x_ann_lsh_bucketed_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one ~25 MB shuffle of corpus rows, nothing pair-shaped), the
     bounded query block broadcasts keyed by bucket (sim01's
     MAX_QUERY_BLOCK guard + torrent broadcast + single-live-broadcast
-    lifecycle), and each bucket runs ONE longdouble GEMM with the
+    lifecycle), and each bucket runs ONE ``grid_cosine`` GEMM with the
     top-k selected in-kernel — only |queries| x k result rows ever
     leave Python, and no downstream window is needed because a query's
     bucket holds its entire candidate set. Rounding (DuckDB
     half-away-from-zero at 4 dp) and the (sim DESC, neighbor ASC)
-    tiebreak are replicated in-kernel; frame equality with sim02 is
+    tiebreak are the kernels'; frame equality with sim02 is
     pinned at sf0.001/sf0.01 in tests and held at sf5 when measured.
     """
     emb = load_table(spark, sf_dir, "embeddings")
@@ -611,17 +572,10 @@ def sim02x_ann_lsh_bucketed_np(spark: SparkSession, sf_dir: str) -> DataFrame:
         ids, vecs = by_bucket.setdefault(b, ([], []))
         ids.append(int(r.vec_id))
         vecs.append(list(map(float, r.embedding)))
-    key = (id(spark.sparkContext), "sim02x")
-    prev = _LIVE_QUERY_BLOCK.pop(key, None)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    qb = spark.sparkContext.broadcast(by_bucket)
-    _LIVE_QUERY_BLOCK[key] = qb
-
+    qb = swap_live_broadcast(spark.sparkContext, "sim02x", by_bucket)
     top_k = TOP_K
 
     def bucket_topk(pdf):
-        # nested closure: pickled by value, workers don't need the repo
         import numpy as np
         import pandas as pd
 
@@ -631,47 +585,23 @@ def sim02x_ann_lsh_bucketed_np(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not entry or not len(pdf):
             return pd.DataFrame(columns=cols)
         q_ids, q_vecs = entry
-        Q = np.array(q_vecs, dtype=np.float64)
         qid = np.array(q_ids, dtype=np.int64)
-        C = np.array(pdf["embedding"].tolist(), dtype=np.float64)
         vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-        q_nrm = np.sqrt(np.sum(Q**2, axis=1))
-        c_nrm = np.sqrt(np.sum(C**2, axis=1))
-        # float64 BLAS for the bulk (longdouble matmul has no BLAS path
-        # — measured 300x slower at these shapes), then longdouble
-        # refinement (sim01's verified oracle-parity technique) for the
-        # rare pairs whose scaled cosine lands within 1e-6 of a 4 dp
-        # rounding boundary, where a summation-order ulp could flip the
-        # rounded value. Everything else is >>1 ulp from the boundary,
-        # so BLAS-vs-sequential order cannot change r4.
-        sims = Q @ C.T / np.outer(q_nrm, c_nrm)
-        shifted = np.where(sims >= 0, sims * 1e4 + 0.5, sims * 1e4 - 0.5)
-        near = np.abs(shifted - np.rint(shifted)) < 1e-6
-        if near.any():
-            Ql = Q.astype(np.longdouble)
-            Cl = C.astype(np.longdouble)
-            qnl = np.sqrt(np.sum(Ql**2, axis=1))
-            cnl = np.sqrt(np.sum(Cl**2, axis=1))
-            for i, j in zip(*np.nonzero(near)):
-                sims[i, j] = np.float64(
-                    np.dot(Ql[i], Cl[j]) / (qnl[i] * cnl[j])
-                )
-        r4 = (
-            np.where(
-                sims >= 0,
-                np.floor(sims * 1e4 + 0.5),
-                np.ceil(sims * 1e4 - 0.5),
-            )
-            / 1e4
+        s4 = grid_cosine(
+            np.array(q_vecs, dtype=np.float64),
+            np.array(pdf["embedding"].tolist(), dtype=np.float64),
+            1e4,
         )
-        out = []
-        for i in range(len(qid)):
-            mask = vid != qid[i]
-            s, v_ = r4[i][mask], vid[mask]
-            order = np.lexsort((v_, -s))[:top_k]
-            for rank, j in enumerate(order, start=1):
-                out.append((int(qid[i]), int(v_[j]), b, float(s[j]), rank))
-        return pd.DataFrame(out, columns=cols)
+        ri, ci = topk_rows(s4, vid, top_k, [(qid, vid)])
+        return pd.DataFrame(
+            {
+                "query_id": qid[ri],
+                "neighbor_id": vid[ci],
+                "bucket": b,
+                "cosine_sim": s4[ri, ci] / 1e4,
+                "rank": np.arange(len(ri)) - np.searchsorted(ri, ri) + 1,
+            }
+        )
 
     bucket = F.concat(
         *[
@@ -970,10 +900,9 @@ def sim09_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     (single-cell edges missed the exact rank-1 neighbor for 60% of
     queries at sf0.01 — cell-boundary loss, sim04's recall bound);
     the ``KNN_MAX_CELL`` occupancy gate (dd04's max_bucket backstop)
-    drops degenerate cells BEFORE pairing. Both cosine stages run the
-    float64-BLAS + longdouble-boundary-refinement kernel (sim01's
-    verified technique, grid values identical to the sequential-double
-    oracle): assignment is one corpus-scan ``mapInPandas`` GEMM
+    drops degenerate cells BEFORE pairing. Both cosine stages run
+    ``ann_kernels.grid_cosine`` (grid values identical to the
+    sequential-double oracle): assignment is one corpus-scan GEMM
     against the broadcast codebook emitting only (vec_id, cell,
     crank); pair scoring is a cogrouped per-cell GEMM that emits each
     probe's LOCAL top-k as narrow (id, id, sim) rows — never the
@@ -987,104 +916,10 @@ def sim09_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell, making each cell's GEMM-able block a partition-local read.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    k = centroid_budget(corpus_size(spark, sf_dir))
-    cent_rows = (
-        emb.filter(
-            (F.col("vec_id") % CENT_STRIDE == 7)
-            & (F.col("vec_id") < CENT_STRIDE * k)
-        )
-        .select("vec_id", "embedding")
-        .collect()  # bounded by MAX_CENTROIDS (codebook, never corpus)
-    )
-    cent_rows.sort(key=lambda r: r.vec_id)
-    bkey = (id(spark.sparkContext), "sim09")
-    prev = _LIVE_QUERY_BLOCK.pop(bkey, None)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    c_block = spark.sparkContext.broadcast(
-        (
-            [int(r.vec_id) for r in cent_rows],
-            [list(map(float, r.embedding)) for r in cent_rows],
-        )
-    )
-    _LIVE_QUERY_BLOCK[bkey] = c_block
-
-    nprobe = KNN_NPROBE
-
-    def assign(batches):
-        # nested closure: pickled by value, workers don't need the repo
-        import numpy as np
-        import pandas as pd
-
-        c_ids, c_mat = c_block.value
-        Cm = np.array(c_mat, dtype=np.float64)
-        cid = np.array(c_ids, dtype=np.int64)
-        c_nrm = np.sqrt(
-            np.sum(Cm.astype(np.longdouble) ** 2, axis=1)
-        ).astype(np.float64)
-        Cn = np.ascontiguousarray((Cm / c_nrm[:, None]).T)  # (dim, k)
-        kk = len(cid)
-        pow2 = 1
-        while pow2 < max(kk, 2):
-            pow2 <<= 1
-        idx_arr = np.arange(kk, dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            x_nrm = np.sqrt(
-                np.sum(X.astype(np.longdouble) ** 2, axis=1)
-            ).astype(np.float64)
-            sims = (X / x_nrm[:, None]) @ Cn
-            # duck_round to the 1e-6 grid (the oracle's 6 dp
-            # assignment): in-place half-away passes + longdouble
-            # refinement for boundary-straddling entries (sim01)
-            a = np.abs(sims)
-            a *= 1e6
-            a += 0.5
-            b = np.rint(a)
-            np.subtract(b, a, out=b)
-            np.abs(b, out=b)
-            near = b < 1e-6
-            if near.any():
-                Xl = X.astype(np.longdouble)
-                Cl = Cm.astype(np.longdouble)
-                for i, j in zip(*np.nonzero(near)):
-                    sims[i, j] = np.float64(
-                        np.dot(Xl[i], Cl[j])
-                        / np.longdouble(x_nrm[i] * c_nrm[j])
-                    )
-                av = np.abs(sims[near])
-                av *= 1e6
-                av += 0.5
-                a[near] = av
-            np.floor(a, out=a)
-            s6 = (a * np.sign(sims)).astype(np.int64)
-            # ascending packed key (-s6, centroid index); index order
-            # IS cent_id order (sorted above), matching the oracle's
-            # (sim DESC, cent_id ASC) ranking
-            keym = (np.int64(1_000_000) - s6) * pow2 + idx_arr
-            p = min(nprobe, kk)
-            part = np.argpartition(keym, p - 1, axis=1)[:, :p]
-            rowsrt = np.take_along_axis(keym, part, axis=1).argsort(
-                axis=1, kind="stable"
-            )
-            top = np.take_along_axis(part, rowsrt, axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(vid, p),
-                    "cell": cid[top].ravel(),
-                    "crank": np.tile(
-                        np.arange(1, p + 1, dtype=np.int32), len(vid)
-                    ),
-                }
-            )
-
     ranked = swap_live_persisted(
         (id(spark.sparkContext), "sim09_ranked"),
-        emb.select("vec_id", "embedding").mapInPandas(
-            assign, "vec_id long, cell long, crank int"
+        _gemm_cell_ranked(
+            emb, _seed_centroids(spark, sf_dir), KNN_NPROBE, "sim09"
         ),
     )  # consumed by cells AND probes below; lifecycle-tracked (r7 ADVICE)
     v = emb.select("vec_id", "embedding")
@@ -1106,69 +941,26 @@ def sim09_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame(
+        if not len(pa) or not len(pb):
+            return pd.DataFrame(
+                columns=["vec_id", "neighbor_id", "cell", "cosine_sim"]
+            )
+        avid = pa["vec_id"].to_numpy(dtype=np.int64)
+        bvid = pb["b_vec_id"].to_numpy(dtype=np.int64)
+        s4 = grid_cosine(
+            np.array(pa["embedding"].tolist(), dtype=np.float64),
+            np.array(pb["b_embedding"].tolist(), dtype=np.float64),
+            1e4,
+        )
+        ri, ci = topk_rows(s4, bvid, top_k, [(avid, bvid)])
+        return pd.DataFrame(
             {
-                "vec_id": pd.Series([], dtype="int64"),
-                "neighbor_id": pd.Series([], dtype="int64"),
-                "cell": pd.Series([], dtype="int64"),
-                "cosine_sim": pd.Series([], dtype="float64"),
+                "vec_id": avid[ri],
+                "neighbor_id": bvid[ci],
+                "cell": int(pb["b_cell"].iloc[0]),
+                "cosine_sim": s4[ri, ci] / 1e4,
             }
         )
-        if not len(pa) or not len(pb):
-            return empty
-        A = np.array(pa["embedding"].tolist(), dtype=np.float64)
-        avid = pa["vec_id"].to_numpy(dtype=np.int64)
-        B = np.array(pb["b_embedding"].tolist(), dtype=np.float64)
-        bvid = pb["b_vec_id"].to_numpy(dtype=np.int64)
-        cellv = int(pb["b_cell"].iloc[0])
-        a_nrm = np.sqrt(
-            np.sum(A.astype(np.longdouble) ** 2, axis=1)
-        ).astype(np.float64)
-        b_nrm = np.sqrt(
-            np.sum(B.astype(np.longdouble) ** 2, axis=1)
-        ).astype(np.float64)
-        sims = (A / a_nrm[:, None]) @ (B / b_nrm[:, None]).T
-        g = np.abs(sims)
-        g *= 1e4
-        g += 0.5
-        d = np.rint(g)
-        np.subtract(d, g, out=d)
-        np.abs(d, out=d)
-        near = d < 1e-6
-        if near.any():
-            Al = A.astype(np.longdouble)
-            Bl = B.astype(np.longdouble)
-            for i, j in zip(*np.nonzero(near)):
-                sims[i, j] = np.float64(
-                    np.dot(Al[i], Bl[j])
-                    / np.longdouble(a_nrm[i] * b_nrm[j])
-                )
-            gv = np.abs(sims[near])
-            gv *= 1e4
-            gv += 0.5
-            g[near] = gv
-        np.floor(g, out=g)
-        s4 = (g * np.sign(sims)).astype(np.int64)
-        out = {"vec_id": [], "neighbor_id": [], "cosine_sim": []}
-        for i in range(len(avid)):
-            col = s4[i]
-            keyv = (np.int64(10000) - col) * np.int64(1 << 44) + bvid
-            # hard-drop the self row BEFORE the cut (sim10's guard: a
-            # max-sentinel key still survives a <=k-row cell)
-            vpos = np.flatnonzero(bvid != avid[i])
-            if not len(vpos):
-                continue
-            kq = min(top_k, len(vpos))
-            sub = np.argpartition(keyv[vpos], kq - 1)[:kq]
-            idx = vpos[sub[np.argsort(keyv[vpos][sub], kind="stable")]]
-            out["vec_id"].extend([avid[i]] * len(idx))
-            out["neighbor_id"].extend(bvid[idx])
-            out["cosine_sim"].extend(col[idx] / 1e4)
-        res = pd.DataFrame(out)
-        if not len(res):
-            return empty
-        res["cell"] = cellv
-        return res[["vec_id", "neighbor_id", "cell", "cosine_sim"]]
 
     # rename EVERY column on the cells side: both cogroup inputs derive
     # from the same `ranked`/`v` frames and bare shared names resolve
@@ -1232,8 +1024,8 @@ def sim05_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
       ≤ 32 MiB at the MAX_CENTROIDS hard cap) is collected — a
       codebook-bounded fetch, never corpus rows — and broadcast; each
       Arrow batch runs ONE float64-BLAS matmul against it and emits
-      only narrow (vec_id, cluster_id) rows, ``_gemm_cell_ranked``'s
-      kernel at nprobe=1. The r5-r9 form was a crossJoin evaluating
+      only narrow (vec_id, cluster_id) rows: ``_gemm_cell_ranked`` at
+      nprobe=1. The r5-r9 form was a crossJoin evaluating
       the JVM ``aggregate``-HOF cosine INTERPRETED per (vector,
       centroid) pair — n×K CodegenFallback evaluations, 61.8 s at
       sf10, the heaviest row in BENCH_SF10 (the same 5x HOF tax the
@@ -1249,10 +1041,9 @@ def sim05_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``functions/rounding._scaled_long``'s technique), the mean divides
     that exact integer back in double, and assignment compares the
     1e-6-grid cosine with min-cluster tiebreak. Grid values from the
-    BLAS path equal the mirror's sequential-double fold by the
-    longdouble-boundary-refinement argument sim01/sim09 establish
-    (any entry within 1e-6 grid units of a rounding boundary is
-    recomputed exactly), so the bit-exact mirror holds unchanged.
+    BLAS path equal the mirror's sequential-double fold by
+    ``ann_kernels.grid_cosine``'s boundary-refinement argument, so the
+    bit-exact mirror holds unchanged.
     Empty clusters drop out (classic Lloyd's); labels are the seed
     cent_ids, so cluster ids stay stable across rounds and runs.
     """
@@ -1264,90 +1055,17 @@ def sim05_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def assign_to(rows: DataFrame, cents: DataFrame, rnd: int) -> DataFrame:
-        cent_rows = cents.select("cluster_id", "c_emb").collect()
         # bounded by centroid_budget (<= MAX_CENTROIDS codebook rows,
-        # never corpus-proportional) — the established codebook-fetch
-        # pattern (sim09/_gemm_cell_ranked)
-        cent_rows.sort(key=lambda r: r.cluster_id)
-        # lifecycle: keyed per Lloyd's round so repeated invocations in
-        # one context hold at most KMEANS_ITERS live codebook broadcasts
-        # — each new run unpersists its round's predecessor (the
-        # _gemm_cell_ranked swap discipline; r10 ADVICE). unpersist, not
-        # destroy: a prior invocation's returned lazy frame may still
-        # reference its broadcast, which then just re-ships on use.
-        bkey = (id(spark.sparkContext), "sim05", rnd)
-        prev = _LIVE_QUERY_BLOCK.pop(bkey, None)
-        if prev is not None:
-            prev.unpersist(blocking=False)
-        c_block = spark.sparkContext.broadcast(
-            (
-                [int(r.cluster_id) for r in cent_rows],
-                [list(map(float, r.c_emb)) for r in cent_rows],
-            )
+        # never corpus-proportional); the broadcast is keyed per Lloyd's
+        # round, so repeated invocations in one context hold at most
+        # KMEANS_ITERS live codebook broadcasts
+        cent_rows = sorted(
+            (int(r.cluster_id), list(map(float, r.c_emb)))
+            for r in cents.select("cluster_id", "c_emb").collect()
         )
-        _LIVE_QUERY_BLOCK[bkey] = c_block
-
-        def assign(batches):
-            # nested closure: pickled by value, workers don't need the
-            # repo; same GEMM + 1e-6 grid + longdouble refinement as
-            # _gemm_cell_ranked, cut at nprobe=1 (the argmax)
-            import numpy as np
-            import pandas as pd
-
-            c_ids, c_mat = c_block.value
-            Cm = np.array(c_mat, dtype=np.float64)
-            cid = np.array(c_ids, dtype=np.int64)
-            c_nrm = np.sqrt(
-                np.sum(Cm.astype(np.longdouble) ** 2, axis=1)
-            ).astype(np.float64)
-            Cn = np.ascontiguousarray((Cm / c_nrm[:, None]).T)
-            kk = len(cid)
-            pow2 = 1
-            while pow2 < max(kk, 2):
-                pow2 <<= 1
-            idx_arr = np.arange(kk, dtype=np.int64)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-                vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-                x_nrm = np.sqrt(
-                    np.sum(X.astype(np.longdouble) ** 2, axis=1)
-                ).astype(np.float64)
-                sims = (X / x_nrm[:, None]) @ Cn
-                a = np.abs(sims)
-                a *= 1e6
-                a += 0.5
-                b = np.rint(a)
-                np.subtract(b, a, out=b)
-                np.abs(b, out=b)
-                near = b < 1e-6
-                if near.any():
-                    Xl = X.astype(np.longdouble)
-                    Cl = Cm.astype(np.longdouble)
-                    for i, j in zip(*np.nonzero(near)):
-                        sims[i, j] = np.float64(
-                            np.dot(Xl[i], Cl[j])
-                            / np.longdouble(x_nrm[i] * c_nrm[j])
-                        )
-                    av = np.abs(sims[near])
-                    av *= 1e6
-                    av += 0.5
-                    a[near] = av
-                np.floor(a, out=a)
-                s6 = (a * np.sign(sims)).astype(np.int64)
-                # ascending packed key (-s6, centroid index); index
-                # order IS cluster_id order (sorted above) = the
-                # min-id tiebreak of the old max-of-struct aggregate
-                keym = (np.int64(1_000_000) - s6) * pow2 + idx_arr
-                best = np.argmin(keym, axis=1)
-                yield pd.DataFrame(
-                    {"vec_id": vid, "cluster_id": cid[best]}
-                )
-
-        return rows.select("vec_id", "embedding").mapInPandas(
-            assign, "vec_id long, cluster_id long"
-        )
+        return _gemm_cell_ranked(
+            rows, cent_rows, 1, ("sim05", rnd)
+        ).select("vec_id", F.col("cell").alias("cluster_id"))
 
     for rnd in range(KMEANS_ITERS - 1):
         assign = assign_to(train, cents, rnd)
@@ -1814,114 +1532,66 @@ def sim07_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _gemm_cell_ranked(
-    spark: SparkSession, sf_dir: str, nprobe: int, tag: str
-) -> DataFrame:
-    """(vec_id, cell, crank<=nprobe) via one corpus-scan GEMM kernel.
+def _seed_centroids(spark: SparkSession, sf_dir: str) -> list:
+    """The seed codebook as (cent_id, vector) pairs sorted by cent_id.
 
-    sim09's assignment stage generalized for the IVF compositions
-    (sim07/sim08/sim11): the bounded centroid block (k = ceil(sqrt(N)),
-    never corpus-proportional) broadcasts once; each Arrow batch runs
-    ONE float64-BLAS matmul against it and emits only narrow
-    (vec_id, cell, crank) rows — the |corpus| x |centroids| similarity
-    matrix never exists outside a task. Grid parity with the SQL
-    oracle's ROUND(cosine, 6): half-away-from-zero to the 1e-6 grid
-    with longdouble refinement for boundary-straddling entries
-    (sim01's verified technique); ranking is (sim DESC, cent_id ASC)
-    exactly like the oracle's row_number. The JVM HOF crossJoin this
-    replaces evaluated interpreted per-element arithmetic per
-    (vec, centroid) pair — measured ~5x slower at sf1 and the top
-    contributor to sim07/sim11's 2-3.5x-vs-DuckDB gap (round-8
-    verdict); the kernel matches sim09's 0.08x-at-sf10 shape.
+    ``centroid_filter``'s rows: bounded by the sqrt-N budget (codebook,
+    never corpus), so the collect is a codebook-bounded fetch.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    k = centroid_budget(corpus_size(spark, sf_dir))
-    cent_rows = (
-        emb.filter(
-            (F.col("vec_id") % CENT_STRIDE == 7)
-            & (F.col("vec_id") < CENT_STRIDE * k)
-        )
+    rows = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(centroid_filter(spark, sf_dir))
         .select("vec_id", "embedding")
-        .collect()  # bounded by the sqrt-N budget (codebook, never corpus)
+        .collect()
     )
-    cent_rows.sort(key=lambda r: r.vec_id)
-    bkey = (id(spark.sparkContext), tag)
-    prev = _LIVE_QUERY_BLOCK.pop(bkey, None)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    c_block = spark.sparkContext.broadcast(
-        (
-            [int(r.vec_id) for r in cent_rows],
-            [list(map(float, r.embedding)) for r in cent_rows],
-        )
-    )
-    _LIVE_QUERY_BLOCK[bkey] = c_block
+    return sorted((int(r.vec_id), list(map(float, r.embedding))) for r in rows)
+
+
+def _gemm_cell_ranked(
+    rows: DataFrame, cents: list, nprobe: int, tag
+) -> DataFrame:
+    """(vec_id, cell, crank<=nprobe) of ``rows`` via one scan GEMM kernel.
+
+    The IVF assignment of sim05/sim07-sim11 and dd13. ``cents`` is the
+    codebook as (cell id, vector) pairs sorted by id (k = ceil(sqrt(N))
+    seeds, or sim05's trained means; never corpus-proportional); it
+    broadcasts once under ``tag``; each Arrow batch of ``rows``
+    (vec_id, embedding) runs ONE ``ann_kernels.nearest_cells`` GEMM
+    against it and emits only narrow (vec_id, cell, crank) rows — the
+    |rows| x |centroids| similarity matrix never exists outside a task.
+    Ranking is the SQL oracle's ``ROUND(cosine, 6) DESC, cent_id ASC``
+    row_number. The JVM HOF crossJoin this replaces evaluated
+    interpreted per-element arithmetic per (vec, centroid) pair —
+    measured ~5x slower at sf1 and the top contributor to
+    sim07/sim11's 2-3.5x-vs-DuckDB gap (round-8 verdict); the kernel
+    matches sim09's 0.08x-at-sf10 shape.
+    """
+    c_block = swap_live_broadcast(rows.sparkSession.sparkContext, tag, cents)
 
     def assign(batches):
-        # nested closure: pickled by value, workers don't need the repo
         import numpy as np
         import pandas as pd
 
-        c_ids, c_mat = c_block.value
-        Cm = np.array(c_mat, dtype=np.float64)
-        cid = np.array(c_ids, dtype=np.int64)
-        c_nrm = np.sqrt(
-            np.sum(Cm.astype(np.longdouble) ** 2, axis=1)
-        ).astype(np.float64)
-        Cn = np.ascontiguousarray((Cm / c_nrm[:, None]).T)  # (dim, k)
-        kk = len(cid)
-        pow2 = 1
-        while pow2 < max(kk, 2):
-            pow2 <<= 1
-        idx_arr = np.arange(kk, dtype=np.int64)
+        if not c_block.value:
+            return
+        cid = np.array([c for c, _ in c_block.value], dtype=np.int64)
+        C = np.array([e for _, e in c_block.value], dtype=np.float64)
+        crank = np.arange(1, min(nprobe, len(cid)) + 1, dtype=np.int32)
         for pdf in batches:
             if not len(pdf):
                 continue
             X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            x_nrm = np.sqrt(
-                np.sum(X.astype(np.longdouble) ** 2, axis=1)
-            ).astype(np.float64)
-            sims = (X / x_nrm[:, None]) @ Cn
-            a = np.abs(sims)
-            a *= 1e6
-            a += 0.5
-            b = np.rint(a)
-            np.subtract(b, a, out=b)
-            np.abs(b, out=b)
-            near = b < 1e-6
-            if near.any():
-                Xl = X.astype(np.longdouble)
-                Cl = Cm.astype(np.longdouble)
-                for i, j in zip(*np.nonzero(near)):
-                    sims[i, j] = np.float64(
-                        np.dot(Xl[i], Cl[j])
-                        / np.longdouble(x_nrm[i] * c_nrm[j])
-                    )
-                av = np.abs(sims[near])
-                av *= 1e6
-                av += 0.5
-                a[near] = av
-            np.floor(a, out=a)
-            s6 = (a * np.sign(sims)).astype(np.int64)
-            keym = (np.int64(1_000_000) - s6) * pow2 + idx_arr
-            p = min(nprobe, kk)
-            part = np.argpartition(keym, p - 1, axis=1)[:, :p]
-            rowsrt = np.take_along_axis(keym, part, axis=1).argsort(
-                axis=1, kind="stable"
-            )
-            top = np.take_along_axis(part, rowsrt, axis=1)
+            top = nearest_cells(X, C, nprobe)
             yield pd.DataFrame(
                 {
-                    "vec_id": np.repeat(vid, p),
+                    "vec_id": np.repeat(vid, len(crank)),
                     "cell": cid[top].ravel(),
-                    "crank": np.tile(
-                        np.arange(1, p + 1, dtype=np.int32), len(vid)
-                    ),
+                    "crank": np.tile(crank, len(vid)),
                 }
             )
 
-    return emb.select("vec_id", "embedding").mapInPandas(
+    return rows.select("vec_id", "embedding").mapInPandas(
         assign, "vec_id long, cell long, crank int"
     )
 
@@ -1955,19 +1625,15 @@ def _gemm_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()  # <= PQ_K rows: codebook, never corpus
     )
     seed_rows.sort(key=lambda r: (int(r.vec_id) - 3) // PQ_STRIDE)
-    bkey = (id(spark.sparkContext), "sim07pq")
-    prev = _LIVE_QUERY_BLOCK.pop(bkey, None)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    s_block = spark.sparkContext.broadcast(
-        [list(map(float, r.embedding)) for r in seed_rows]
+    s_block = swap_live_broadcast(
+        spark.sparkContext,
+        "sim07pq",
+        [list(map(float, r.embedding)) for r in seed_rows],
     )
-    _LIVE_QUERY_BLOCK[bkey] = s_block
     pq_m, pq_k, pq_sub = PQ_M, PQ_K, PQ_SUB
     q_stride, q_max = QUERY_STRIDE, PQ_MAX_QUERIES
 
     def encode(batches):
-        # nested closure: pickled by value, workers don't need the repo
         import numpy as np
         import pandas as pd
 
@@ -2062,7 +1728,12 @@ def _ivfpq_scored(
     """
     ranked = swap_live_persisted(
         (id(spark.sparkContext), f"sim07_ranked_{nprobe}"),
-        _gemm_cell_ranked(spark, sf_dir, nprobe, f"sim07cent{nprobe}"),
+        _gemm_cell_ranked(
+            load_table(spark, sf_dir, "embeddings"),
+            _seed_centroids(spark, sf_dir),
+            nprobe,
+            f"sim07cent{nprobe}",
+        ),
     )
     codes = _gemm_pq_codes(spark, sf_dir)
     bounded_query = (F.col("vec_id") % QUERY_STRIDE == 0) & (
@@ -2339,7 +2010,7 @@ def sim10_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nprobe-independent).
     ranked = swap_live_persisted(
         (id(spark.sparkContext), "sim10_ranked"),
-        _gemm_cell_ranked(spark, sf_dir, nprobe, "sim10cent"),
+        _gemm_cell_ranked(emb, _seed_centroids(spark, sf_dir), nprobe, "sim10cent"),
     )
     v = emb.select("vec_id", "embedding")
     # members: one cell per corpus vector; probes: the bounded query
@@ -2366,70 +2037,24 @@ def sim10_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     def cell_topc(pl, pr):
         # cogrouped per-cell GEMM: pl = queries probing this cell,
         # pr = the cell's members; emits each query's LOCAL top-C on
-        # the 1e-4 grid — float64 BLAS + longdouble boundary refinement
-        # (sim01's technique), so grid values are independent of the
-        # matmul's batch shape and bit-equal to the brute mirror's.
+        # the 1e-4 grid — grid values are independent of the matmul's
+        # batch shape and bit-equal to the brute mirror's
         import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series([], dtype="int64"),
-                "neighbor_id": pd.Series([], dtype="int64"),
-                "sim4": pd.Series([], dtype="int64"),
-            }
-        )
         if not len(pl) or not len(pr):
-            return empty
-        Q = np.array(pl["embedding"].tolist(), dtype=np.float64)
+            return pd.DataFrame(columns=["query_id", "neighbor_id", "sim4"])
         qid = pl["query_id"].to_numpy(dtype=np.int64)
-        C = np.array(pr["b_embedding"].tolist(), dtype=np.float64)
         vid = pr["b_vec_id"].to_numpy(dtype=np.int64)
-        q_nrm = np.sqrt(
-            np.sum(Q.astype(np.longdouble) ** 2, axis=1)
-        ).astype(np.float64)
-        c_nrm = np.sqrt(
-            np.sum(C.astype(np.longdouble) ** 2, axis=1)
-        ).astype(np.float64)
-        sims = (Q / q_nrm[:, None]) @ (C / c_nrm[:, None]).T
-        a = np.abs(sims)
-        a *= 1e4
-        a += 0.5
-        b = np.rint(a)
-        np.subtract(b, a, out=b)
-        np.abs(b, out=b)
-        near = b < 1e-6
-        if near.any():
-            Ql = Q.astype(np.longdouble)
-            Cl = C.astype(np.longdouble)
-            for i, j in zip(*np.nonzero(near)):
-                sims[i, j] = np.float64(
-                    np.dot(Ql[i], Cl[j])
-                    / np.longdouble(q_nrm[i] * c_nrm[j])
-                )
-            av = np.abs(sims[near])
-            av *= 1e4
-            av += 0.5
-            a[near] = av
-        np.floor(a, out=a)
-        s4 = (a * np.sign(sims)).astype(np.int64)
-        out = {"query_id": [], "neighbor_id": [], "sim4": []}
-        for i in range(len(qid)):
-            col = s4[i]
-            keyv = (np.int64(10000) - col) * np.int64(1 << 44) + vid
-            # hard-drop the self row BEFORE the cut: a max-sentinel
-            # key still survives when the cell has <= cand_c rows
-            vpos = np.flatnonzero(vid != qid[i])
-            if not len(vpos):
-                continue
-            kq = min(cand_c, len(vpos))
-            sub = np.argpartition(keyv[vpos], kq - 1)[:kq]
-            idx = vpos[sub[np.argsort(keyv[vpos][sub], kind="stable")]]
-            out["query_id"].extend([qid[i]] * len(idx))
-            out["neighbor_id"].extend(vid[idx])
-            out["sim4"].extend(col[idx])
-        res = pd.DataFrame(out)
-        return res if len(res) else empty
+        s4 = grid_cosine(
+            np.array(pl["embedding"].tolist(), dtype=np.float64),
+            np.array(pr["b_embedding"].tolist(), dtype=np.float64),
+            1e4,
+        )
+        ri, ci = topk_rows(s4, vid, cand_c, [(qid, vid)])
+        return pd.DataFrame(
+            {"query_id": qid[ri], "neighbor_id": vid[ci], "sim4": s4[ri, ci]}
+        )
 
     # explicit partition count: Python-stage cost is per-KEY, and AQE
     # would coalesce the few-MB exchange to one worker (cg01's lesson)
@@ -2465,7 +2090,6 @@ def sim10_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     mmr_k, lam_n, lam_d = MMR_K, MMR_LAM_NUM, MMR_LAM_DEN
 
     def mmr(pdf):
-        # nested closure: pickled by value
         import numpy as np
         import pandas as pd
 
@@ -2600,8 +2224,7 @@ def sim11_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell assignment and probe ranking come from ``_gemm_cell_ranked``
     (one corpus-scan BLAS matmul against the broadcast sqrt-N
     centroid block, narrow rows out); candidate scoring is a
-    cogrouped per-cell GEMM on the 1e-4 grid with longdouble
-    boundary refinement (sim01's verified technique) that applies
+    cogrouped per-cell ``grid_cosine`` GEMM on the 1e-4 grid that applies
     the cross-label filter INSIDE the kernel and emits each query's
     LOCAL top-k per cell — the global window merges
     |queries| x nprobe x k narrow rows, never the probe-bounded
@@ -2616,7 +2239,7 @@ def sim11_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranked = swap_live_persisted(
         (id(spark.sparkContext), "sim11_ranked"),
-        _gemm_cell_ranked(spark, sf_dir, NPROBE, "sim11cent"),
+        _gemm_cell_ranked(emb, _seed_centroids(spark, sf_dir), NPROBE, "sim11cent"),
     )
     v = emb.select("vec_id", "embedding")
     members = (
@@ -2651,80 +2274,31 @@ def sim11_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series([], dtype="int64"),
-                "q_lang": pd.Series([], dtype="object"),
-                "neighbor_id": pd.Series([], dtype="int64"),
-                "neg_lang": pd.Series([], dtype="object"),
-                "cell": pd.Series([], dtype="int64"),
-                "cosine_sim": pd.Series([], dtype="float64"),
-            }
-        )
+        cols = ["query_id", "q_lang", "neighbor_id", "neg_lang", "cell",
+                "cosine_sim"]
         if not len(pa) or not len(pb):
-            return empty
-        A = np.array(pa["q_emb"].tolist(), dtype=np.float64)
+            return pd.DataFrame(columns=cols)
         avid = pa["query_id"].to_numpy(dtype=np.int64)
         alang = pa["q_lang"].to_numpy(dtype=object)
-        B = np.array(pb["b_embedding"].tolist(), dtype=np.float64)
         bvid = pb["b_vec_id"].to_numpy(dtype=np.int64)
         blang = pb["b_lang"].to_numpy(dtype=object)
-        cellv = int(pb["b_cell"].iloc[0])
-        a_nrm = np.sqrt(
-            np.sum(A.astype(np.longdouble) ** 2, axis=1)
-        ).astype(np.float64)
-        b_nrm = np.sqrt(
-            np.sum(B.astype(np.longdouble) ** 2, axis=1)
-        ).astype(np.float64)
-        sims = (A / a_nrm[:, None]) @ (B / b_nrm[:, None]).T
-        g = np.abs(sims)
-        g *= 1e4
-        g += 0.5
-        d = np.rint(g)
-        np.subtract(d, g, out=d)
-        np.abs(d, out=d)
-        near = d < 1e-6
-        if near.any():
-            Al = A.astype(np.longdouble)
-            Bl = B.astype(np.longdouble)
-            for i, j in zip(*np.nonzero(near)):
-                sims[i, j] = np.float64(
-                    np.dot(Al[i], Bl[j])
-                    / np.longdouble(a_nrm[i] * b_nrm[j])
-                )
-            gv = np.abs(sims[near])
-            gv *= 1e4
-            gv += 0.5
-            g[near] = gv
-        np.floor(g, out=g)
-        s4 = (g * np.sign(sims)).astype(np.int64)
-        out = {
-            "query_id": [], "q_lang": [], "neighbor_id": [],
-            "neg_lang": [], "cosine_sim": [],
-        }
-        for i in range(len(avid)):
-            col = s4[i]
-            keyv = (np.int64(10000) - col) * np.int64(1 << 44) + bvid
-            # cross-label + self filters BEFORE the cut (sim10's guard)
-            vpos = np.flatnonzero((bvid != avid[i]) & (blang != alang[i]))
-            if not len(vpos):
-                continue
-            kq = min(top_k, len(vpos))
-            sub = np.argpartition(keyv[vpos], kq - 1)[:kq]
-            idx = vpos[sub[np.argsort(keyv[vpos][sub], kind="stable")]]
-            out["query_id"].extend([avid[i]] * len(idx))
-            out["q_lang"].extend([alang[i]] * len(idx))
-            out["neighbor_id"].extend(bvid[idx])
-            out["neg_lang"].extend(blang[idx])
-            out["cosine_sim"].extend(col[idx] / 1e4)
-        res = pd.DataFrame(out)
-        if not len(res):
-            return empty
-        res["cell"] = cellv
-        return res[[
-            "query_id", "q_lang", "neighbor_id", "neg_lang",
-            "cell", "cosine_sim",
-        ]]
+        s4 = grid_cosine(
+            np.array(pa["q_emb"].tolist(), dtype=np.float64),
+            np.array(pb["b_embedding"].tolist(), dtype=np.float64),
+            1e4,
+        )
+        # self and same-label rows leave BEFORE the cut
+        ri, ci = topk_rows(s4, bvid, top_k, [(avid, bvid), (alang, blang)])
+        return pd.DataFrame(
+            {
+                "query_id": avid[ri],
+                "q_lang": alang[ri],
+                "neighbor_id": bvid[ci],
+                "neg_lang": blang[ci],
+                "cell": int(pb["b_cell"].iloc[0]),
+                "cosine_sim": s4[ri, ci] / 1e4,
+            }
+        )
 
     # explicit partition count: Python-stage cost is per-KEY, and AQE
     # would coalesce the few-MB exchange to one worker (cg01's lesson)

@@ -50,6 +50,31 @@ def tokens(col: str | Column = "text") -> Column:
     return F.filter(F.split(c, " "), lambda x: x != "")
 
 
+def gram_windows(toks: Column, n: int) -> Column:
+    """All overlapping n-gram (word) windows of a token array, in
+    positional order (index i holds the gram starting at token i).
+
+    Built by zipping the array with its shifted slices rather than
+    indexing inside a ``transform`` lambda: higher-order functions are
+    not whole-stage-codegen'd, so an ``element_at(toks, i+j)`` lambda
+    re-evaluates the underlying ``split()`` child once per element —
+    O(len²) per document. ``zip_with`` evaluates each array argument
+    once per row and zips element-wise, keeping shingling linear.
+    """
+    # slice length must not overflow start+length int32 math — size() is
+    # always enough to take "the rest of the array"
+    grams = toks
+    for j in range(1, n):
+        grams = F.zip_with(
+            grams,
+            F.slice(toks, j + 1, F.size(toks)),
+            lambda a, b: F.concat_ws(" ", a, b),
+        )
+    # zip_with pads the shorter side with null; concat_ws skips nulls, so
+    # the trailing entries are partial (<n)-grams — cut to the full ones.
+    return F.slice(grams, 1, F.greatest(F.size(toks) - (n - 1), F.lit(0)))
+
+
 def marker_score(toks: Column, markers: tuple[str, ...]) -> Column:
     """Count of tokens that appear in a fixed marker vocabulary."""
     return F.size(F.filter(toks, lambda x: x.isin(*markers)))
@@ -400,23 +425,6 @@ K_GRAM = 3
 WINNOW_WINDOW = 4
 
 
-def positional_grams(toks: Column, n: int = K_GRAM) -> Column:
-    """Positional (non-distinct) word n-grams — winnowing's input.
-
-    Same zip-with-shifted-slices construction as dedup.shingles (linear;
-    HOF-safe), but keeps duplicates and positions: winnowing needs the
-    gram sequence, not the gram set.
-    """
-    grams = toks
-    for j in range(1, n):
-        grams = F.zip_with(
-            grams,
-            F.slice(toks, j + 1, F.size(toks)),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-    return F.slice(grams, 1, F.greatest(F.size(toks) - (n - 1), F.lit(0)))
-
-
 @register(
     "tx05_winnow_fingerprints",
     oracle=f"""
@@ -458,7 +466,7 @@ def tx05_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents"), force=True
     )
     toks = tokens()
-    grams = positional_grams(toks)
+    grams = gram_windows(toks, K_GRAM)
     hs = F.transform(grams, lambda g: F.md5(g))
     mins = hs
     for j in range(1, WINNOW_WINDOW):

@@ -13,7 +13,12 @@ small one. Setting TEST_SF_DIR collapses the matrix to that single SF.
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
+import subprocess
+import sys
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -27,6 +32,7 @@ from product_data_pipelining_spark.io import TPCH_TABLES
 from product_data_pipelining_spark.registry import all_queries
 
 QUERIES = all_queries()
+ROOT = Path(__file__).resolve().parents[1]
 ORACLE_CASES = [name for name, spec in QUERIES.items() if spec.oracle is not None]
 ROWS_ONLY_CASES = [name for name, spec in QUERIES.items() if spec.oracle is None]
 
@@ -118,6 +124,103 @@ def test_pq_encode_on_a_corpus_smaller_than_the_codebook(name, spark, tiny_corpu
     out, con = tiny_corpus_ddb
     assert con.execute("SELECT COUNT(*) FROM embeddings").fetchone()[0] == 20
     assert_parity(name, spark, con, out)
+
+
+# The ANN family on the first 8 of the suite SF's embeddings: one seed
+# centroid (vec_id 7), one query (vec_id 0), and cells and scan
+# partitions that hold fewer than TOP_K rows, so every kernel's
+# self-drop decides whether a query comes back as its own neighbour.
+ANN_ORACLED = [
+    "sim01_ann_bruteforce_topk", "sim04_ann_ivf", "sim06_pq_adc",
+    "sim07_ann_ivfpq", "sim08_ann_ivfpq_rerank", "sim09_knn_graph",
+    "sim11_hard_negatives", "dd13_semantic_dedup",
+]
+ANN_ROWS_ONLY = [
+    "sim02x_ann_lsh_bucketed_np", "sim05_kmeans_assign",
+    "sim10_mmr_diverse_topk",
+]
+
+
+@pytest.fixture(scope="module")
+def eight_row_corpus_ddb(sf_dir, tmp_path_factory):
+    out = tmp_path_factory.mktemp("first8")
+    con = duckdb.connect()
+    for t in TPCH_TABLES:
+        src = f"{sf_dir}/{t}.parquet"
+        if t == "embeddings":
+            con.execute(duck_view_sql(sf_dir, t))
+            con.execute(
+                f"COPY (SELECT * FROM embeddings ORDER BY vec_id LIMIT 8) "
+                f"TO '{out}/{t}.parquet' (FORMAT PARQUET)"
+            )
+            con.execute("DROP VIEW embeddings")
+        elif os.path.isdir(src):
+            shutil.copytree(src, out / f"{t}.parquet")
+        else:
+            shutil.copy(src, out)
+        con.execute(duck_view_sql(str(out), t))
+    assert con.execute("SELECT COUNT(*) FROM embeddings").fetchone()[0] == 8
+    yield str(out), con
+    con.close()
+
+
+@pytest.mark.parametrize("name", ANN_ORACLED)
+def test_ann_oracle_parity_on_an_eight_row_corpus(name, spark, eight_row_corpus_ddb):
+    """sim01 returned the query as its own rank-1 neighbour here: a scan
+    partition with <= TOP_K rows kept the self row's sentinel key, and
+    its cosine 1.0 won the global window (Spark 8 rows, DuckDB 7)."""
+    out, con = eight_row_corpus_ddb
+    assert_parity(name, spark, con, out)
+
+
+@pytest.mark.parametrize("name", ANN_ROWS_ONLY)
+def test_ann_rows_only_on_an_eight_row_corpus(name, spark, eight_row_corpus_ddb):
+    out, _ = eight_row_corpus_ddb
+    got = QUERIES[name].fn(spark, out).toPandas()
+    if "neighbor_id" in got:
+        assert not (got["query_id"] == got["neighbor_id"]).any()
+
+
+# A driver outside the repo: the child's script puts the repo on its own
+# sys.path only, so its workers can import nothing from the package.
+FOREIGN_CWD_QUERIES = [
+    "sim01_ann_bruteforce_topk", "sim09_knn_graph", "dd13_semantic_dedup",
+]
+_FOREIGN_CWD_CHILD = f"""
+import json, sys
+sys.path.insert(0, {str(ROOT)!r})
+from product_data_pipelining_spark.checks.oracle_compare import (
+    duck_connect, frames_match)
+from product_data_pipelining_spark.registry import all_queries
+from product_data_pipelining_spark.session import get_spark
+sf_dir = sys.argv[1]
+spark = get_spark(app_name="pdp-foreign-cwd", cpus=2)
+con = duck_connect(sf_dir)
+specs = all_queries()
+print(json.dumps({{
+    n: frames_match(specs[n].fn(spark, sf_dir).toPandas(),
+                    con.execute(specs[n].oracle).df())
+    for n in {FOREIGN_CWD_QUERIES!r}
+}}))
+spark.stop()
+"""
+
+
+def test_ann_kernels_reach_workers_from_a_foreign_cwd(sf_dir, tmp_path):
+    """The kernels' module is registered to pickle by value, so a worker
+    that cannot import the package still runs them."""
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and Path(p).resolve() != ROOT
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _FOREIGN_CWD_CHILD, sf_dir], cwd=tmp_path,
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    verdicts = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert verdicts == {n: [True, ""] for n in FOREIGN_CWD_QUERIES}
 
 
 def test_a03_null_price_parity(spark, tmp_path_factory):

@@ -99,7 +99,8 @@ class _RecordingBuilder:
         return self.conf
 
 
-TRAIN = "-XX:ArchiveClassesAtExit={part} -Xlog:cds*=off -Xlog:cds*=warning:stderr"
+TRAIN = ("-XX:ArchiveClassesAtExit={part} -Xlog:cds*=off "
+         "-Xlog:cds=error,cds+dynamic=warning:stderr")
 
 
 @pytest.mark.parametrize("aqe, extra, launching, want", [
@@ -164,9 +165,11 @@ def _archive_child(cache: Path, conf: dict | None = None, **env) -> subprocess.P
 
 
 def _session_report(proc: subprocess.Popen) -> dict:
-    """The child's one stdout line: no CDS message may reach stdout."""
+    """The child's one stdout line: no CDS message may reach stdout, and
+    no per-class "Skipping" warning of a training JVM reaches stderr."""
     out, err = proc.communicate(timeout=300)
     assert proc.returncode == 0, err[-3000:]
+    assert "Skipping" not in err, err[-3000:]
     lines = out.splitlines()
     assert len(lines) == 1, out
     report = json.loads(lines[0])
