@@ -31,6 +31,9 @@ with ``-XX:SharedArchiveFile``; it has no ``-XX:+AutoCreateSharedArchive``
 - A cache dir that cannot be written also starts the JVM without one.
 - CDS messages go to stderr, never stdout (a JVM whose classpath does not
   match the archive prints a warning and starts without it).
+- An archive the JVM refuses (junk, a zeroed header, another classpath's)
+  is deleted once the session is up, so the next session trains a new
+  one; it is left alone if another process has replaced it meanwhile.
 
 The first run pays for training: about 4 s more set-up CPU and a
 single-threaded dump of about 12 s while the JVM exits (4 cores, JDK
@@ -63,6 +66,10 @@ _EXIT_WAIT_S = 600  # a dump is seconds; a JVM still alive then is hung
 # the part this process's JVM trains, if any: one per process, because
 # the part is named by pid and is promoted only at interpreter exit
 _training: Path | None = None
+# the archive the last JVM this process launched was given to map, as
+# (path, inode, mtime), so that a refused one can be told from its
+# replacement
+_given: tuple[Path, int, int] | None = None
 
 
 def cache_dir() -> Path:
@@ -107,7 +114,8 @@ def launch_options() -> str:
 
     Points the templates-only conf dirs at the engine's empty one in
     ``os.environ``, which the launcher inherits."""
-    global _training
+    global _training, _given
+    _given = None
     spark_home = _find_spark_home()
     conf = {v: os.environ[v] for v in _CONF_VARS if os.environ.get(v)}
     conf.setdefault("SPARK_CONF_DIR", os.path.join(spark_home, "conf"))
@@ -125,7 +133,12 @@ def launch_options() -> str:
         return ""
     os.environ.update(dict.fromkeys(conf, str(empty)))
     archive = cds / f"{key}.jsa"
-    if archive.is_file():
+    try:
+        st = archive.stat()
+    except FileNotFoundError:
+        st = None
+    if st is not None:
+        _given = (archive, st.st_ino, st.st_mtime_ns)
         return f"{_MAP}{archive} {_LOG}"
     if _training is not None:  # this process already trains one
         return ""
@@ -161,6 +174,25 @@ def _promote(proc: subprocess.Popen, part: Path) -> None:
         if (f.suffix == ".jsa" and f.stem != key) or (
                 f.suffix == ".part" and not _alive(f.name.split(".")[1])):
             f.unlink(missing_ok=True)
+
+
+def drop_if_refused(spark) -> None:
+    """Delete the archive the driver JVM of the session ``spark`` just
+    launched was given if it does not map it (:func:`state` reads
+    ``off``), so that the next session trains a new one instead of being
+    refused the same file. A file at that path that is no longer the one
+    the JVM was given (a concurrent promotion replaced it) is kept."""
+    global _given
+    given, _given = _given, None
+    if given is None or state(spark.sparkContext._jvm) != "off":
+        return
+    path, ino, mtime = given
+    try:
+        st = path.stat()
+    except FileNotFoundError:
+        return
+    if (st.st_ino, st.st_mtime_ns) == (ino, mtime):
+        path.unlink(missing_ok=True)
 
 
 def _alive(pid: str) -> bool:

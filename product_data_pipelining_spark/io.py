@@ -315,6 +315,17 @@ def write_table(
     writer.parquet(path)
 
 
+def read_written(df: DataFrame, path: str) -> DataFrame:
+    """The parquet table ``df`` was just written to at ``path``, read
+    back with ``df``'s schema.
+
+    Inferring the schema would run a Spark job to read a file footer;
+    the writer's schema is the footer's, and the reader makes every
+    column nullable as inference does, so both reads give the same
+    frame."""
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
 def write_format(df: DataFrame, path: str, fmt: str, mode: str = "overwrite") -> None:
     """Sink to any lake interchange format (parquet / json / csv / orc).
 

@@ -12,10 +12,17 @@ Scale notes (100 TB design):
   O(products)/O(locations) — orders of magnitude smaller than the price
   fact — so both joins are explicit ``broadcast()``: zero shuffle of the
   fact side at any scale.
-- The marts are single-pass partial aggregations (map-side combine) on
-  low-cardinality keys (category, location). ``COUNT(DISTINCT ...)``
-  keys the shuffle on (group, product) first — Spark's expand-based
-  distinct agg — which also defuses category skew.
+- The marts are partial aggregations (map-side combine) on
+  low-cardinality keys (category, location), written so that Spark
+  never applies its distinct-aggregate rewrite. That rewrite keys the
+  shuffle on (group, product) and, for more than one distinct count,
+  copies every row once per count through an ``Expand``; beside an
+  exact percentile it builds one percentile buffer per (group,
+  product) instead of one per group. ``mart_price_by_category`` counts
+  its products as the size of a per-group ``collect_set``, so all its
+  buffers live at the output grain behind one exchange;
+  ``mart_location_sales`` aggregates twice, first per (location,
+  product), then per location, so each distinct count is a plain count.
 - Averages accumulate in DECIMAL (exact, order-independent) and convert
   to double only at the end: reruns at any parallelism are
   bit-identical, and the result matches DuckDB's DOUBLE ``AVG``
@@ -176,28 +183,40 @@ def mart_location_sales(
 ) -> DataFrame:
     """Per-location physical/online product counts + avg price (A2/J2).
 
-    Reference: ``models/marts/mart_location_sales.sql:1-24``.
-    ``COUNT(DISTINCT CASE WHEN cond THEN product_id END)`` maps to
-    ``countDistinct(when(cond, col))`` — ``when`` without ``otherwise``
-    yields NULL, which distinct-count ignores, identical to SQL CASE.
-    The agg output is one row per location (small) → broadcast it into
-    the INNER join with the dim.
+    Reference: ``models/marts/mart_location_sales.sql:1-24``, whose
+    ``COUNT(DISTINCT CASE WHEN cond THEN product_id END)`` counts the
+    products with at least one row where ``cond`` is TRUE. Two hash
+    aggregates give the same counts with no ``Expand``: per (location,
+    product), ``max`` of each condition (TRUE if any row's is TRUE;
+    NULLs are ignored, and an all-NULL group stays NULL, i.e. not
+    counted) and the ``sum``/``count`` of ``regular_price``; then per
+    location, ``count(when(flag, product_id))`` and ``count(product_id)``
+    (a NULL product is its own first-level group, which neither counts)
+    and the exact decimal average ``sum(sum) / sum(count)``. The agg
+    output is one row per location (small) → broadcast it into the
+    INNER join with the dim.
     """
-    lf = fact_prices.groupBy("location_id").agg(
-        F.countDistinct(
-            F.when(
-                F.col("fulfillment_instore") | F.col("fulfillment_curbside"),
-                F.col("product_id"),
-            )
-        ).alias("physical_count"),
-        F.countDistinct(
-            F.when(
-                F.col("fulfillment_delivery") | F.col("fulfillment_shiptohome"),
-                F.col("product_id"),
-            )
-        ).alias("online_count"),
-        F.countDistinct("product_id").alias("total_products"),
-        duck_round(avg_dec("regular_price"), 2).alias("avg_price"),
+    per_product = fact_prices.groupBy("location_id", "product_id").agg(
+        F.max(
+            F.col("fulfillment_instore") | F.col("fulfillment_curbside")
+        ).alias("physical"),
+        F.max(
+            F.col("fulfillment_delivery") | F.col("fulfillment_shiptohome")
+        ).alias("online"),
+        F.sum("regular_price").alias("price_sum"),
+        F.count("regular_price").alias("price_n"),
+    )
+    lf = per_product.groupBy("location_id").agg(
+        F.count(F.when(F.col("physical"), F.col("product_id"))).alias(
+            "physical_count"
+        ),
+        F.count(F.when(F.col("online"), F.col("product_id"))).alias(
+            "online_count"
+        ),
+        F.count("product_id").alias("total_products"),
+        duck_round(
+            F.sum("price_sum").cast("double") / F.sum("price_n"), 2
+        ).alias("avg_price"),
     )
     dl = dim_locations.alias("dl")
     return dl.join(F.broadcast(lf.alias("lf")), "location_id", "inner").select(
@@ -222,6 +241,12 @@ def mart_price_by_category(fact_prices: DataFrame) -> DataFrame:
     hardest parity point (SURVEY §2.9): exact interpolated percentiles
     with DuckDB's DECIMAL output typing, never ``percentile_approx``.
     NULL ``effective_date`` forms its own group, as in SQL GROUP BY.
+    ``product_count`` is the size of the group's ``collect_set`` (which
+    skips NULLs, as ``COUNT(DISTINCT)`` does), not ``countDistinct``:
+    that would make Spark pre-aggregate every buffer, the percentile's
+    included, per (category, effective_date, product) and sort the
+    whole fact. As written, one aggregate per output group runs behind
+    one exchange, as DuckDB's does.
     """
     agged = (
         fact_prices.filter(
@@ -239,7 +264,9 @@ def mart_price_by_category(fact_prices: DataFrame) -> DataFrame:
             duck_round(
                 avg_dec(F.col("discount_pct").cast("decimal(18,2)")), 2
             ).alias("avg_discount_pct"),
-            F.countDistinct("product_id").alias("product_count"),
+            F.size(F.collect_set("product_id")).cast("long").alias(
+                "product_count"
+            ),
             F.min("regular_price").alias("min_price"),
             F.max("regular_price").alias("max_price"),
             # one shared buffer + sort for all three quartiles

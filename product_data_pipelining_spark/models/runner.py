@@ -23,7 +23,9 @@ staging = never persisted (views); dims/fact/marts = parquet tables,
 ``mode("overwrite")`` = full refresh. Both runners load through
 :func:`_load` and materialize through :func:`build_models`, which writes
 each table and re-reads it before its dependents are built, so the fact
-join is done once and the three marts scan its parquet output.
+join is done once and the three marts scan its parquet output. Every
+re-read of a table the runner just wrote takes the written frame's
+schema (:func:`..io.read_written`), so it starts no schema-inference job.
 """
 
 from __future__ import annotations
@@ -34,7 +36,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import heal_stage, write_swapped
+from ..io import heal_stage, read_written, write_swapped
 from ..operators.upsert import merge_upsert, upsert_last_writer_wins
 from . import dashboard, marts, staging
 
@@ -90,7 +92,8 @@ def build_models(
     Without ``out_dir`` it is pure and lazy — no jobs run until the
     caller acts on a result. With ``out_dir``, each ``MATERIALIZED``
     model is written to ``out_dir/<name>`` (overwrite) as soon as it is
-    built and re-read before any dependent model is built.
+    built and re-read, with the schema it was written with, before any
+    dependent model is built.
     """
     m: dict[str, DataFrame] = {}
 
@@ -98,7 +101,7 @@ def build_models(
         if out_dir is not None and name in MATERIALIZED:
             path = os.path.join(out_dir, name)
             df.write.mode("overwrite").parquet(path)
-            df = df.sparkSession.read.parquet(path)
+            df = read_written(df, path)
         m[name] = df
 
     put("stg_locations", staging.stg_locations(raw["raw_locations"]))
@@ -207,7 +210,10 @@ def run_incremental(
     ``snap_<table>__new``, then delete and rename). A snapshot whose
     swap died between the delete and the rename is first promoted from
     its stage (:func:`..io.heal_stage`), so the next run picks up where
-    the dead one stopped.
+    the dead one stopped. Each written snapshot, like each model, is
+    re-read with the schema it was written with
+    (:func:`..io.read_written`); only the snapshots' first read infers
+    one.
     """
     raw: dict[str, DataFrame] = {}
     for name in RAW_TABLES:
@@ -216,7 +222,7 @@ def run_incremental(
         fresh = _load(spark, raw_dir, name, F.col("fetched_at") > F.lit(since))
         merged = merge_upsert(spark.read.parquet(snap), fresh, _LOAD_SPEC[name][0])
         write_swapped(merged, snap)
-        raw[name] = spark.read.parquet(snap)
+        raw[name] = read_written(merged, snap)
     return build_models(raw, out_dir)
 
 

@@ -220,6 +220,7 @@ def get_spark(
     if archive:
         class_archive.promote_at_exit(
             getattr(SparkContext._gateway, "proc", None), archive)
+        class_archive.drop_if_refused(spark)
     return spark
 
 

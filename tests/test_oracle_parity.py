@@ -26,6 +26,7 @@ import pytest
 from product_data_pipelining_spark.checks.oracle_compare import (
     dtype_kinds,
     duck_view_sql,
+    frames_match,
     normalize,
 )
 from product_data_pipelining_spark.io import TPCH_TABLES
@@ -271,6 +272,96 @@ def test_a03_null_price_parity(spark, tmp_path_factory):
             for i in mism[mism].index[:5]
         )
     )
+
+
+@pytest.fixture(scope="module")
+def null_edge_fixtures(tmp_path_factory) -> str:
+    """The pipeline fixtures with NULL edges injected per (product,
+    location) pair, so the row that survives the upsert carries them:
+    NULL ``promo_price``; NULL fulfillment flags (all four, or one NULL
+    beside a TRUE or FALSE partner); an unparseable and a NULL
+    ``effective_date`` (both land in the NULL-date group); and products
+    whose categories JSON is ``[]``, which gives a NULL category."""
+    from product_data_pipelining_spark.models.pipeline_queries import (
+        _FIXTURE_DIR,
+        _PRELUDE,
+        ensure_fixtures,
+    )
+
+    src = ensure_fixtures()
+    out = str(tmp_path_factory.mktemp("null-edges"))
+    pair = "(TRY_CAST(product_id AS BIGINT) + TRY_CAST(location_id AS BIGINT)) % 11"
+    con = duckdb.connect()
+    try:
+        con.execute(f"""
+            COPY (SELECT * FROM '{src}/raw_locations.parquet')
+            TO '{out}/raw_locations.parquet' (FORMAT PARQUET)""")
+        con.execute(f"""
+            COPY (SELECT * REPLACE (
+                    CASE WHEN TRY_CAST(product_id AS BIGINT) % 13 = 0 THEN '[]'
+                         ELSE categories END AS categories)
+                  FROM '{src}/raw_products.parquet')
+            TO '{out}/raw_products.parquet' (FORMAT PARQUET)""")
+        con.execute(f"""
+            COPY (SELECT * REPLACE (
+                    CASE WHEN {pair} = 0 THEN NULL ELSE promo_price END
+                      AS promo_price,
+                    CASE WHEN {pair} IN (1, 2, 3) THEN NULL
+                         ELSE fulfillment_instore END AS fulfillment_instore,
+                    CASE WHEN {pair} = 1 THEN NULL WHEN {pair} = 2 THEN FALSE
+                         WHEN {pair} = 3 THEN TRUE
+                         ELSE fulfillment_curbside END AS fulfillment_curbside,
+                    CASE WHEN {pair} IN (1, 2, 3) THEN NULL
+                         ELSE fulfillment_delivery END AS fulfillment_delivery,
+                    CASE WHEN {pair} = 1 THEN NULL WHEN {pair} = 2 THEN TRUE
+                         WHEN {pair} = 3 THEN FALSE
+                         ELSE fulfillment_shiptohome END AS fulfillment_shiptohome,
+                    CASE WHEN {pair} = 4 THEN 'not-a-date' WHEN {pair} = 5 THEN NULL
+                         ELSE effective_date END AS effective_date)
+                  FROM '{src}/raw_product_prices.parquet')
+            TO '{out}/raw_product_prices.parquet' (FORMAT PARQUET)""")
+        seen = con.execute(_PRELUDE.replace(_FIXTURE_DIR, out) + f"""
+            SELECT COUNT(*) FILTER (WHERE {pair} = 0 AND promo_price IS NULL),
+                   COUNT(*) FILTER (WHERE {pair} = 1 AND fulfillment_instore IS NULL
+                                    AND fulfillment_shiptohome IS NULL),
+                   COUNT(*) FILTER (WHERE {pair} = 2 AND fulfillment_curbside = FALSE),
+                   COUNT(*) FILTER (WHERE {pair} = 3 AND fulfillment_curbside),
+                   COUNT(*) FILTER (WHERE {pair} = 4 AND effective_date IS NULL),
+                   COUNT(*) FILTER (WHERE {pair} = 5 AND effective_date IS NULL),
+                   COUNT(*) FILTER (WHERE TRY_CAST(product_id AS BIGINT) % 13 = 0
+                                    AND category IS NULL)
+            FROM fact_prices""").fetchone()
+    finally:
+        con.close()
+    assert all(seen), f"an injected edge reaches no fact row: {seen}"
+    return out
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["m07_mart_category_distribution", "m08_mart_location_sales",
+     "m09_mart_price_by_category"],
+)
+def test_marts_null_edge_parity(name, spark, null_edge_fixtures, monkeypatch):
+    """The marts' NULL rules (``max`` of a NULL flag, ``count(when(...))``,
+    ``collect_set`` skipping NULL products, the NULL category and date
+    groups) against the DuckDB replay of the reference SQL."""
+    from product_data_pipelining_spark.models import pipeline_queries
+    from product_data_pipelining_spark.models.runner import build_models, load_raw
+
+    raw_dir = null_edge_fixtures
+    monkeypatch.setattr(pipeline_queries, "_models",
+                        lambda s: build_models(load_raw(s, raw_dir)))
+    spec = QUERIES[name]
+    got = spec.fn(spark, raw_dir).toPandas()
+    con = duckdb.connect()
+    try:
+        want = con.execute(
+            spec.oracle.replace(pipeline_queries._FIXTURE_DIR, raw_dir)).df()
+    finally:
+        con.close()
+    ok, why = frames_match(got, want)
+    assert ok, f"{name}: {why}"
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_CASES)

@@ -106,6 +106,54 @@ def test_marts_read_the_written_fact(spark, tmp_path, kind):
         assert "Join" not in plan, f"{kind}/{name} re-derives the fact:\n{plan}"
 
 
+@pytest.mark.parametrize("kind", ["full", "incremental"])
+def test_written_tables_reread_without_a_job(spark, tmp_path, kind):
+    """Both runners re-read each table they wrote with the schema that
+    inference would give, nullability included, and start no Spark job
+    to do it (inferring the schema runs one to read a file footer)."""
+    import os
+    from unittest import mock
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from product_data_pipelining_spark.models import runner
+
+    raw_dir = ensure_fixtures()
+    out = str(tmp_path / kind)
+    cutoff = "2026-02-01 13:00:00"
+    if kind == "incremental":
+        runner.seed_snapshots(spark, raw_dir, out, until=cutoff)
+    sc = spark.sparkContext
+    groups: dict[str, str] = {}
+    read_parquet = DataFrameReader.parquet
+
+    def grouped_read(reader, *paths, **kwargs):
+        name = os.path.basename(paths[0])
+        if os.path.dirname(paths[0]) != out or name not in runner.MATERIALIZED:
+            return read_parquet(reader, *paths, **kwargs)
+        groups[name] = group = f"reread-{kind}-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            return read_parquet(reader, *paths, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    with mock.patch.object(DataFrameReader, "parquet", grouped_read):
+        if kind == "full":
+            m = run_pipeline(spark, raw_dir, out)
+        else:
+            m = runner.run_incremental(spark, raw_dir, out, since=cutoff)
+    assert sorted(groups) == sorted(runner.MATERIALIZED)
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    for name in runner.MATERIALIZED:
+        inferred = spark.read.parquet(os.path.join(out, name)).schema
+        assert m[name].schema == inferred, f"{kind}/{name}"
+        jobs = tracker.getJobIdsForGroup(groups[name])
+        assert not jobs, f"{kind}/{name}: the re-read ran jobs {jobs}"
+
+
 def test_dashboard_queries_run(models):
     res = dashboard_queries(models)
     # the nine frames, in the order perfbench names its dashboard.* metrics

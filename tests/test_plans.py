@@ -111,6 +111,62 @@ def test_q1_single_shuffle_with_partial_aggregation(spark, sf_dir):
     assert exchange_count(df) == 1
 
 
+def _final_plan_nodes(df) -> list:
+    """Every node of ``df``'s plan as it ran: AQE's final plan, with each
+    query stage's own subtree."""
+    df.collect()
+    root = df._jdf.queryExecution().executedPlan()
+    if root.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        root = root.executedPlan()
+    nodes, todo = [], [root]
+    while todo:
+        n = todo.pop()
+        nodes.append(n)
+        if n.getClass().getSimpleName().endswith("QueryStageExec"):
+            todo.append(n.plan())
+        seq = n.children()
+        todo.extend(seq.apply(i) for i in range(seq.size()))
+    return nodes
+
+
+@pytest.fixture(scope="module")
+def written_fact(spark, tmp_path_factory):
+    """The fact and location dim as the marts read them: re-read from
+    the tables the runner wrote."""
+    from product_data_pipelining_spark.models.runner import run_pipeline
+
+    out = tmp_path_factory.mktemp("warehouse")
+    m = run_pipeline(spark, ensure_fixtures(), str(out))
+    return m["fact_prices"], m["dim_locations"]
+
+
+def test_price_by_category_aggregates_at_the_output_grain(written_fact):
+    """m09's distinct product count must not make Spark pre-aggregate,
+    exact-percentile buffers included, per (category, date, product):
+    one aggregate per output group, behind one exchange."""
+    from product_data_pipelining_spark.models import marts
+
+    nodes = _final_plan_nodes(marts.mart_price_by_category(written_fact[0]))
+    aggs = [n for n in nodes if n.getClass().getSimpleName().endswith("AggregateExec")]
+    assert aggs
+    for n in aggs:
+        keys = n.groupingExpressions().toString()
+        assert "product_id#" not in keys, f"aggregate keyed on product: {keys}"
+    exchanges = [n for n in nodes if n.getClass().getSimpleName() == "ShuffleExchangeExec"]
+    assert len(exchanges) == 1, [n.toString() for n in exchanges]
+
+
+def test_location_sales_counts_distinct_products_without_expand(written_fact):
+    """m08's three distinct counts come from a per-(location, product)
+    aggregate, not from an Expand that copies every fact row 4x."""
+    from product_data_pipelining_spark.models import marts
+
+    nodes = _final_plan_nodes(marts.mart_location_sales(*written_fact))
+    names = [n.getClass().getSimpleName() for n in nodes]
+    assert "ExpandExec" not in names, names
+    assert "HashAggregateExec" in names, names
+
+
 def test_mart_filter_reaches_raw_scan_through_model_chain(spark):
     """Catalyst pushes the mart's category filter through staging + the
     fact join down to the raw parquet scan (lazy layering pays off)."""

@@ -208,9 +208,10 @@ def test_first_session_trains_the_archive_and_the_next_maps_it(
 
 @pytest.mark.parametrize("kind", ["junk", "header-zeroed", "other-classpath"])
 def test_a_bad_archive_at_the_key_path_still_starts(trained_archive, tmp_path, kind):
-    """The JVM falls back to a plain start. An archive trained by another
-    cache dir is one of another classpath: the engine's empty conf dir
-    sits first on it."""
+    """The JVM falls back to a plain start and the refused file is
+    deleted, so the next session trains a new archive. An archive
+    trained by another cache dir is one of another classpath: the
+    engine's empty conf dir sits first on it."""
     path = tmp_path / class_archive.APP / "cds" / trained_archive.name
     path.parent.mkdir(parents=True)
     if kind == "junk":
@@ -223,6 +224,29 @@ def test_a_bad_archive_at_the_key_path_still_starts(trained_archive, tmp_path, k
     report = _session_report(_archive_child(tmp_path))
     assert report["class_archive"] == "off"
     assert any(a.startswith("-XX:SharedArchiveFile=") for a in report["args"])
+    assert not path.exists()
+    assert _session_report(_archive_child(tmp_path))["class_archive"] == "training"
+
+
+@pytest.mark.parametrize("replaced", [False, True], ids=["same-file", "replaced"])
+def test_a_refused_archive_is_dropped_only_if_unchanged(monkeypatch, tmp_path,
+                                                        replaced):
+    """The refused file goes; one a concurrent promotion put at the same
+    path after the JVM launched (another inode) stays."""
+    archive = tmp_path / "key.jsa"
+    archive.write_bytes(b"refused")
+    st = archive.stat()
+    monkeypatch.setattr(class_archive, "_given",
+                        (archive, st.st_ino, st.st_mtime_ns))
+    monkeypatch.setattr(class_archive, "state", lambda jvm: "off")
+    if replaced:
+        fresh = tmp_path / "key.1.part"
+        fresh.write_bytes(b"promoted")
+        os.replace(fresh, archive)
+    class_archive.drop_if_refused(SimpleNamespace(
+        sparkContext=SimpleNamespace(_jvm=None)))
+    assert archive.exists() is replaced
+    assert class_archive._given is None
 
 
 def test_a_real_conf_dir_is_kept_and_starts_without_an_archive(tmp_path):
