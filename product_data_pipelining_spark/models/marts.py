@@ -18,9 +18,10 @@ Scale notes (100 TB design):
   shuffle on (group, product) and, for more than one distinct count,
   copies every row once per count through an ``Expand``; beside an
   exact percentile it builds one percentile buffer per (group,
-  product) instead of one per group. ``mart_price_by_category`` counts
-  its products as the size of a per-group ``collect_set``, so all its
-  buffers live at the output grain behind one exchange;
+  product) instead of one per group. ``mart_category_distribution`` and
+  ``mart_price_by_category`` count their products as the size of a
+  per-group ``collect_set``, so all their buffers live at the output
+  grain behind one exchange;
   ``mart_location_sales`` aggregates twice, first per (location,
   product), then per location, so each distinct count is a plain count.
 - Averages accumulate in DECIMAL (exact, order-independent) and convert
@@ -166,12 +167,20 @@ def mart_category_distribution(fact_prices: DataFrame) -> DataFrame:
     The ``ORDER BY product_count DESC`` in the reference is
     presentational (materialized-table order is not preserved by
     parquet, SURVEY §2.9/O1) — queries re-sort at read time.
+    ``product_count`` is the size of the category's ``collect_set``
+    (NULLs skipped, as ``COUNT(DISTINCT)`` does), as in
+    :func:`mart_price_by_category`: ``countDistinct`` would add a
+    (category, product) aggregate level behind a second exchange. The
+    set is bounded by the distinct products per category, which grows
+    with the catalog, not with the price rows.
     """
     return (
         fact_prices.filter(F.col("category").isNotNull())
         .groupBy("category")
         .agg(
-            F.countDistinct("product_id").alias("product_count"),
+            F.size(F.collect_set("product_id")).cast("long").alias(
+                "product_count"
+            ),
             duck_round(avg_dec("regular_price"), 2).alias("avg_regular_price"),
             duck_round(avg_dec("promo_price"), 2).alias("avg_promo_price"),
         )

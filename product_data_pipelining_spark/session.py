@@ -41,6 +41,20 @@ that role. Every knob below is chosen for the 100 TB target:
   default ``conf/``) is swapped for an empty engine-owned one, and one
   holding a real config (``spark-defaults.conf``) is kept and the JVM
   starts without an archive.
+- Every parquet table the engine writes is zstd-compressed (parquet-mr's
+  default level 3), set once here, so every writer inherits it: the
+  runners' tables, ``io``'s writers, the upsert targets, the streaming
+  sinks and the generator. Spark's default snappy left the six model
+  tables 1.08x the bytes of the raw feed they are built from; zstd
+  makes it 0.76x with no CPU change that perfbench can resolve (seed
+  42, per table, snappy -> zstd: ``fact_prices`` 1,410,536 ->
+  1,022,155 bytes, ``dim_products`` 119,392 -> 45,366,
+  ``mart_price_by_category`` 131,127 -> 94,148; the other three are
+  under 5 KB each). Level 1 gave 0.787x and level 19 0.699x at much
+  more CPU. Readers need no setting: the codec is
+  recorded per column chunk, so snappy tables written before (or by
+  DuckDB, as perfbench seeds its snapshots) and tables that mix both
+  codecs read as before.
 """
 
 from __future__ import annotations
@@ -171,6 +185,8 @@ def get_spark(
         # --- parquet scan behavior ---
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        # --- parquet write codec (module docstring): zstd at level 3 ---
+        .config("spark.sql.parquet.compression.codec", "zstd")
         # 128 MB split targets keep partitions memory-safe at any SF.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # ANSI off: the reference (DuckDB via dbt) uses null-on-overflow /

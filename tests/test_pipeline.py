@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from product_data_pipelining_spark.checks.schema_checks import (
@@ -349,6 +351,112 @@ def test_incremental_run_converges_to_full_refresh(spark, tmp_path):
         assert _rows(incr[name]) == _rows(full[name]), (
             f"{name}: incremental != full refresh"
         )
+
+
+def _codecs(table) -> dict[str, set[str]]:
+    """Codecs of the column chunks of each parquet file under ``table``,
+    keyed by the file's path relative to it."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for f in sorted(Path(table).rglob("*.parquet")):
+        meta = pq.ParquetFile(f).metadata
+        out[str(f.relative_to(table))] = {
+            meta.row_group(i).column(j).compression
+            for i in range(meta.num_row_groups)
+            for j in range(meta.num_columns)
+        }
+    assert out, f"no parquet file under {table}"
+    return out
+
+
+def _assert_zstd(table) -> None:
+    codecs = _codecs(table)
+    assert all(c == {"ZSTD"} for c in codecs.values()), (table, codecs)
+
+
+@pytest.mark.parametrize("kind", ["full", "incremental"])
+def test_refresh_writes_only_zstd(spark, tmp_path, kind):
+    """Every parquet file a refresh leaves in its output directory (the
+    six models, and on incremental the three snapshots) holds zstd
+    column chunks only: the session's codec reaches every writer."""
+    from product_data_pipelining_spark.models import runner
+
+    raw_dir = ensure_fixtures()
+    out = tmp_path / kind
+    cutoff = "2026-02-01 13:00:00"
+    want = set(runner.MATERIALIZED)
+    if kind == "full":
+        run_pipeline(spark, raw_dir, str(out))
+    else:
+        runner.seed_snapshots(spark, raw_dir, str(out), until=cutoff)
+        runner.run_incremental(spark, raw_dir, str(out), since=cutoff)
+        want |= {f"snap_{name}" for name in runner.RAW_TABLES}
+    assert {p.name for p in out.iterdir()} == want
+    _assert_zstd(out)
+
+
+def test_duckdb_seeded_snapshots_converge_and_turn_zstd(
+    spark, tmp_path, monkeypatch
+):
+    """Snapshots that DuckDB wrote (snappy, by perfbench's own seeding)
+    merge like Spark-written ones: the incremental run equals a full
+    refresh, and each snapshot it rewrites is zstd."""
+    from types import SimpleNamespace
+
+    from product_data_pipelining_spark.models.runner import (
+        MATERIALIZED,
+        RAW_TABLES,
+        run_incremental,
+    )
+
+    monkeypatch.syspath_prepend(str(Path(__file__).parents[1] / "perfbench"))
+    import refresh
+
+    raw_dir = ensure_fixtures()
+    out = tmp_path / "incr"
+    cutoff = "2026-02-01 13:00:00"
+    refresh.seed_snapshots(SimpleNamespace(raw_dir=Path(raw_dir), since=cutoff), out)
+    for name in RAW_TABLES:
+        assert set().union(*_codecs(out / f"snap_{name}").values()) == {"SNAPPY"}
+    incr = run_incremental(spark, raw_dir, str(out), since=cutoff)
+    full = build_models(load_raw(spark, raw_dir))
+    for name in MATERIALIZED:
+        assert _rows(incr[name]) == _rows(full[name]), (
+            f"{name}: incremental != full refresh"
+        )
+    for name in RAW_TABLES:
+        _assert_zstd(out / f"snap_{name}")
+
+
+def test_every_writer_inherits_the_zstd_codec(spark, tmp_path):
+    """The io writers and both parquet upsert targets write zstd with no
+    per-call option; compaction turns a snappy table into zstd."""
+    from product_data_pipelining_spark.io import (
+        compact_table,
+        write_swapped,
+        write_table,
+    )
+    from product_data_pipelining_spark.operators.upsert import (
+        BucketedParquetUpsertTarget,
+        ParquetUpsertTarget,
+    )
+
+    df = spark.createDataFrame(
+        [(k, f"v{k}", 1) for k in range(20)], "k long, v string, ver long"
+    )
+    write_table(df, str(tmp_path / "write_table"), partition_by=("ver",))
+    write_swapped(df, str(tmp_path / "write_swapped"))
+    df.write.option("compression", "snappy").parquet(str(tmp_path / "compact_table"))
+    assert set().union(*_codecs(tmp_path / "compact_table").values()) == {"SNAPPY"}
+    compact_table(spark, str(tmp_path / "compact_table"))
+    ParquetUpsertTarget(spark, str(tmp_path / "parquet_target")).merge(df, ["k"], "ver")
+    BucketedParquetUpsertTarget(spark, str(tmp_path / "bucketed_target"), 4).merge(
+        df, ["k"], "ver"
+    )
+    for name in ("write_table", "write_swapped", "compact_table",
+                 "parquet_target", "bucketed_target"):
+        _assert_zstd(tmp_path / name)
 
 
 def test_format_roundtrip_json_csv_orc(spark, sf_dir, tmp_path):

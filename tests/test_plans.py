@@ -140,13 +140,10 @@ def written_fact(spark, tmp_path_factory):
     return m["fact_prices"], m["dim_locations"]
 
 
-def test_price_by_category_aggregates_at_the_output_grain(written_fact):
-    """m09's distinct product count must not make Spark pre-aggregate,
-    exact-percentile buffers included, per (category, date, product):
-    one aggregate per output group, behind one exchange."""
-    from product_data_pipelining_spark.models import marts
-
-    nodes = _final_plan_nodes(marts.mart_price_by_category(written_fact[0]))
+def _assert_output_grain(df) -> None:
+    """No aggregate of ``df``'s final plan is keyed on the product, and
+    one exchange feeds them."""
+    nodes = _final_plan_nodes(df)
     aggs = [n for n in nodes if n.getClass().getSimpleName().endswith("AggregateExec")]
     assert aggs
     for n in aggs:
@@ -154,6 +151,24 @@ def test_price_by_category_aggregates_at_the_output_grain(written_fact):
         assert "product_id#" not in keys, f"aggregate keyed on product: {keys}"
     exchanges = [n for n in nodes if n.getClass().getSimpleName() == "ShuffleExchangeExec"]
     assert len(exchanges) == 1, [n.toString() for n in exchanges]
+
+
+def test_price_by_category_aggregates_at_the_output_grain(written_fact):
+    """m09's distinct product count must not make Spark pre-aggregate,
+    exact-percentile buffers included, per (category, date, product):
+    one aggregate per output group, behind one exchange."""
+    from product_data_pipelining_spark.models import marts
+
+    _assert_output_grain(marts.mart_price_by_category(written_fact[0]))
+
+
+def test_category_distribution_aggregates_at_the_output_grain(written_fact):
+    """m07's distinct product count must not add a (category, product)
+    aggregate level behind a second exchange: one aggregate per
+    category, behind one exchange."""
+    from product_data_pipelining_spark.models import marts
+
+    _assert_output_grain(marts.mart_category_distribution(written_fact[0]))
 
 
 def test_location_sales_counts_distinct_products_without_expand(written_fact):
