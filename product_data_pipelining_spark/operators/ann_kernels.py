@@ -1,9 +1,9 @@
 """Numpy kernels of the ANN family: grid cosine, nearest cells, top-k rows.
 
 Every pandas UDF of the embedding queries (``similarity``'s sim01, sim02x,
-the IVF cell assignment behind sim05/sim07-sim11, and ``dedup``'s dd13)
-scores on these three functions, so the oracle-parity arithmetic exists
-once.
+the IVF cell assignment behind sim04, sim05 and sim07-sim11, the per-cell
+kernels of sim04 and sim07-sim11, and ``dedup``'s dd13) scores on these
+three functions, so the oracle-parity arithmetic exists once.
 
 Workers get this module BY VALUE. When the driver runs from another cwd,
 the repo is not on the workers' ``sys.path``, so a UDF that referenced a

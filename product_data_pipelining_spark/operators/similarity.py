@@ -5,10 +5,11 @@ bucketed variant is the scale path (candidates only meet inside a
 bucket, so the join fans out by bucket occupancy instead of corpus
 size). The oracled SQL-shaped queries are JVM-side higher-order
 functions (``transform`` / ``zip_with`` / ``aggregate``); the GEMM
-queries (sim01, sim02x, the IVF cell assignment and the per-cell
-kernels of sim05/sim07-sim11, and dedup's dd13) run their pandas UDFs
-on the numpy kernels of ``ann_kernels`` — the grid cosine, the
-nearest-cell cut and the per-row top-k exist there once.
+queries (sim01, sim02x, the IVF cell assignment of sim04, sim05,
+sim07-sim11 and dedup's dd13, and their per-cell kernels) run their
+pandas UDFs on the numpy kernels of ``ann_kernels`` — the grid cosine,
+the nearest-cell cut and the per-row top-k exist there once. sim04 and
+sim07-sim11 share one per-cell probe stage, ``_cell_probe_stage``.
 
 Determinism for the DuckDB oracle: both engines cast float32 elements
 to double *before* multiplying and sum left-to-right, and similarities
@@ -674,14 +675,15 @@ def sim04_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the O(N^2/k) a fixed k degrades to) so both engines agree exactly
     (the oracle derives the same k from COUNT(*)); production would
     k-means them (``sim05_kmeans_assign`` is that trainer — swap its
-    refined codebook in here), which only changes how ``cents`` is
-    produced. Every vector is assigned to its nearest
-    centroid via a map-side broadcast fan-out reduced by a
-    partial-combinable max-of-struct aggregate (never a window over the
-    N x cells candidate set); a query probes its {NPROBE} nearest
-    cells. The candidate join is an equi-join on the cell id — only
-    the bounded probe set replicates, and no crossproduct ever forms.
-    At 100 TB the cell assignment is precomputed and written
+    refined codebook in here), which only changes how the codebook is
+    produced. Assignment is one corpus-scan GEMM against the broadcast
+    codebook (``_gemm_cell_ranked``): every vector gets its nearest
+    cell and each query its {NPROBE} nearest, as narrow (vec_id, cell,
+    crank) rows. Scoring is sim09's per-cell stage (``_cell_knn``):
+    each probed cell cogroups its probing queries with its members,
+    one ``grid_cosine`` GEMM scores them, and only each query's local
+    top-k leaves the cell; no crossproduct or pair-shaped row set ever
+    forms. At 100 TB the cell assignment is precomputed and written
     partitioned-by-cell so probes prune partitions at the scan.
 
     Measured quality of the tradeoff (pinned by
@@ -691,92 +693,14 @@ def sim04_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     that are emitted carry the exact cosine. Raise NPROBE to trade time
     for recall.
     """
-    v = _with_norm(spark, sf_dir)
-    cents = v.filter(centroid_filter(spark, sf_dir)).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    asg_sim = duck_round(
-        cosine(
-            F.col("embedding"),
-            F.col("c_emb"),
-            F.col("nrm"),
-            F.col("c_nrm"),
-        ),
-        6,
-    )
-    # Corpus assignment as a partial-combinable max-of-struct (a19's
-    # pattern), NOT a row_number window: the N x |cells| candidate set
-    # collapses map-side to one (vec_id, cell) row per vector, so the
-    # only corpus-sized shuffle moves N narrow rows. The window form
-    # shuffled and sorted N x |cells| rows WITH their embedding arrays —
-    # the dominant cost of the 63 s sf5 measurement. Tiebreak parity
-    # with the oracle's `ORDER BY sim DESC, cent_id ASC`: the struct
-    # max compares sim first, then -cent_id, so the smallest cent_id
-    # wins equal sims.
-    narrow = v.select("vec_id", "embedding", "nrm").crossJoin(
-        F.broadcast(cents)
-    ).select("vec_id", "cent_id", asg_sim.alias("asg_sim"))
-    cell_of = (
-        narrow.groupBy("vec_id")
-        .agg(F.max(F.struct("asg_sim", (-F.col("cent_id")).alias("nc"))).alias("m"))
-        .select("vec_id", (-F.col("m.nc")).alias("cell"))
-    )
-    cells = v.join(cell_of, "vec_id").select("vec_id", "cell", "embedding", "nrm")
-    # probe ranking runs on the QUERY subset only (|corpus|/QUERY_STRIDE
-    # rows x |cells| narrow candidates through the top-NPROBE window)
-    queries = v.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-    q_narrow = queries.select("vec_id", "embedding", "nrm").crossJoin(
-        F.broadcast(cents)
-    ).select("vec_id", "cent_id", asg_sim.alias("asg_sim"))
-    wc = Window.partitionBy("vec_id").orderBy(
-        F.desc("asg_sim"), F.asc("cent_id")
-    )
-    probes = (
-        q_narrow.withColumn("crank", F.row_number().over(wc))
-        .filter(F.col("crank") <= NPROBE)
-        .join(
-            queries.select(
-                F.col("vec_id"),
-                F.col("embedding").alias("q_emb"),
-                F.col("nrm").alias("q_nrm"),
-            ),
-            "vec_id",
-        )
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("cent_id").alias("cell"),
-            "q_emb",
-            "q_nrm",
-        )
-    )
-    scored = (
-        cells.join(
-            F.broadcast(probes),
-            (cells.cell == probes.cell)
-            & (cells.vec_id != probes.query_id),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cells.cell.alias("cell"),
-            duck_round(
-                cosine(
-                    F.col("q_emb"), F.col("embedding"),
-                    F.col("q_nrm"), F.col("nrm"),
-                ),
-                4,
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cell", "cosine_sim", "rank")
+    emb = load_table(spark, sf_dir, "embeddings")
+    return _cell_knn(
+        _ranked_cells(spark, sf_dir, emb, NPROBE, "sim04"),
+        [emb.select("vec_id", "embedding")],
+        F.col("vec_id") % QUERY_STRIDE == 0,
+    ).select(
+        F.col("vec_id").alias("query_id"),
+        "neighbor_id", "cell", "cosine_sim", "rank",
     )
 
 
@@ -894,9 +818,10 @@ def sim09_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge list (vec_id, neighbor_id, cosine_sim, rank).
 
     Scale shape: the corpus-adaptive quantizer (k = ceil(sqrt(N))
-    cells, broadcast codebook — sim04's exact machinery) keeps the
-    directed pair set at KNN_NPROBE * sum(occupancy^2) ~ O(N^1.5),
-    never all-pairs; each SOURCE probes its {KNN_NPROBE} nearest cells
+    cells, broadcast codebook; sim04 shares it and this per-cell
+    stage, ``_cell_knn``) keeps the directed pair set at
+    KNN_NPROBE * sum(occupancy^2) ~ O(N^1.5), never all-pairs; each
+    SOURCE probes its {KNN_NPROBE} nearest cells
     (single-cell edges missed the exact rank-1 neighbor for 60% of
     queries at sf0.01 — cell-boundary loss, sim04's recall bound);
     the ``KNN_MAX_CELL`` occupancy gate (dd04's max_bucket backstop)
@@ -916,28 +841,36 @@ def sim09_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell, making each cell's GEMM-able block a partition-local read.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    ranked = swap_live_persisted(
-        (id(spark.sparkContext), "sim09_ranked"),
-        _gemm_cell_ranked(
-            emb, _seed_centroids(spark, sf_dir), KNN_NPROBE, "sim09"
-        ),
-    )  # consumed by cells AND probes below; lifecycle-tracked (r7 ADVICE)
+    ranked = _ranked_cells(spark, sf_dir, emb, KNN_NPROBE, "sim09")
     v = emb.select("vec_id", "embedding")
-    cells = (
-        ranked.filter(F.col("crank") == 1).select("vec_id", "cell").join(v, "vec_id")
-    )
-    probes = ranked.select("vec_id", "cell").join(v, "vec_id")
     ok = (
-        cells.groupBy("cell")
+        ranked.filter(F.col("crank") == 1)
+        .select("vec_id", "cell")
+        .join(v, "vec_id")
+        .groupBy("cell")
         .count()
         .filter(F.col("count") <= KNN_MAX_CELL)
         .select("cell")
     )
+    return _cell_knn(ranked, [v, ok])
+
+
+def _cell_knn(
+    ranked: DataFrame, payload: list, query: Column | None = None
+) -> DataFrame:
+    """(vec_id, neighbor_id, cell, cosine_sim, rank): each probe's
+    ``TOP_K`` nearest members over its probed cells (sim04, sim09).
+
+    ``_cell_probe_stage`` with a ``grid_cosine`` kernel that emits each
+    probe's LOCAL top-k per cell (1e-4 grid, sim desc, id asc, self
+    dropped before the cut); the window merges <= probes x nprobe x k
+    narrow rows into the global top-k. ``payload`` carries the vectors
+    as ``embedding``.
+    """
     top_k = TOP_K
 
     def pair_topk(pa, pb):
-        # cogrouped per-cell GEMM: pa = probes of this cell, pb = its
-        # members; emits each probe's local top-k (sim desc, id asc)
+        # one cell: pa = its probes, pb = its members
         import numpy as np
         import pandas as pd
 
@@ -962,26 +895,9 @@ def sim09_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    # rename EVERY column on the cells side: both cogroup inputs derive
-    # from the same `ranked`/`v` frames and bare shared names resolve
-    # ambiguously (round-5 sim07 lesson)
-    cells_r = cells.join(ok, "cell").select(
-        F.col("vec_id").alias("b_vec_id"),
-        F.col("cell").alias("b_cell"),
-        F.col("embedding").alias("b_embedding"),
-    )
-    # explicit partition count: Python-stage cost is per-KEY, and AQE
-    # would coalesce the few-MB exchange to one worker (cg01's lesson)
-    par = spark.sparkContext.defaultParallelism
-    scored = (
-        probes.join(ok, "cell")
-        .repartition(par, "cell")
-        .groupBy("cell")
-        .cogroup(cells_r.repartition(par, "b_cell").groupBy("b_cell"))
-        .applyInPandas(
-            lambda left, right: pair_topk(left, right),
-            "vec_id long, neighbor_id long, cell long, cosine_sim double",
-        )
+    scored = _cell_probe_stage(
+        ranked, payload, pair_topk,
+        "vec_id long, neighbor_id long, cell long, cosine_sim double", query,
     )
     w = Window.partitionBy("vec_id").orderBy(
         F.desc("cosine_sim"), F.asc("neighbor_id")
@@ -1240,9 +1156,8 @@ def sim06_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the codebook ({PQ_M} x {PQ_K} subvectors) broadcasts;
     encoding is a map-side fan-out collapsed by a partial-combinable
-    min-of-struct aggregate (sim04's assignment pattern — the only
-    corpus-sized shuffle moves N x {PQ_M} narrow (vec_id, m, code)
-    rows, never embeddings). The LUT (queries x {PQ_M} x {PQ_K} rows)
+    min-of-struct aggregate (the only corpus-sized shuffle moves
+    N x {PQ_M} narrow (vec_id, m, code) rows, never embeddings). The LUT (queries x {PQ_M} x {PQ_K} rows)
     broadcasts; ADC scoring is a broadcast equi-join on (m, code) plus
     one partial-aggregated SUM per (query, candidate). Exhaustive over
     candidates by design (IndexPQ); compose with sim04's cells for
@@ -1552,12 +1467,13 @@ def _gemm_cell_ranked(
 ) -> DataFrame:
     """(vec_id, cell, crank<=nprobe) of ``rows`` via one scan GEMM kernel.
 
-    The IVF assignment of sim05/sim07-sim11 and dd13. ``cents`` is the
-    codebook as (cell id, vector) pairs sorted by id (k = ceil(sqrt(N))
-    seeds, or sim05's trained means; never corpus-proportional); it
-    broadcasts once under ``tag``; each Arrow batch of ``rows``
-    (vec_id, embedding) runs ONE ``ann_kernels.nearest_cells`` GEMM
-    against it and emits only narrow (vec_id, cell, crank) rows — the
+    The IVF assignment of sim04, sim05, sim07-sim11 and dd13.
+    ``cents`` is the codebook as (cell id, vector) pairs sorted by id
+    (k = ceil(sqrt(N)) seeds, or sim05's trained means; never
+    corpus-proportional); it broadcasts once under ``tag``; each Arrow
+    batch of ``rows`` (vec_id, embedding) runs ONE
+    ``ann_kernels.nearest_cells`` GEMM against it and emits only narrow
+    (vec_id, cell, crank) rows — the
     |rows| x |centroids| similarity matrix never exists outside a task.
     Ranking is the SQL oracle's ``ROUND(cosine, 6) DESC, cent_id ASC``
     row_number. The JVM HOF crossJoin this replaces evaluated
@@ -1593,6 +1509,68 @@ def _gemm_cell_ranked(
 
     return rows.select("vec_id", "embedding").mapInPandas(
         assign, "vec_id long, cell long, crank int"
+    )
+
+
+def _ranked_cells(
+    spark: SparkSession, sf_dir: str, emb: DataFrame, nprobe: int, tag: str
+) -> DataFrame:
+    """``_gemm_cell_ranked`` of the corpus ``emb`` against the seed
+    codebook, persisted under ``tag``: one live copy per context, and
+    read twice (members and probes) by ``_cell_probe_stage``."""
+    return swap_live_persisted(
+        (id(spark.sparkContext), f"{tag}_ranked"),
+        _gemm_cell_ranked(
+            emb, _seed_centroids(spark, sf_dir), nprobe, f"{tag}cent"
+        ),
+    )
+
+
+def _cell_probe_stage(
+    ranked: DataFrame,
+    payload: list,
+    kernel,
+    schema: str,
+    query: Column | None = None,
+) -> DataFrame:
+    """Cogroup each IVF cell's probes with its members and run ``kernel``.
+
+    The per-cell stage of every IVF query (sim04, sim07-sim11).
+    ``ranked`` is a ``_ranked_cells`` frame: its crank-1 rows are the
+    cell members, and its rows matching ``query`` (every row when None)
+    are the probes, one per probed cell. Both sides join each
+    ``payload`` frame in turn on ``vec_id``, or on ``cell`` for a frame
+    of cells alone, which then gates both sides (sim09's occupancy
+    cut). Every member column is renamed ``b_<name>``: both sides share
+    lineage, and bare shared names resolve ambiguously in the cogroup.
+    ``kernel(probes, members)`` gets one cell's pandas frames and
+    returns rows of ``schema``.
+    """
+
+    def joined(side: DataFrame) -> DataFrame:
+        for p in payload:
+            side = side.join(p, "vec_id" if "vec_id" in p.columns else "cell")
+        return side
+
+    members = joined(
+        ranked.filter(F.col("crank") == 1).select("vec_id", "cell")
+    )
+    members = members.select(
+        *[F.col(c).alias(f"b_{c}") for c in members.columns]
+    )
+    probes = joined(
+        (ranked if query is None else ranked.filter(query)).select(
+            "vec_id", "cell"
+        )
+    )
+    # explicit partition count: Python-stage cost is per-KEY, and AQE
+    # would coalesce the few-MB exchange to one worker (cg01's lesson)
+    par = ranked.sparkSession.sparkContext.defaultParallelism
+    return (
+        probes.repartition(par, "cell")
+        .groupBy("cell")
+        .cogroup(members.repartition(par, "b_cell").groupBy("b_cell"))
+        .applyInPandas(kernel, schema)
     )
 
 
@@ -1705,9 +1683,9 @@ def _ivfpq_scored(
     2. ``_gemm_pq_codes`` encodes PQ codes + query LUTs in one
        corpus-scan with a bit-exact integer-grid replay of the
        sequential L2 fold.
-    3. A cogrouped per-cell ADC kernel: members' code matrix gathers
-       against each probing query's LUT (pure int64 sums — exact),
-       and each (query, cell) emits only its LOCAL top
+    3. A per-cell ADC kernel (``_cell_probe_stage``): members' code
+       matrix gathers against each probing query's LUT (pure int64
+       sums — exact), and each (query, cell) emits only its LOCAL top
        ``per_query_cap`` rows by (s6 ASC, neighbor_id ASC), so the
        global window merges |queries| x nprobe x cap narrow rows, never
        the full candidate set. Correct because the global top-cap is
@@ -1726,47 +1704,14 @@ def _ivfpq_scored(
     Spark's per-cell GEMM beats the single-process SQL twin by ~10x
     once the corpus outgrows one box's interpreter throughput.
     """
-    ranked = swap_live_persisted(
-        (id(spark.sparkContext), f"sim07_ranked_{nprobe}"),
-        _gemm_cell_ranked(
-            load_table(spark, sf_dir, "embeddings"),
-            _seed_centroids(spark, sf_dir),
-            nprobe,
-            f"sim07cent{nprobe}",
-        ),
-    )
-    codes = _gemm_pq_codes(spark, sf_dir)
-    bounded_query = (F.col("vec_id") % QUERY_STRIDE == 0) & (
-        F.col("vec_id") < QUERY_STRIDE * PQ_MAX_QUERIES
-    )
-    # members: one cell per corpus vector (crank==1), codes attached
-    members = (
-        ranked.filter(F.col("crank") == 1)
-        .select("vec_id", "cell")
-        .join(codes.select("vec_id", "codes"), "vec_id")
-        .select(
-            F.col("vec_id").alias("b_vec_id"),
-            F.col("cell").alias("b_cell"),
-            F.col("codes").alias("b_codes"),
-        )  # rename every column: both cogroup sides share lineage
-    )
-    # probes: bounded query block, nprobe cells each, LUT attached
-    probes = (
-        ranked.filter(bounded_query)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-        .join(
-            codes.filter(bounded_query).select(
-                F.col("vec_id").alias("query_id"), "lut"
-            ),
-            "query_id",
-        )
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
+    ranked = _ranked_cells(spark, sf_dir, emb, nprobe, f"sim07_{nprobe}")
     pq_m, pq_k = PQ_M, PQ_K
     cap = per_query_cap
 
     def adc(pl, pr):
-        # cogrouped per-cell ADC: pl = probing queries (with LUTs),
-        # pr = the cell's members (with code rows)
+        # one cell: pl = its probing queries (with LUTs), pr = its
+        # members (with code rows)
         import numpy as np
         import pandas as pd
 
@@ -1786,7 +1731,7 @@ def _ivfpq_scored(
         marange = np.arange(pq_m)
         out = {"query_id": [], "neighbor_id": [], "s6": []}
         for qid, lut in zip(
-            pl["query_id"].to_numpy(dtype=np.int64), pl["lut"]
+            pl["vec_id"].to_numpy(dtype=np.int64), pl["lut"]
         ):
             lut2 = np.asarray(lut, dtype=np.int64).reshape(pq_m, pq_k)
             s6 = lut2[marange[None, :], Mb].sum(axis=1)  # exact BIGINT
@@ -1804,19 +1749,16 @@ def _ivfpq_scored(
         res["cell"] = cellv
         return res[["query_id", "neighbor_id", "cell", "s6"]]
 
-    # explicit partition count: Python-stage cost is per-KEY, and AQE
-    # would coalesce the few-MB exchange to one worker (cg01's lesson)
-    par = spark.sparkContext.defaultParallelism
-    scored = (
-        probes.repartition(par, "cell")
-        .groupBy("cell")
-        .cogroup(members.repartition(par, "b_cell").groupBy("b_cell"))
-        .applyInPandas(
-            lambda left, right: adc(left, right),
-            "query_id long, neighbor_id long, cell long, s6 long",
-        )
+    # probes: the bounded query block, nprobe cells each; both sides
+    # carry the codes frame (members score by codes, probes by LUT)
+    return _cell_probe_stage(
+        ranked,
+        [_gemm_pq_codes(spark, sf_dir)],
+        adc,
+        "query_id long, neighbor_id long, cell long, s6 long",
+        (F.col("vec_id") % QUERY_STRIDE == 0)
+        & (F.col("vec_id") < QUERY_STRIDE * PQ_MAX_QUERIES),
     )
-    return scored
 
 
 RERANK_R = 50  # ADC candidates kept per query for the exact refine pass
@@ -2008,43 +1950,20 @@ def sim10_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # must always release the prior one. Same reasoning for the
     # broadcast tag inside _gemm_cell_ranked (the codebook content is
     # nprobe-independent).
-    ranked = swap_live_persisted(
-        (id(spark.sparkContext), "sim10_ranked"),
-        _gemm_cell_ranked(emb, _seed_centroids(spark, sf_dir), nprobe, "sim10cent"),
-    )
-    v = emb.select("vec_id", "embedding")
-    # members: one cell per corpus vector; probes: the bounded query
-    # block, nprobe cells each. Rename every member column — both
-    # cogroup sides share lineage (round-5 sim07 lesson).
-    members = (
-        ranked.filter(F.col("crank") == 1)
-        .select("vec_id", "cell")
-        .join(v, "vec_id")
-        .select(
-            F.col("vec_id").alias("b_vec_id"),
-            F.col("cell").alias("b_cell"),
-            F.col("embedding").alias("b_embedding"),
-        )
-    )
-    probes = (
-        ranked.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-        .join(v.select(F.col("vec_id").alias("query_id"), "embedding"),
-              "query_id")
-    )
+    ranked = _ranked_cells(spark, sf_dir, emb, nprobe, "sim10")
     cand_c = MMR_C
 
     def cell_topc(pl, pr):
-        # cogrouped per-cell GEMM: pl = queries probing this cell,
-        # pr = the cell's members; emits each query's LOCAL top-C on
-        # the 1e-4 grid — grid values are independent of the matmul's
-        # batch shape and bit-equal to the brute mirror's
+        # one cell: pl = its probing queries, pr = its members; emits
+        # each query's LOCAL top-C on the 1e-4 grid — grid values are
+        # independent of the matmul's batch shape and bit-equal to the
+        # brute mirror's
         import numpy as np
         import pandas as pd
 
         if not len(pl) or not len(pr):
             return pd.DataFrame(columns=["query_id", "neighbor_id", "sim4"])
-        qid = pl["query_id"].to_numpy(dtype=np.int64)
+        qid = pl["vec_id"].to_numpy(dtype=np.int64)
         vid = pr["b_vec_id"].to_numpy(dtype=np.int64)
         s4 = grid_cosine(
             np.array(pl["embedding"].tolist(), dtype=np.float64),
@@ -2056,17 +1975,13 @@ def sim10_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"query_id": qid[ri], "neighbor_id": vid[ci], "sim4": s4[ri, ci]}
         )
 
-    # explicit partition count: Python-stage cost is per-KEY, and AQE
-    # would coalesce the few-MB exchange to one worker (cg01's lesson)
-    par = spark.sparkContext.defaultParallelism
-    pool = (
-        probes.repartition(par, "cell")
-        .groupBy("cell")
-        .cogroup(members.repartition(par, "b_cell").groupBy("b_cell"))
-        .applyInPandas(
-            lambda left, right: cell_topc(left, right),
-            "query_id long, neighbor_id long, sim4 long",
-        )
+    # probes: the bounded query block, nprobe cells each
+    pool = _cell_probe_stage(
+        ranked,
+        [emb.select("vec_id", "embedding")],
+        cell_topc,
+        "query_id long, neighbor_id long, sim4 long",
+        F.col("vec_id") % QUERY_STRIDE == 0,
     )
     # global top-C per query over the per-batch partials: same order as
     # the packed key (sim4 desc, neighbor_id asc) the kernel cuts on,
@@ -2153,9 +2068,9 @@ def sim10_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (documents.lang, joined on vec_id == doc_id) differs from the
 # query's: semantically-near, label-far examples are exactly what a
 # retrieval/classifier trainer wants as hard negatives. Runs on
-# sim04's IVF machinery (broadcast codebook, max-of-struct cell
-# assignment, probe-bounded candidate join), so the mining cost is the
-# ANN serving cost, not a quadratic sweep.
+# sim04's IVF machinery (broadcast-codebook GEMM assignment, per-cell
+# probe stage), so the mining cost is the ANN serving cost, not a
+# quadratic sweep.
 
 
 @register(
@@ -2237,40 +2152,12 @@ def sim11_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "lang"
     )
-    ranked = swap_live_persisted(
-        (id(spark.sparkContext), "sim11_ranked"),
-        _gemm_cell_ranked(emb, _seed_centroids(spark, sf_dir), NPROBE, "sim11cent"),
-    )
-    v = emb.select("vec_id", "embedding")
-    members = (
-        ranked.filter(F.col("crank") == 1)
-        .select("vec_id", "cell")
-        .join(v, "vec_id")
-        .join(lab, "vec_id")
-        .select(
-            F.col("vec_id").alias("b_vec_id"),
-            F.col("cell").alias("b_cell"),
-            F.col("embedding").alias("b_embedding"),
-            F.col("lang").alias("b_lang"),
-        )  # rename every column: both cogroup sides share lineage
-    )
-    probes = (
-        ranked.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-        .select("vec_id", "cell")
-        .join(v, "vec_id")
-        .join(lab, "vec_id")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "cell",
-            F.col("embedding").alias("q_emb"),
-            F.col("lang").alias("q_lang"),
-        )
-    )
+    ranked = _ranked_cells(spark, sf_dir, emb, NPROBE, "sim11")
     top_k = TOP_K
 
     def pair_topk(pa, pb):
-        # cogrouped per-cell GEMM: pa = probing queries of this cell,
-        # pb = its members; emits each query's local cross-label top-k
+        # one cell: pa = its probing queries, pb = its members; emits
+        # each query's local cross-label top-k
         import numpy as np
         import pandas as pd
 
@@ -2278,12 +2165,12 @@ def sim11_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cosine_sim"]
         if not len(pa) or not len(pb):
             return pd.DataFrame(columns=cols)
-        avid = pa["query_id"].to_numpy(dtype=np.int64)
-        alang = pa["q_lang"].to_numpy(dtype=object)
+        avid = pa["vec_id"].to_numpy(dtype=np.int64)
+        alang = pa["lang"].to_numpy(dtype=object)
         bvid = pb["b_vec_id"].to_numpy(dtype=np.int64)
         blang = pb["b_lang"].to_numpy(dtype=object)
         s4 = grid_cosine(
-            np.array(pa["q_emb"].tolist(), dtype=np.float64),
+            np.array(pa["embedding"].tolist(), dtype=np.float64),
             np.array(pb["b_embedding"].tolist(), dtype=np.float64),
             1e4,
         )
@@ -2300,18 +2187,13 @@ def sim11_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    # explicit partition count: Python-stage cost is per-KEY, and AQE
-    # would coalesce the few-MB exchange to one worker (cg01's lesson)
-    par = spark.sparkContext.defaultParallelism
-    scored = (
-        probes.repartition(par, "cell")
-        .groupBy("cell")
-        .cogroup(members.repartition(par, "b_cell").groupBy("b_cell"))
-        .applyInPandas(
-            lambda left, right: pair_topk(left, right),
-            "query_id long, q_lang string, neighbor_id long, "
-            "neg_lang string, cell long, cosine_sim double",
-        )
+    scored = _cell_probe_stage(
+        ranked,
+        [emb.select("vec_id", "embedding"), lab],
+        pair_topk,
+        "query_id long, q_lang string, neighbor_id long, "
+        "neg_lang string, cell long, cosine_sim double",
+        F.col("vec_id") % QUERY_STRIDE == 0,
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine_sim"), F.asc("neighbor_id")

@@ -97,8 +97,8 @@ HEADLINE = [
     "sim10_mmr_diverse_topk",
     # r8 additions (r7 verdict ask #6 — both were oracled at 3 SFs but
     # absent from the at-scale artifacts): hard-negative mining rides
-    # sim04's IVF machinery with a label filter that prunes before the
-    # per-query top-k window; the bigram-LM quality score is a
+    # the IVF family's GEMM assignment and per-cell probe stage, with a
+    # label filter inside the cell kernel; the bigram-LM quality score is a
     # vocab^2-bounded broadcast model over one corpus scan
     "sim11_hard_negatives",
     "tx16_bigram_logprob",

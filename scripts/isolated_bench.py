@@ -39,7 +39,8 @@ def main() -> None:
     ap.add_argument("--out", default=None,
                     help="write the merged artifact here (default: stdout)")
     ap.add_argument("--queries", default=None,
-                    help="comma-separated subset (default: all headliners)")
+                    help="comma-separated registered queries "
+                         "(default: all headliners)")
     args = ap.parse_args()
 
     names = (

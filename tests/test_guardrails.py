@@ -42,15 +42,14 @@ BNLJ_ALLOWED = {
     "tpch_q17_small_quantity_revenue", # per-brand avg threshold (broadcast)
     "tpch_q22_idle_rich_customers",    # scalar avg-balance subquery
     "pr04_winsorize",                  # broadcast global percentile bounds
-    "sim04_ann_ivf",                   # fixed centroid-set replication
-    "sim09_knn_graph",                 # fixed centroid-set replication (coarse quantizer)
     "tx13_unigram_logprob",            # one-row corpus-total replication
     "tx14_dsir_importance",            # two one-row LM-total replications
     "chk05_distribution_drift",        # one-row snapshot-total replication
     "tx15_token_pmi",                  # one-row corpus-total replication
     "a21_theta_audience_overlap",      # |event_types|^2 sketch-table self-pair
-    # sim05 left this list in r10: its crossJoin assignment became the
-    # broadcast-codebook GEMM kernel (see ARROW_ALLOWED)
+    # sim05 (r10) and sim04 left this list: their crossJoin assignments
+    # became the broadcast-codebook GEMM kernel (see ARROW_ALLOWED);
+    # sim09's plan has had no BroadcastNestedLoopJoin since that kernel
     "chk02_outlier_zscore",            # 3-row broadcast moment re-scan
     # r13: sim06's ADC scoring joins the corpus codes against the
     # PQ_MAX_QUERIES-row wide query LUT (bounded by construction:
@@ -90,6 +89,9 @@ ARROW_ALLOWED = {
     # kernel at nprobe=1 — codebook-bounded collect, mapInPandas BLAS,
     # narrow (vec_id, cluster_id) output
     "sim05_kmeans_assign",
+    # sim04 leaves its two HOF crossJoins for the same GEMM assignment
+    # and the IVF family's shared cogrouped per-cell probe stage
+    "sim04_ann_ivf",
     # r13: the shared tokenize+vocab-count featurization is ONE
     # mapInArrow batch pass (pyarrow.compute split + is_in + cumsum
     # segment counts) — measured 1.4x over the JVM expression chain on
@@ -146,9 +148,8 @@ FORCED_BROADCAST_ALLOWED = {
     "chk05_distribution_drift",    # fixed histogram-bucket snapshot frames
     "pr04_winsorize",              # global percentile-bounds frame
     "sim02_ann_lsh_bucketed",      # capped query block (MAX_QUERY_BLOCK)
-    "sim04_ann_ivf",               # corpus-adaptive k=ceil(sqrt(N)) centroids
-    # sim05 left this list in r10: the codebook now ships as a Python
-    # broadcast into the GEMM kernel — no BroadcastExchange in the plan
+    # sim05 (r10) and sim04 left this list: the codebook now ships as a
+    # Python broadcast into the GEMM kernel — no forced BroadcastExchange
     "sim06_pq_adc",                # 256-entry-per-subspace PQ codebook
     "sim08_ann_ivfpq_rerank",      # capped rerank candidate set (queries x
                                    # RERANK_R) broadcast into the exact pass

@@ -913,6 +913,23 @@ def test_ivf_recall_vs_bruteforce_ground_truth(spark):
         assert ivf[pair] == exact[pair], (pair, ivf[pair], exact[pair])
 
 
+# The IVF queries score on the numpy GEMM kernels: assignment in
+# _gemm_cell_ranked, candidates in the shared per-cell probe stage.
+# sim08 is left out on purpose: its exact re-rank pass scores only the
+# RERANK_R candidates per query with the JVM cosine, and its candidate
+# stage is sim07's.
+@pytest.mark.parametrize("name", [
+    "sim04_ann_ivf", "sim07_ann_ivfpq", "sim09_knn_graph",
+    "sim10_mmr_diverse_topk", "sim11_hard_negatives",
+])
+def test_ivf_family_plans_no_interpreted_hof_cosine(name, spark, sf_dir):
+    """An ``aggregate(zip_with)`` cosine runs interpreted per element
+    and pair: sim04 took 32.7 s at a generated sf1 on it, against
+    3.9 s for sim09's GEMM path over the same cells."""
+    plan = physical_plan(QUERIES[name].fn(spark, sf_dir))
+    assert "zip_with(" not in plan, f"{name}: interpreted HOF cosine"
+
+
 def test_knn_graph_covers_queries_and_matches_exact_scores(spark):
     """sim09 builds edges for EVERY clustered vector (full self-kNN, not
     a query block); on the query-stride subset its rank-1 edge must hit
